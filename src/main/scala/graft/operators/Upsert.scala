@@ -63,27 +63,21 @@ object Upsert {
 
   /** Dynamic partition overwrite into a partitioned catalog table:
     * only partitions present in `df` are replaced; every other
-    * partition's files are untouched. Stages through a temp directory
-    * because the rewritten rows are read from the same table (Spark
-    * refuses an in-place overwrite of a path being scanned). The
-    * staging volume is the touched partitions only, never the table. */
+    * partition's files are untouched. `df` may read the table it
+    * overwrites (the merge and the retention rewrite both do), so no
+    * staging copy is made: under dynamic mode the job writes into
+    * `.spark-staging-<jobId>` and swaps partitions in only at job
+    * commit, after every read task finished, and Spark's "cannot
+    * overwrite a path being read" check guards static overwrite only.
+    * The writer option form of partitionOverwriteMode is only honored
+    * on path-based writes, not insertInto, hence the scoped session
+    * conf. */
   def overwritePartitionsInto(spark: SparkSession, df: DataFrame,
-      table: String): Unit = {
-    val staging = java.nio.file.Files
-      .createTempDirectory(s"graft_dynovr_$table").toString
-    df.write.mode("overwrite").parquet(staging)
-    // the writer option form of partitionOverwriteMode is only honored
-    // on path-based writes, not insertInto — set the session conf for
-    // the duration of the insert instead
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try spark.read.parquet(staging).write.mode("overwrite").insertInto(table)
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      table: String): Unit =
+    graft.Conf.withConf(spark, "spark.sql.sources.partitionOverwriteMode",
+      "dynamic") {
+      df.write.mode("overwrite").insertInto(table)
     }
-  }
 
   /** Gate query: upsert an update+insert batch derived from `orders`
     * onto `orders` itself; deterministic, oracle-expressible.

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.operators.Upsert
 import graft.sources.{AlphaVantage, AlphaVantageClient}
 import graft.store.Catalog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -18,6 +18,15 @@ import org.apache.spark.sql.types.DecimalType
   * the fetch. Rate limiting (O4) lives in the client. All fetching is
   * driver-side (5 req/min budget); everything after `parseBars` is
   * distributed.
+  *
+  * One pass per run: the fetched payloads are parsed once into a
+  * cached batch, and ONE bounded aggregate ([[profile]]) yields
+  * everything the driver needs from it — per-symbol record counts,
+  * the quality-gate counts and the touched trade dates. The merge then
+  * reads the same cached batch and overwrites the touched date
+  * partitions of `stock_data` in place, and the two log appends run
+  * concurrently. An hourly run of a few symbols is all fixed cost, so
+  * the job count is the latency.
   */
 class StockPipeline(
     spark: SparkSession,
@@ -48,52 +57,80 @@ class StockPipeline(
     out
   }
 
-  /** O5: preflight gates — fail fast before touching any table. */
+  /** O5: preflight gates — fail fast before touching any table. The
+    * catalog probe is a metadata lookup of the current database, not a
+    * table listing. */
   def preflight(apiKeyConfigured: Boolean): Seq[(String, Boolean)] = Seq(
     "api_key_configured" -> apiKeyConfigured,
     "spark_session_alive" -> !spark.sparkContext.isStopped,
-    "catalog_reachable" -> scala.util.Try(spark.catalog.listTables()).isSuccess)
+    "catalog_reachable" -> scala.util.Try(
+      spark.catalog.databaseExists(spark.catalog.currentDatabase)).getOrElse(false))
 
-  import StockPipeline.SymbolResult
+  import StockPipeline.{Profile, SymbolResult}
 
   /** Fetch + parse every symbol (driver-side fetch, distributed parse);
-    * per-symbol isolation. Returns (normalized bars, per-symbol result). */
-  def ingest(symbols: Seq[String]): (DataFrame, Seq[SymbolResult]) = {
+    * per-symbol isolation. Returns the parsed bars — CACHED, the
+    * caller unpersists them — the per-symbol results and the batch's
+    * [[profile]], which is the only pass over the bars before the merge
+    * reads them again from the cache. */
+  def ingest(symbols: Seq[String]): (DataFrame, Seq[SymbolResult], Profile) = {
     val cleaned = symbols.map(_.trim.toUpperCase).filter(_.nonEmpty) // P8
     val payloads = cleaned.map { s => s -> retry(retries)(fetch(s)) }
     val raw = payloads.collect { case (s, Some(p)) => (s, p) }
       .toDF("symbol", "payload")
-    val bars = AlphaVantage.parseBars(spark, raw)
-    val perSymbol = bars.groupBy("symbol").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val bars = AlphaVantage.parseBars(spark, raw).cache()
+    val prof =
+      try profile(bars)
+      catch { case e: Throwable => bars.unpersist(); throw e }
     val results = payloads.map { case (s, p) =>
       // a payload that yields zero rows (Error Message / Note / all rows
       // malformed) counts as a failed symbol, matching the reference's
       // skip-and-continue accounting
-      val n = perSymbol.getOrElse(s, 0L)
+      val n = prof.records.getOrElse(s, 0L)
       SymbolResult(s, p.isDefined && n > 0, n)
     }
-    (bars, results)
+    (bars, results, prof)
+  }
+
+  /** The batch's whole driver-side summary in ONE aggregate collect
+    * over GROUPING SETS ((symbol), (trade_date)): a row per symbol (its
+    * record count and quality-gate counts) plus a row per trade date,
+    * never symbols × dates, so the collect is bounded by the batch's
+    * symbols and calendar span, not its rows. The symbol rows partition
+    * the batch, so their sums are the batch totals. */
+  def profile(bars: DataFrame): Profile = {
+    def flagged(c: Column) = sum(when(c, 1L).otherwise(0L))
+    val rows = bars.withColumn("trade_date", to_date(col("timestamp")))
+      .groupingSets(Seq(Seq(col("symbol")), Seq(col("trade_date"))),
+        col("symbol"), col("trade_date"))
+      .agg(grouping(col("symbol")).as("by_date"),
+        count(lit(1)).as("n"),
+        flagged(col("symbol").isNull || col("timestamp").isNull)
+          .as("null_keys"),
+        flagged(col("open_price") < 0 || col("high_price") < 0
+          || col("low_price") < 0 || col("close_price") < 0
+          || col("volume") < 0).as("neg_values"),
+        flagged(col("high_price") < col("low_price")).as("inverted_range"))
+      .collect()
+    val (byDate, bySymbol) = rows.partition(_.getByte(2) == 1)
+    def total(i: Int) = bySymbol.map(_.getLong(i)).sum
+    Profile(
+      records = bySymbol.map(r => r.getString(0) -> r.getLong(3)).toMap,
+      quality = Seq(
+        "keys_complete" -> (total(4) == 0),
+        "values_non_negative" -> (total(5) == 0),
+        "high_gte_low" -> (total(6) == 0)),
+      dates = byDate.map(_.getDate(1)).toSeq)
   }
 
   /** Documented quality gate: completeness + value sanity + freshness. */
-  def qualityChecks(bars: DataFrame): Seq[(String, Boolean)] = {
-    val agg = bars.agg(
-      count(lit(1)).as("n"),
-      sum(when(col("symbol").isNull || col("timestamp").isNull, 1)
-        .otherwise(0)).as("null_keys"),
-      sum(when(col("open_price") < 0 || col("high_price") < 0
-        || col("low_price") < 0 || col("close_price") < 0
-        || col("volume") < 0, 1).otherwise(0)).as("neg_values"),
-      sum(when(col("high_price") < col("low_price"), 1).otherwise(0))
-        .as("inverted_range")).collect()(0)
-    Seq(
-      "keys_complete" -> (agg.getLong(1) == 0),
-      "values_non_negative" -> (agg.getLong(2) == 0),
-      "high_gte_low" -> (agg.getLong(3) == 0))
-  }
+  def qualityChecks(bars: DataFrame): Seq[(String, Boolean)] =
+    profile(bars).quality
 
   private def dec(c: String) = col(c).cast(DecimalType(15, 4)).as(c)
+
+  def upsertIntoStockData(bars: DataFrame): Unit =
+    upsertIntoStockData(bars, profile(bars).dates)
 
   /** K1 against the managed table: merge the batch into stock_data with
     * last-writer-wins, preserving first-insert created_at/time_zone.
@@ -101,22 +138,19 @@ class StockPipeline(
     * Partition-pruned (the 100 TB write path): `trade_date` =
     * to_date(timestamp) is a function of the merge key, so a batch row
     * can only conflict inside its own date partition. Only partitions
-    * whose dates appear in the batch are read for the merge, and only
-    * those are rewritten (dynamic partition overwrite); an hourly run
-    * touches a handful of dates regardless of table size. The collected
-    * date list is bounded by the batch's calendar span, not its rows. */
-  def upsertIntoStockData(bars: DataFrame): Unit = {
-    val ts = now()
-    val batch = bars.select(
-      col("symbol"), col("timestamp"),
-      dec("open_price"), dec("high_price"), dec("low_price"),
-      dec("close_price"), col("volume"),
-      col("last_refreshed"), col("time_zone"),
-      lit(ts).as("created_at"),
-      to_date(col("timestamp")).as("trade_date"))
-    val dates = batch.select("trade_date").distinct()
-      .collect().map(_.getDate(0)).toSeq
+    * whose dates appear in the batch (`dates`, from [[profile]]) are
+    * read for the merge, and only those are rewritten, in place, by
+    * dynamic partition overwrite; an hourly run touches a handful of
+    * dates regardless of table size. */
+  def upsertIntoStockData(bars: DataFrame, dates: Seq[java.sql.Date]): Unit =
     if (dates.nonEmpty) {
+      val batch = bars.select(
+        col("symbol"), col("timestamp"),
+        dec("open_price"), dec("high_price"), dec("low_price"),
+        dec("close_price"), col("volume"),
+        col("last_refreshed"), col("time_zone"),
+        lit(now()).as("created_at"),
+        to_date(col("timestamp")).as("trade_date"))
       val current = spark.table("stock_data")
         .filter(col("trade_date").isin(dates: _*))
       val merged = Upsert.upsert(current, batch,
@@ -124,10 +158,12 @@ class StockPipeline(
         preserve = Seq("time_zone", "created_at"))
       Upsert.overwritePartitionsInto(spark, merged, "stock_data")
     }
-  }
 
   /** K4: append a run row per task to pipeline_logs + per-symbol status
-    * to stock_metadata. */
+    * to stock_metadata. The two appends are independent, so the
+    * metadata one runs on a thread created here — a new thread inherits
+    * this one's Spark local properties (job group, description), a
+    * pooled one would not — and its failure is re-thrown. */
   def writeLogs(results: Seq[SymbolResult], quality: Seq[(String, Boolean)],
       durationSec: Double): Unit = {
     val ts = now()
@@ -145,14 +181,20 @@ class StockPipeline(
         }, 0L, ts))
       .toDF("dag_id", "task_id", "execution_date", "status", "duration",
         "error_message", "records_processed", "created_at")
-    logRows.write.mode("append").insertInto("pipeline_logs")
     val metaRows = results
       .map(r => (r.symbol, ts, r.success,
         if (r.success) null.asInstanceOf[String] else "fetch_or_parse_failed",
         r.records))
       .toDF("symbol", "last_updated", "last_fetch_success", "error_message",
         "total_records")
-    metaRows.write.mode("append").insertInto("stock_metadata")
+    var metaFailure: Throwable = null
+    val metaAppend = new Thread(() =>
+      try metaRows.write.mode("append").insertInto("stock_metadata")
+      catch { case e: Throwable => metaFailure = e })
+    metaAppend.start()
+    try logRows.write.mode("append").insertInto("pipeline_logs")
+    finally metaAppend.join()
+    if (metaFailure != null) throw metaFailure
   }
 
   /** The full run: returns the deterministic per-symbol summary. */
@@ -160,15 +202,14 @@ class StockPipeline(
     val t0 = System.nanoTime()
     require(preflight(apiKeyConfigured = true).forall(_._2), "preflight failed")
     Catalog.bootstrap(spark)                       // O1: DDL first
-    val (bars, results) = ingest(symbols)          // O3/O4
-    val cached = bars.cache()
+    val (bars, results, prof) = ingest(symbols)    // O3/O4, cached
     try {
-      val quality = qualityChecks(cached)
-      upsertIntoStockData(cached)                  // K1
-      writeLogs(results, quality, (System.nanoTime() - t0) / 1e9) // K4
-    } finally cached.unpersist()
-    results.toDF().orderBy("symbol")
-      .select(col("symbol"), col("success"), col("records"))
+      upsertIntoStockData(bars, prof.dates)        // K1
+      writeLogs(results, prof.quality, (System.nanoTime() - t0) / 1e9) // K4
+    } finally bars.unpersist()
+    // one row per symbol, already on the driver: sorted here, the
+    // summary is a local relation and collecting it starts no job
+    results.sortBy(_.symbol).toDF()
   }
 }
 
@@ -216,6 +257,12 @@ class Scheduler(
 object StockPipeline {
 
   case class SymbolResult(symbol: String, success: Boolean, records: Long)
+
+  /** What [[StockPipeline.profile]] derives from a parsed batch:
+    * record count per symbol, the quality gate's flags and the trade
+    * dates the batch touches. */
+  case class Profile(records: Map[String, Long],
+      quality: Seq[(String, Boolean)], dates: Seq[java.sql.Date])
 
   /** Offline fixture transport: symbol -> canned payload (FIXTURES.md). */
   val fixtureFetch: String => Option[String] = {

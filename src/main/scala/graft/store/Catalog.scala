@@ -141,8 +141,9 @@ object Catalog {
     * pruned at planning time), fully-expired partitions are dropped
     * as metadata + directory deletes with no row rewrite at all, and
     * only the single partition straddling the cutoff timestamp is
-    * rewritten via dynamic partition overwrite. The per-date stats
-    * collect is bounded by the retention horizon in days, not rows. */
+    * rewritten, in place, via dynamic partition overwrite. The per-date
+    * stats collect is bounded by the retention horizon in days, not
+    * rows. */
   def applyRetention(spark: SparkSession, now: java.sql.Timestamp,
       dataDays: Int = 365, logDays: Int = 30): Map[String, Long] = {
     def sweepPartitioned(table: String, days: Int): Long = {
@@ -182,11 +183,15 @@ object Catalog {
       val deleted = cnts.getLong(0) - cnts.getLong(1)
       if (deleted > 0) {
         // stage surviving rows before overwriting the table being read
-        // (never collects to the driver)
+        // (a static overwrite may not read its own path; never collects
+        // to the driver), and drop the copy once the eager insert is done
         val staging = java.nio.file.Files
-          .createTempDirectory(s"graft_retention_$table").toString
-        kept.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").insertInto(table)
+          .createTempDirectory(s"graft_retention_$table")
+        try {
+          kept.write.mode("overwrite").parquet(staging.toString)
+          spark.read.parquet(staging.toString).write.mode("overwrite")
+            .insertInto(table)
+        } finally org.apache.hadoop.fs.FileUtil.fullyDelete(staging.toFile)
       }
       deleted
     }

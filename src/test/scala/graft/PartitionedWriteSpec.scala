@@ -69,6 +69,56 @@ class PartitionedWriteSpec extends AnyFunSuite {
     assert(spark.table("stock_data").filter("symbol LIKE 'PART%'").count() == 0)
   }
 
+  test("retention rewrites a straddling partition in place, neighbours untouched") {
+    import spark.implicits._
+    import graft.store.Catalog
+    Catalog.bootstrap(spark)
+    def ts(t: String) = java.sql.Timestamp.valueOf(t)
+    val rows = Seq("2019-05-01 09:00:00", "2019-05-01 15:00:00",
+      "2019-05-02 10:00:00").map(t => ("STRAD", ts(t)))
+    rows.toDF("symbol", "timestamp").selectExpr("symbol", "timestamp",
+      "cast(1 as decimal(15,4)) open_price",
+      "cast(2 as decimal(15,4)) high_price",
+      "cast(1 as decimal(15,4)) low_price",
+      "cast(1 as decimal(15,4)) close_price",
+      "10L volume", "timestamp last_refreshed", "'UTC' time_zone",
+      "timestamp created_at", "cast(timestamp as date) trade_date")
+      .write.mode("append").insertInto("stock_data")
+    // an expired log row, so the non-partitioned sweep rewrites too
+    Seq(("retention_dag", "t", ts("2019-04-01 00:00:00"), "success", 0.0,
+      null.asInstanceOf[String], 0L, ts("2019-04-01 00:00:00")))
+      .toDF("dag_id", "task_id", "execution_date", "status", "duration",
+        "error_message", "records_processed", "created_at")
+      .write.mode("append").insertInto("pipeline_logs")
+    def fileState(d: String) = new java.io.File(
+      s"${Catalog.warehouse}/stock_data/trade_date=$d").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => (f.getName, f.length, f.lastModified)).toSet
+    def staged() = new java.io.File(System.getProperty("java.io.tmpdir"))
+      .listFiles().map(_.getName)
+      .filter(n => n.startsWith("graft_dynovr_") || n.startsWith("graft_retention_"))
+      .toSet
+    val neighbour = fileState("2019-05-02")
+    val stagedBefore = staged()
+    val total = spark.table("stock_data").count()
+    try {
+      // cutoff 2019-05-01 12:00: one row of the 05-01 partition expires
+      val deleted = Catalog.applyRetention(spark,
+        ts("2019-05-11 12:00:00"), dataDays = 10, logDays = 10)
+      assert(deleted("stock_data") == 1 && deleted("pipeline_logs") >= 1)
+      val left = spark.table("stock_data").filter("symbol = 'STRAD'")
+        .select("timestamp").as[java.sql.Timestamp].collect().toSet
+      assert(left == Set(ts("2019-05-01 15:00:00"), ts("2019-05-02 10:00:00")))
+      assert(fileState("2019-05-02") == neighbour,
+        "a partition newer than the cutoff was rewritten by retention")
+      assert(spark.table("stock_data").count() == total - 1)
+      assert(spark.table("pipeline_logs")
+        .filter("dag_id = 'retention_dag'").count() == 0)
+      assert(staged() == stagedBefore, "retention left a staging copy behind")
+    } finally Catalog.dropDatePartitions(spark, "stock_data",
+      Seq("2019-05-01", "2019-05-02").map(java.sql.Date.valueOf))
+  }
+
   test("dynamic overwrite replaces only touched partitions") {
     val out = java.nio.file.Files.createTempDirectory("graft_dyn").toString
     import spark.implicits._

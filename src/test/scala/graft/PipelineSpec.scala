@@ -113,7 +113,84 @@ class PipelineSpec extends AnyFunSuite {
 
   test("failed transport returns None after retries; run continues") {
     val p = new StockPipeline(spark, _ => None, retries = 3)
-    val (bars, results) = p.ingest(Seq("ZZZ"))
-    assert(bars.isEmpty && results == Seq(StockPipeline.SymbolResult("ZZZ", false, 0L)))
+    val (bars, results, prof) = p.ingest(Seq("ZZZ"))
+    try {
+      assert(bars.isEmpty && results == Seq(StockPipeline.SymbolResult("ZZZ", false, 0L)))
+      // an empty batch passes the gate vacuously and touches no date
+      assert(prof.quality.forall(_._2) && prof.dates.isEmpty)
+    } finally bars.unpersist()
+  }
+
+  test("one profile aggregate gives what the per-symbol, quality and date collects gave") {
+    import org.apache.spark.sql.functions._
+    def payload(sym: String, bars: (String, String, String)*) =
+      s"""{"Meta Data": {"2. Symbol": "$sym",
+         |  "3. Last Refreshed": "2024-05-07 16:00:00", "5. Time Zone": "UTC"},
+         | "Time Series (60min)": {""".stripMargin + bars.map { case (ts, hi, lo) =>
+        s""""$ts": {"1. open": "1.5", "2. high": "$hi", "3. low": "$lo",
+           |  "4. close": "1.5", "5. volume": "10"}""".stripMargin
+      }.mkString(", ") + "}}"
+    val payloads = Map(
+      // spans two trade dates; the second bar's high is below its low
+      "TWO" -> payload("TWO", ("2024-05-06 15:00:00", "2.0", "1.0"),
+        ("2024-05-07 10:00:00", "1.0", "2.0")),
+      "ONE" -> payload("ONE", ("2024-05-07 11:00:00", "2.0", "1.0")),
+      "ERR" -> graft.sources.AlphaVantage.fixtureError)
+    val p = new StockPipeline(spark, payloads.get)
+    val (bars, results, prof) = p.ingest(Seq("two", "ONE", "ERR", "GONE"))
+    try {
+      // the three separate collects a run used to make
+      val perSymbol = bars.groupBy("symbol").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val agg = bars.agg(
+        sum(when(col("symbol").isNull || col("timestamp").isNull, 1)
+          .otherwise(0)),
+        sum(when(col("open_price") < 0 || col("high_price") < 0
+          || col("low_price") < 0 || col("close_price") < 0
+          || col("volume") < 0, 1).otherwise(0)),
+        sum(when(col("high_price") < col("low_price"), 1).otherwise(0)))
+        .collect()(0)
+      val quality = Seq("keys_complete" -> (agg.getLong(0) == 0),
+        "values_non_negative" -> (agg.getLong(1) == 0),
+        "high_gte_low" -> (agg.getLong(2) == 0))
+      val dates = bars.select(to_date(col("timestamp"))).distinct().collect()
+        .map(_.getDate(0)).toSet
+      val sr = StockPipeline.SymbolResult
+      assert(results == Seq(sr("TWO", true, 2L), sr("ONE", true, 1L),
+        sr("ERR", false, 0L), sr("GONE", false, 0L)))
+      assert(prof.records == perSymbol && perSymbol == Map("TWO" -> 2L, "ONE" -> 1L))
+      assert(prof.quality == quality)
+      assert(quality.toMap == Map("keys_complete" -> true,
+        "values_non_negative" -> true, "high_gte_low" -> false))
+      assert(prof.dates.size == 2 && prof.dates.toSet == dates)
+      assert(dates == Set("2024-05-06", "2024-05-07").map(java.sql.Date.valueOf))
+    } finally bars.unpersist()
+  }
+
+  test("a warm fixture run, summary collected, starts at most 9 Spark jobs in the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    StockPipeline.pipelineRun(spark, SparkTestSession.sf).collect() // warm
+    val sc = spark.sparkContext
+    // (job group, call site) of every job started
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
+        // the result stage is named after the job's call site
+        jobs += Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull ->
+          e.stageInfos.maxBy(_.stageId).name
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("pipeline-run-jobs", "warm fixture run")
+      try StockPipeline.pipelineRun(spark, SparkTestSession.sf).collect()
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    val seen = jobs.synchronized(jobs.toList)
+    // the concurrent metadata append must be attributed to the run too
+    assert(seen.nonEmpty && seen.forall(_._1 == "pipeline-run-jobs"), seen)
+    assert(seen.size <= 9, seen.map(_._2).mkString(s"${seen.size} jobs: ", "; ", ""))
   }
 }
