@@ -27,18 +27,8 @@ object Conf {
     * its blocks are ContextCleaner-scoped — freed when the frame is
     * garbage collected — rather than registry entries that outlive the
     * call. */
-  /** Plan-introspection escape hatch (PlanAuditSpec / PlanDump /
-    * Explain): a checkpointed result explains as `Scan ExistingRDD`,
-    * hiding the executed plan from audits and dumps. When set, every
-    * hygiene site returns its LAZY frame — nothing is materialized or
-    * released — so it is for `.explain`-style inspection only, never
-    * for executing gates. */
-  def lazyPlans(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.internal.lazyPlans").contains("true")
-
   def checkpointThenRelease(out: org.apache.spark.sql.DataFrame,
       cached: org.apache.spark.sql.Dataset[_]*): org.apache.spark.sql.DataFrame = {
-    if (lazyPlans(out.sparkSession)) return out
     val ck = out.localCheckpoint()
     cached.foreach(_.unpersist())
     ck
@@ -71,9 +61,10 @@ object Conf {
     * the constant partition key back out, so the executor still logs
     * the warning per task and floods the 2 KB driver tail the bench
     * artifact depends on. The DISCIPLINE is enforced statically
-    * instead: PlanAuditSpec fails any gate whose optimized plan grows
-    * an empty-partition window outside the audited whitelist, which is
-    * strictly stronger than a log line nobody greps. */
+    * instead: PlanAuditSpec fails any gate that executes an analyzed
+    * plan with an empty-partition window outside the audited
+    * whitelist, which is strictly stronger than a log line nobody
+    * greps. */
   def silenceBoundedWindowLogs(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",
@@ -91,6 +82,27 @@ object Conf {
     sys.props.get("spark.master")
       .orElse(sys.env.get("SPARK_MASTER_URL"))
       .getOrElse(s"local[$cpus]")
+
+  /** The session the entry-point mains (Verify, Bench, PlanDump, Ops,
+    * StreamScale) run in: `cpus` local cores (see [[master]]) and
+    * shuffle partitions, UTC and non-ANSI semantics as the oracles
+    * assume, the graft extensions, and a progress ring deep enough that
+    * StreamMetrics never sees a truncated stream history. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master(cpus))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.streaming.numRecentProgressUpdates", "4096")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    silenceBoundedWindowLogs()
+    spark
+  }
 
   def int(spark: SparkSession, key: String, default: Int): Int =
     spark.conf.getOption(key).map(_.trim.toInt).getOrElse(default)

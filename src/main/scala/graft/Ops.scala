@@ -30,17 +30,7 @@ object Ops {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(Conf.master(cpus))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Conf.silenceBoundedWindowLogs()
+    val spark = Conf.session(cpus)
     val code = try run(spark, args.toSeq, sys.env.get("GRAFT_API_KEY"))
     finally spark.stop()
     if (code != 0) sys.exit(code)

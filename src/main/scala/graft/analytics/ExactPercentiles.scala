@@ -33,21 +33,26 @@ object ExactPercentiles {
   /** Per-group exact percentiles: returns one row per group with
     * `groups ++ ps.map(_._1)` double columns — the same frame
     * `df.groupBy(groups).agg(percentile(value, p).as(name)…)` yields.
-    * Nulls in `value` are dropped first (Percentile skips them, and
-    * its `n` counts non-null rows only). One exchange (hash by group),
-    * one per-group sort, one hash agg — all whole-stage-codegen. */
+    * Percentile skips nulls and its `n` counts non-null rows only, so
+    * null values sort last (past every index a percentile reads) and
+    * `_n` counts the non-null ones. A group whose values are all null
+    * is kept, as `groupBy().agg(percentile)` keeps it: `_n = 0`
+    * matches no row and every percentile reads NULL. One exchange
+    * (hash by group), one per-group sort, one hash agg — all
+    * whole-stage-codegen. With no groups, see [[globalRanks]]. */
   def groupPercentiles(df: DataFrame, groups: Seq[String], value: Column,
       ps: Seq[(String, Double)]): DataFrame = {
     val g = groups.map(col)
     // order by the double image: monotone for the numeric inputs this
     // engine feeds it (doubles verbatim; integers far below 2^53)
-    val sortW = Window.partitionBy(g: _*).orderBy(col("_v"))
+    val sortW = Window.partitionBy(g: _*).orderBy(col("_v").asc_nulls_last)
     val cntW = Window.partitionBy(g: _*)
-    var ranked = df
-      .filter(value.isNotNull)
-      .select(g :+ value.cast("double").as("_v"): _*)
-      .withColumn("_i", row_number().over(sortW).cast("long") - 1L)
-      .withColumn("_n", count(lit(1)).over(cntW))
+    val vals = df.select(g :+ value.cast("double").as("_v"): _*)
+    var ranked =
+      if (groups.isEmpty) globalRanks(vals)
+      else vals
+        .withColumn("_i", row_number().over(sortW).cast("long") - 1L)
+        .withColumn("_n", count(col("_v")).over(cntW))
     // per-row index targets (group-constant — _n is): computed pre-agg
     // so the aggregate only ever reduces them with max()
     ps.foreach { case (name, p) =>
@@ -82,5 +87,27 @@ object ExactPercentiles {
         .as(name)
     }
     agged.select(g ++ outs: _*)
+  }
+
+  /** `_i`/`_n` over ALL rows without a window over all rows (one task
+    * sorting the whole input): rank within monotone value bands (16 per
+    * octave of |v|, ≤ ~33k for any double), offset by the rows of the
+    * bands below — a running sum over the bounded band summary. Nulls
+    * are dropped: no index reaches them, and an all-null or empty input
+    * still aggregates to one all-NULL row. */
+  private def globalRanks(vals: DataFrame): DataFrame = {
+    val v = col("_v")
+    val banded = vals.filter(v.isNotNull).withColumn("_b",
+      when(isnan(v), lit(Int.MaxValue))
+        .otherwise((signum(v) * floor(log2(abs(v) + 1) * 16)).cast("int")))
+    val bands = banded.groupBy("_b").agg(count(lit(1)).as("_c"))
+      // bounded: one row per band
+      .withColumn("_off", sum(col("_c"))
+        .over(graft.Tables.boundedGlobalWindow(col("_b"))) - col("_c"))
+      .withColumn("_n", sum(col("_c")).over(graft.Tables.boundedGlobalFrame))
+    banded
+      .withColumn("_j", row_number().over(Window.partitionBy("_b").orderBy(v)))
+      .join(broadcast(bands.select("_b", "_off", "_n")), "_b")
+      .select(v, (col("_off") + col("_j") - 1L).as("_i"), col("_n"))
   }
 }

@@ -137,10 +137,8 @@ object Sketches {
       .groupBy("hv")
       .agg(max(when(col("rf") === "A", 1L).otherwise(0L)).as("in_a"),
         max(when(col("rf") === "N", 1L).otherwise(0L)).as("in_b"))
-    // ndv(A∪B)-sized; sketch + truth both read it — checkpointed at
-    // runtime, lazy under the plan-introspection conf (the audit must
-    // see the register build, not `Scan ExistingRDD`, and not run it)
-    val g = if (graft.Conf.lazyPlans(spark)) g0 else g0.localCheckpoint(true)
+    // ndv(A∪B)-sized; sketch + truth both read it
+    val g = g0.localCheckpoint(true)
     // same constant-key combine as kmvDistinct — hash join, no cartesian
     val s = g.orderBy("hv").limit(k)
       .agg(count(lit(1)).as("k_eff"), max("hv").as("kth_hash"),

@@ -492,10 +492,7 @@ object Dedup {
   }
 
   /** One large-star + small-star alternation round — the loop body of
-    * [[dupClustersStar]], factored out so the lazyPlans audit path can
-    * present a single round's COMPUTING plan (the per-round plan is
-    * identical every iteration, so one declarative round is exactly
-    * the shape the banned-operator scan must see).
+    * [[dupClustersStar]].
     *
     * Each star step needs "min over u's neighborhood" NEXT TO every
     * edge of u — that is one window (min over partition by u), not a
@@ -616,24 +613,6 @@ object Dedup {
   private[operators] def componentsAdaptive(nodes: DataFrame,
       pairs: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
-    // lazyPlans (PlanAuditSpec/PlanDump): the adaptive solve is a
-    // count-gated ITERATION — both branches execute (an edge count, then
-    // either a driver union-find or checkpointed star rounds), so an
-    // audited gate would both run a full workload and present its
-    // heaviest joins as `Scan ExistingRDD` (the r10/r11 audit blind
-    // spot). Under the introspection conf, return ONE declarative star
-    // round + label readout instead: no count, no checkpoint, and the
-    // per-round plan — identical across iterations at runtime — is
-    // exactly the join shape the banned-operator scan must cover.
-    // lazyPlans is for plan inspection only, never executing gates, so
-    // the unconverged labels are never observed as results.
-    if (graft.Conf.lazyPlans(spark)) {
-      val edges = pairs
-        .select(greatest(col("da"), col("db")).as("u"),
-          least(col("da"), col("db")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      return starLabels(nodes, starRound(edges))
-    }
     if (pairs.count() <= localSolveMaxEdges(spark)) {
       val parent = new LongLongMap(1 << 14)
       def find(x0: Long): Long = {
@@ -1208,11 +1187,9 @@ object Dedup {
       den: Long = setSimDen): DataFrame = {
     val (pref, docToks, cleanup) = setSimParts(docs, num, den)
     val out = setSimJoinFromParts(pref, docToks, num, den)
-    // honor the lazyPlans introspection conf like every other hygiene
-    // site (Conf.checkpointThenRelease can't be used verbatim here —
-    // the release is setSimParts' cleanup hook, not a frame list)
-    if (graft.Conf.lazyPlans(docs.sparkSession)) out
-    else try out.localCheckpoint() finally cleanup()
+    // checkpoint-then-release, with setSimParts' cleanup hook as the
+    // release (Conf.checkpointThenRelease takes a frame list)
+    try out.localCheckpoint() finally cleanup()
   }
 
   /** The candidate+verify dataflow of [[setSimJoin]] over caller-owned
@@ -1483,14 +1460,6 @@ object Dedup {
       deltaPred: Column, pref: DataFrame, docToks: DataFrame, num: Long,
       den: Long): DataFrame = {
     val spark = docs.sparkSession
-      // lazyPlans (PlanAuditSpec/PlanDump): the fold's internal eager
-      // localCheckpoints exist to cut lineage between the solve stages
-      // at runtime; under the introspection conf they would hide the
-      // fold's heaviest joins behind `Scan ExistingRDD` AND execute
-      // them during a plan-only audit — keep every stage lazy instead
-      // (componentsAdaptive contributes its own declarative round).
-      def ck(df: DataFrame): DataFrame =
-        if (graft.Conf.lazyPlans(spark)) df else df.localCheckpoint()
       // delta-touching candidates: delta prefixes vs the union prefix
       // frame via the shared PPJoin kernel (one home for the
       // length-ratio/position bounds — a tuning fix to prefJoin
@@ -1522,11 +1491,12 @@ object Dedup {
           greatest(col("u"), col("v")).as("db"))
         .filter(col("da") =!= col("db"))
         .distinct()
-      val contractedCk = ck(contracted0)
+      // localCheckpoints cut lineage between the solve stages
+      val contractedCk = contracted0.localCheckpoint()
       val deltaIds = docs.filter(deltaPred).select(col("doc_id"))
       val nodes = baseLabels.select(col("canonical_id").as("doc_id"))
         .distinct().union(deltaIds)
-      val roots = ck(componentsAdaptive(nodes, contractedCk))
+      val roots = componentsAdaptive(nodes, contractedCk).localCheckpoint()
       def rootSide(from: String) = {
         val s = roots.select(col("doc_id").as(from),
           col("cluster_id").as("root"))
@@ -1538,7 +1508,7 @@ object Dedup {
         .select(col("doc_id"), col("root").as("canonical_id"))
         .union(deltaIds.join(rootSide("doc_id"), "doc_id")
           .select(col("doc_id"), col("root").as("canonical_id")))
-      withMemberCounts(ck(labels))
+      withMemberCounts(labels.localCheckpoint())
   }
 
   /** STAGING LIFECYCLE operator — the stored-artifact convention every
@@ -1658,23 +1628,8 @@ object Dedup {
     val tmp = root.resolve(
       s"$family-$pathKey-$genKey.build-${java.util.UUID.randomUUID}")
     Files.createDirectories(tmp)
-    // A staging build MATERIALIZES persisted artifacts, so it must
-    // never run under the plan-introspection conf: lazyPlans reroutes
-    // iterative internals (componentsAdaptive's one-round audit shape,
-    // the perceptron's single lazy round) that are correct for plan
-    // inspection but WRONG as results. An audit that triggers a
-    // (re)build — PlanDump constructing a staged-consumer gate right
-    // after a recompile bumped the logic fingerprint — would otherwise
-    // persist unconverged labels into base_labels.parquet and poison
-    // every later runtime read of this generation.
-    def buildEager(dir: java.nio.file.Path): Unit =
-      org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(s) => graft.Conf.withConf(s,
-          "spark.graft.internal.lazyPlans", "false") { build(dir) }
-        case None => build(dir)
-      }
     try {
-      buildEager(tmp)
+      build(tmp)
       Files.createFile(tmp.resolve("_DONE"))
       try Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE)
       catch { case _: java.nio.file.FileSystemException =>
@@ -2074,10 +2029,7 @@ object Dedup {
       probePred: Column = lit(true)): DataFrame = {
     val (ranked, _, docToks, cleanup) = setSimPartsFull(docs, num, den)
     val out = containmentJoinFromParts(ranked, docToks, num, den, probePred)
-    // honor lazyPlans like setSimJoin (the release is the parts
-    // cleanup hook, not a frame list)
-    if (graft.Conf.lazyPlans(docs.sparkSession)) out
-    else try out.localCheckpoint() finally cleanup()
+    try out.localCheckpoint() finally cleanup()
   }
 
   /** The probe/index/verify dataflow of [[containmentJoin]] over a

@@ -1341,19 +1341,15 @@ object Similarity {
     // iteration join (concurrent stages race the cache fill and Catalyst
     // re-optimizes the giant subtree per reference); checkpointing both
     // fills the cache up front and truncates the lineage to a plain scan.
-    // Under the plan-introspection conf the checkpoints stay LAZY — the
-    // audit must see the edge-build subtree (staged-pair scan, explode,
-    // repartition) instead of `Scan ExistingRDD`, and must not execute
-    // the materialization (the r12 blind-spot rule).
-    def ck(df: DataFrame): DataFrame =
-      if (graft.Conf.lazyPlans(spark)) df else df.localCheckpoint(true)
-    val edges = ck(pairs
+    val edges = pairs
       .select(explode(array(
         struct(col("a").as("u"), col("b").as("v")),
         struct(col("b").as("u"), col("a").as("v")))).as("e"))
       .select(col("e.u"), col("e.v"))
-      .repartition(col("u")))
-    val deg = ck(edges.groupBy("u").agg(count(lit(1)).as("d")))
+      .repartition(col("u"))
+      .localCheckpoint(true)
+    val deg = edges.groupBy("u").agg(count(lit(1)).as("d"))
+      .localCheckpoint(true)
     val nodes = Tables.load(spark, dir, "embeddings").select(col("vec_id"))
     var pr = nodes.withColumn("pr", lit(prScale))
     for (_ <- 1 to prIters) {

@@ -633,24 +633,14 @@ object TrainPrep {
         .agg(coalesce(sum(col("w")), lit(0L)).as("m"))
     }
     var w: Option[DataFrame] = None
-    // lazyPlans (PlanAuditSpec/PlanDump): one LAZY round instead of
-    // perceptronRounds checkpointed ones — the per-round plan (feats
-    // broadcast-join model, misfit agg, full-outer weight merge) is
-    // identical every round, so a single declarative round is exactly
-    // the join shape the audit must see, without executing the
-    // training loop or hiding it behind `Scan ExistingRDD`.
-    val lazyAudit = graft.Conf.lazyPlans(spark)
-    val rounds = if (lazyAudit) 1 else perceptronRounds
-    for (round <- 1 to rounds) {
+    for (round <- 1 to perceptronRounds) {
       // Round 1 shortcut (algebraic, not approximate): with w = 0
       // every margin is 0 and y·0 ≤ 0 marks EVERY document
       // misclassified, so Δw = Σ_all-docs y per bucket — the margin
       // join + doc-distinct pass computed only a constant. One full
-      // presence-pair pass removed from both perceptron gates. Kept
-      // under !lazyAudit so the audited single-round plan still shows
-      // the real per-round join shape.
+      // presence-pair pass removed from both perceptron gates.
       val delta =
-        if (round == 1 && !lazyAudit)
+        if (round == 1)
           feats.groupBy("b").agg(sum(col("y")).as("dw"))
         else {
           val mis = margins(w).filter(col("y") * col("m") <= 0)
@@ -666,7 +656,7 @@ object TrainPrep {
               .as("w"))
       }
       // bucket-bounded frame; checkpoint truncates the per-round plan
-      w = Some(if (lazyAudit) next else next.localCheckpoint())
+      w = Some(next.localCheckpoint())
     }
     // checkpoint-then-release (CacheHygieneSpec): one row per doc out;
     // the presence-pair frame must not outlive the call

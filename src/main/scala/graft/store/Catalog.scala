@@ -71,13 +71,18 @@ object Catalog {
       |) USING PARQUET LOCATION '${warehouse}/pipeline_logs'""".stripMargin
       .replace("${warehouse}", warehouse)
 
-  /** O1 first stage: DDL before any ingest. Idempotent. A partitioned
+  /** O1 first stage: DDL before any ingest. Idempotent, and DDL runs
+    * only for tables the session catalog lacks. A partitioned
     * external table re-attached over existing data starts with an empty
     * partition list in the (per-session) catalog, so recover partitions
     * from the directory layout; SYNC also drops entries whose
-    * directories retention removed. */
+    * directories retention removed. The repair runs on every call: it
+    * also picks up partitions other processes wrote. */
   def bootstrap(spark: SparkSession): Unit = {
-    Seq(stockDataDdl, stockMetadataDdl, pipelineLogsDdl).foreach(spark.sql(_))
+    for ((table, ddl) <- tableNames.zip(
+           Seq(stockDataDdl, stockMetadataDdl, pipelineLogsDdl))
+         if !spark.catalog.tableExists(table))
+      spark.sql(ddl)
     // repair requires the location to exist (first boot starts empty)
     val loc = new org.apache.hadoop.fs.Path(s"$warehouse/stock_data")
     loc.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(loc)

@@ -13,35 +13,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * here is the checkpoint-then-release pattern: materialize what the
   * result needs, then unpersist, BEFORE returning.
   *
-  * Runs the full gate surface at sf0.001 (one materialization each,
-  * the Bench hash-agg shape) and asserts the session cache registry is
-  * empty after each gate. Failures name the offending gate directly.
+  * Reads the shared [[SurfacePass]] over the full gate surface at
+  * sf0.001 (one materialization each, the Bench hash-agg shape), which
+  * notes after each gate whether the session cache registry is empty
+  * and resets it before the next. Failures name the offending gate
+  * directly.
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
-  private val sf = SparkTestSession.sf
 
   private def cacheEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
 
   test("every public gate leaves the cache registry empty") {
     spark.catalog.clearCache()
     assert(cacheEmpty, "pre-existing cached frames — fix the harness")
-    val leaks = scala.collection.mutable.ListBuffer.empty[String]
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      try {
-        Bench.materialize(fn(spark, sf))
-        if (!cacheEmpty) leaks += name
-      } catch {
-        case e: Throwable =>
-          failures += s"$name: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}"
-      } finally {
-        // reset for independence: the NEXT gate's verdict must not be
-        // polluted by this one's leak
-        spark.catalog.clearCache()
-        graft.streaming.EventStream.purgeStaging()
-      }
-    }
+    val gates = SurfacePass.gates.toSeq.sortBy(_._1)
+    val failures = gates.collect { case (name, g) if g.error.nonEmpty =>
+      s"$name: ${g.error.get}" }
+    val leaks = gates.collect { case (name, g) if !g.cacheEmpty => name }
     assert(failures.isEmpty, s"gates crashed: ${failures.mkString("; ")}")
     assert(leaks.isEmpty,
       s"${leaks.size} gates leak cached frames to library callers: " +

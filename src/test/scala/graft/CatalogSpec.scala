@@ -12,6 +12,14 @@ class CatalogSpec extends AnyFunSuite {
     assert(Catalog.tableNames.forall(spark.catalog.tableExists))
   }
 
+  test("bootstrap over existing tables runs one command: the repair") {
+    Catalog.bootstrap(spark)
+    val (_, ex) = PlanDump.executed(spark)(Catalog.bootstrap(spark))
+    assert(ex.map(_.funcName) == Seq("command"),
+      ex.map(e => s"${e.funcName}: ${e.plan}").mkString("\n"))
+    assert(ex.head.plan.contains("RepairTable"), ex.head.plan)
+  }
+
   test("mergeSchema read unifies pre- and post-evolution file layouts") {
     val out = graft.store.Catalog.schemaEvolution(spark, SparkTestSession.sf)
     // the merged frame sees the added column; legacy rows surface as

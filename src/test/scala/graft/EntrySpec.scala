@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke over the whole driver contract: every declared query runs on
-  * sf0.001 and returns rows; oracle keys are a subset of query keys;
-  * streaming equals its batch twin. */
+  * sf0.001 and returns rows (read off the shared [[SurfacePass]]);
+  * oracle keys are a subset of query keys; streaming equals its batch
+  * twin. */
 class EntrySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -18,11 +19,11 @@ class EntrySpec extends AnyFunSuite {
   }
 
   test("every query executes and returns rows on sf0.001") {
-    val empty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val n = fn(spark, SparkTestSession.sf).count()
-        if (n == 0) Some(name) else None
-    }
+    val gates = SurfacePass.gates.toSeq.sortBy(_._1)
+    val failed = gates.collect { case (name, g) if g.error.nonEmpty =>
+      s"$name: ${g.error.get}" }
+    assert(failed.isEmpty, s"queries that failed: ${failed.mkString("; ")}")
+    val empty = gates.collect { case (name, g) if g.rows == 0 => name }
     assert(empty.isEmpty, s"queries with zero rows: $empty")
   }
 

@@ -2,31 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Surface-wide physical-plan audit: every gate query in
-  * [[SparkEntry.queries]] must plan without a nested-loop or cartesian
+/** Surface-wide audit of EXECUTED physical plans: every gate query in
+  * [[SparkEntry.queries]] must run without a nested-loop or cartesian
   * operator. Local plan-shape asserts exist where a query was built
   * specifically to avoid one (RangeJoinSpec, SimilaritySpec,
   * BucketingSpec); this spec closes the gap for everything else, so an
   * accidental BNLJ from a refactored non-equi condition can't land
   * silently anywhere on the surface.
   *
-  * `executedPlan` (post-EnsureRequirements, pre-execution for AQE
-  * plans) is the right level: it shows what Spark would actually run,
-  * including the join strategy, without needing to execute anything
-  * beyond what the query constructor itself runs.
-  *
-  * The former residual blind spot (r10 advice #4, r11 verdict #5) is
-  * CLOSED: the lazyPlans conf now threads through the internal eager
-  * checkpoint sites too. `componentsAdaptive` presents one declarative
-  * star round instead of its count-gated iteration (the per-round plan
-  * is identical every iteration, so one round IS the audited shape),
-  * `incrementalFromParts` keeps its contracted/roots/labels stages
-  * lazy, and the perceptron runs a single uncheckpointed round. The
-  * audit therefore sees every gate's heaviest join stages as real
-  * operators — asserted below by `deepAuditVisible`: the previously
-  * blind gates must plan with at least one real join/window and no
-  * RDD-scan escape hatch at the top. At runtime (lazyPlans unset)
-  * the iterative forms keep their lineage-truncating checkpoints. */
+  * The plans come from [[SurfacePass]]: each gate runs once at sf0.001
+  * under [[PlanDump.executed]], which records every query it executed
+  * — its actions, each internal eager checkpoint as its own
+  * `localCheckpoint` execution, and the materializing aggregate over
+  * its result — as the final adaptive plan, with AQE's runtime join
+  * choices. Nothing is hidden behind `Scan ExistingRDD`: the subtree a
+  * checkpoint cuts off is the plan of the checkpoint's own execution.
+  */
 class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -58,31 +49,22 @@ class PlanAuditSpec extends AnyFunSuite {
     * Additions require the same justifying comment as `allow`. */
   private val boundedGlobalWindow: Set[String] = Set.empty
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
+  private def executedBy(name: String): Seq[PlanDump.Executed] = {
+    val g = SurfacePass.gates(name)
+    assert(g.error.isEmpty, s"$name failed: ${g.error.getOrElse("")}")
+    assert(g.executed.nonEmpty, s"$name executed no query")
+    g.executed
+  }
+
+  for ((name, _) <- SparkEntry.queries.toSeq.sortBy(_._1)
        if !allow.contains(name)) {
     test(s"$name plans without nested-loop or cartesian operators") {
-      // lazyPlans: checkpoint-then-release gates otherwise explain as
-      // an opaque `Scan ExistingRDD`, which would pass this audit
-      // vacuously — inspect the plan that computes the result.
-      // clearCache first: under lazyPlans gate constructors register
-      // persist() entries they never release (by design), and a STALE
-      // entry from an earlier test would let CacheManager substitute
-      // InMemoryRelation into THIS plan, hiding operators from the
-      // banned-op scan (the trailing clear keeps the last test from
-      // leaking into other suites).
-      spark.catalog.clearCache()
-      val qe = Conf.withConf(spark, "spark.graft.internal.lazyPlans", "true") {
-        fn(spark, SparkTestSession.sf).queryExecution
-      }
-      spark.catalog.clearCache()
-      val plan = qe.executedPlan.toString
-      for (op <- banned)
-        assert(!plan.contains(op), s"$name plan contains $op:\n$plan")
-      // global-window audit on the ANALYZED plan (see whitelist doc)
-      val global = qe.analyzed.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-            if w.partitionSpec.isEmpty => w
-      }
+      val ex = executedBy(name)
+      for (op <- banned; e <- ex.find(_.operators.contains(op)))
+        fail(s"$name ${e.funcName} plan contains $op:\n${e.plan}")
+      // global-window audit on every executed ANALYZED plan (see
+      // whitelist doc)
+      val global = ex.flatMap(_.globalWindow)
       if (global.nonEmpty)
         assert(boundedGlobalWindow.contains(name),
           s"$name grew an unaudited GLOBAL window (bounded? add to " +
@@ -94,30 +76,43 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  /** The gates the audit was previously blind to (internal eager
-    * checkpoints): their audited plans must now show the real stages —
-    * at least one join operator (the solve/fold's heaviest shape) and
-    * no `Scan ExistingRDD` anywhere, which is what an eager internal
-    * checkpoint would leave behind. */
+  private def isCheckpoint(e: PlanDump.Executed): Boolean =
+    e.funcName == "localCheckpoint" || e.funcName == "checkpoint"
+
+  /** Gates whose heaviest join stages run behind internal eager
+    * checkpoints: some executed query must show a real join, and every
+    * checkpointed frame their plans read back (a `Scan ExistingRDD`
+    * leaf) must be matched by a captured checkpoint execution — the
+    * plan that computed it. */
   private val deepAuditVisible = Seq(
     "dedup_canonical_incremental", "train_eval", "train_perceptron",
     "graph_pagerank", "sketch_kmv_union")
 
   for (name <- deepAuditVisible) {
     test(s"$name exposes its internal join stages to the audit") {
-      spark.catalog.clearCache()
-      val plan = Conf.withConf(spark, "spark.graft.internal.lazyPlans", "true") {
-        SparkEntry.queries(name)(spark, SparkTestSession.sf)
-          .queryExecution.executedPlan.toString
-      }
-      spark.catalog.clearCache()
-      assert(plan.contains("Join"),
-        s"$name audited plan shows no join stage — blind spot regressed:\n" +
-          plan.take(2000))
-      assert(!plan.contains("Scan ExistingRDD"),
-        s"$name audited plan still hides a subtree behind an eager " +
-          s"checkpoint:\n${plan.take(2000)}")
+      val ex = executedBy(name)
+      def listing = ex.map(e =>
+        s"${e.funcName}: ${e.operators.mkString(" ")}").mkString("\n")
+      assert(ex.exists(_.operators.exists(_.contains("Join"))),
+        s"$name executed no join stage — blind spot regressed:\n$listing")
+      val checkpoints = ex.count(isCheckpoint)
+      val readBack = ex.flatMap(_.rddScans).distinct
+      assert(checkpoints > 0,
+        s"$name took no internal checkpoint the capture saw:\n$listing")
+      assert(readBack.size <= checkpoints,
+        s"$name reads ${readBack.size} checkpointed frames but only " +
+          s"$checkpoints checkpoint executions were captured:\n$listing")
     }
+  }
+
+  test("graph_pagerank's executed plans include the edge build behind " +
+      "its checkpoint") {
+    val edgeBuild = executedBy("graph_pagerank").filter(e =>
+      isCheckpoint(e) && e.operators.contains("Generate"))
+    assert(edgeBuild.nonEmpty, "no checkpoint execution ran the explode")
+    val plan = edgeBuild.head.plan
+    assert(plan.contains("explode("), plan)
+    assert(plan.contains("Exchange hashpartitioning(u#"), plan)
   }
 
   /** Codegen audit: the hot scan→filter→aggregate path of the headline
@@ -136,21 +131,19 @@ class PlanAuditSpec extends AnyFunSuite {
   for (name <- codegenHeadline) {
     test(s"$name keeps its hot path inside WholeStageCodegen") {
       // AQE wraps the plan in AdaptiveSparkPlan and only materializes
-      // codegen spans as stages execute; disabling it for the audit
-      // exposes the static codegen'd plan without running anything
-      // (the codegen decision per operator is AQE-independent)
-      // lazyPlans: gates checkpoint-then-release their results (cache
-      // hygiene), which would explain as an opaque `Scan ExistingRDD`;
-      // the introspection conf returns the lazy frame so the audit
-      // sees the plan that actually computes the result
-      spark.catalog.clearCache() // see the main audit's cache note
-      val plan = Conf.withConf(spark, "spark.sql.adaptive.enabled", "false") {
-        Conf.withConf(spark, "spark.graft.internal.lazyPlans", "true") {
-          SparkEntry.queries(name)(spark, SparkTestSession.sf)
-            .queryExecution.executedPlan.toString
-        }
-      }
+      // codegen spans as stages execute; disabling it exposes the
+      // static codegen'd plan (the codegen decision per operator is
+      // AQE-independent). Only the gate's OWN plans are inspected: the
+      // queries its constructor executed plus its result frame, run
+      // as-is by a collect — never a wrapping aggregate, whose own
+      // codegen'd HashAggregate would pass this audit vacuously.
       spark.catalog.clearCache()
+      val (_, ex) = try Conf.withConf(spark, "spark.sql.adaptive.enabled", "false") {
+        PlanDump.executed(spark) {
+          SparkEntry.queries(name)(spark, SparkTestSession.sf).collect()
+        }
+      } finally spark.catalog.clearCache()
+      val plan = ex.map(_.plan).mkString("\n")
       assert(plan.contains("*("),
         s"$name has NO WholeStageCodegen span:\n$plan")
       // the parquet scan's consumer must be code-generated: a columnar
@@ -159,6 +152,12 @@ class PlanAuditSpec extends AnyFunSuite {
           l.contains("*(") && (l.contains("HashAggregate")
             || l.contains("Project") || l.contains("Filter"))),
         s"$name: no codegen'd HashAggregate/Project/Filter:\n$plan")
+      assert(ex.exists(_.operators.contains("FileSourceScan")),
+        s"$name executed no file scan:\n$plan")
+      val interpreted = ex.flatMap(_.interpretedScans)
+      assert(interpreted.isEmpty,
+        s"$name: scans feeding interpreted operators: " +
+          s"${interpreted.mkString(", ")}\n$plan")
     }
   }
 }
