@@ -13,9 +13,163 @@ object Bench {
     ()
   }
 
+  // Host-speed canary workloads. The version is bumped on ANY change
+  // to either workload (expression or row count): a reader must refuse
+  // to compare canaries across versions.
+  // v2 = {cpu: sum(id%1000) @ 8e9, shuffle: repartition(64)+agg @ 1e8}.
+  val canaryVersion = 2
+  val canaryRows = 8000000000L
+  val canaryShuffleRows = 100000000L
+
+  /** The stdout line's curated subset of gates, one-plus per operator
+    * family, heavies included. BYTE BUDGET: the line is read off the
+    * last ~2 KB of the build log (the full map lives in
+    * BENCH_FULL.json); it measured 2,140 bytes with this set. Additions
+    * must be paid for by removing equally many stable sub-second gates,
+    * or the reader records parsed:null. Membership is frozen so that
+    * headline totals of different runs measure the same set; new
+    * flagship gates are read from BENCH_FULL.json. */
+  val headline: Set[String] = Set(
+    "join_agg", "join_bucketed", "join_bloom", "join_range", "asof_join",
+    "skew_salted_join", "agg_percentiles", "agg_topk", "agg_cube",
+    "agg_heavy_hitters", "window_running_sum", "sessionize",
+    "dedup_exact", "dedup_minhash_bands", "dedup_clusters", "dedup_setsim",
+    "dedup_simhash_pairs", "dedup_semantic", "embed_neardup_lsh",
+    "knn_brute", "knn_ivf", "embed_clusters", "text_tfidf", "text_langid",
+    "text_tokens_bpe", "multimodal_frames",
+    "train_pipeline", "decontaminate", "stream_tumbling_append",
+    "stream_dedup", "stream_upsert_deltas_tws", "pipeline_run",
+    "ingest_parse", "yearly_revenue", "asof_join_native",
+    "text_lm_score", "curate_source_cap", "knn_filtered",
+    "knn_ivf_sampled", "stats_cuped", "text_bpe_train",
+    "train_token_budget", "behavior_attribution_linear",
+    "dedup_winnowing_pairs", "embed_lsh_recall",
+    "dedup_rewrite", "graph_bfs_hops", "behavior_pattern_match",
+    "stream_pattern_match", "ts_concurrency", "meta_lineage",
+    "stream_checkpoint_resume", "join_point_in_time",
+    "store_backfill", "dedup_cross_source", "behavior_time_to_convert",
+    "stats_analyze",
+    "graph_link_predict", "graph_kcore", "asof_join_nearest",
+    "stats_welch", "behavior_seq_support", "ts_rolling_slope",
+    "store_time_travel", "stream_asof", "behavior_markov_stationary",
+    "ts_bollinger",
+    "dedup_setsim_canonical", "dedup_canonical_incremental",
+    "stream_dedup_watermarked", "stream_neardup_ttl",
+    "approx_error_budget",
+    "sketch_hll_distinct",
+    "agg_q1_pricing", "join_q5_volume", "join_q19_disjunctive",
+    "agg_q6_forecast",
+    "dedup_method_agreement", "stream_stream_left", "stream_stream_full",
+    "dedup_containment", "dedup_cosine", "stream_sessionize")
+
+  /** Per-family bound tags: which canary a family's drift between two
+    * runs should be read against — "cpu" tracks canary_sec (cores ×
+    * clock), "shuffle" tracks canary_shuffle_sec (exchange/disk),
+    * "harness+state" is micro-batch trigger cycles + state-store
+    * commits (neither canary; replay machinery dominates). Hand-tagged
+    * from one host pair where the shuffle-tagged families were exactly
+    * the gates that moved while the CPU canary said the slower host was
+    * faster per row. */
+  val familyBound: String =
+    """{"dedup":"shuffle","embed":"shuffle","knn":"cpu","text":"cpu",""" +
+    """"train":"shuffle","curate":"shuffle","graph":"shuffle",""" +
+    """"behavior":"shuffle","stream":"harness+state","sessionize":"harness+state",""" +
+    """"agg":"cpu","join":"cpu","window":"cpu","sql":"cpu","setops":"cpu",""" +
+    """"asof":"cpu","skew":"shuffle","sketch":"cpu","aqp":"cpu","dp":"cpu",""" +
+    """"stats":"cpu","ts":"cpu","func":"cpu","core":"cpu","multimodal":"cpu",""" +
+    """"search":"cpu","decontaminate":"cpu","pii":"cpu","dq":"cpu",""" +
+    """"ingest":"cpu","pipeline":"harness+state","catalog":"cpu",""" +
+    """"upsert":"cpu","export":"cpu","schema":"cpu","store":"cpu",""" +
+    """"scd2":"cpu","meta":"cpu","approx":"cpu","yearly":"cpu"}"""
+
+  /** A JSON object of already-serialized values, keys in given order. */
+  private def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => Verify.jsonString(k) + ":" + v }
+      .mkString("{", ",", "}")
+  private def num(v: Double): String = f"$v%.2f"
+  private def secs(m: collection.Map[String, Double]): String =
+    obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> num(v) })
+
+  /** One Bench run's measurements and the JSON it publishes, a pure
+    * function of them.
+    *
+    * @param runs per gate, the seconds of each pass that succeeded;
+    *   empty when every pass failed or no gate has the name. A failed
+    *   gate is listed in `errors`, never timed: a timed failure once
+    *   read as a fake speedup.
+    * @param canarySec `canary_sec`, -1 when skipped
+    * @param canaryShuffleSec `canary_shuffle_sec`, -1 when skipped
+    * @param stagingSec build seconds of each staged corpus artifact
+    *   ("canon", "embpairs"), -1 when its build failed
+    * @param sf the scale-factor dir's name */
+  final case class Record(runs: Map[String, Seq[Double]], canarySec: Double,
+      canaryShuffleSec: Double, stagingSec: Seq[(String, Double)],
+      sf: String) {
+    /** Per gate, the min over the passes that succeeded. */
+    val results: Map[String, Double] =
+      runs.collect { case (k, vs) if vs.nonEmpty => k -> vs.min }
+    val errors: Seq[String] =
+      runs.collect { case (k, vs) if vs.isEmpty => k }.toSeq.sorted
+    /** Cross-pass spread of every gate with two or more good passes. */
+    val spreads: Map[String, Double] =
+      runs.collect { case (k, vs) if vs.size >= 2 => k -> (vs.max - vs.min) }
+
+    private val value = "value" -> num(results.values.sum)
+    private val n = "n" -> results.size.toString
+    private val version = "canary_version" -> canaryVersion.toString
+    private val cpu = "canary_sec" -> num(canarySec)
+    private val shuffle = "canary_shuffle_sec" -> num(canaryShuffleSec)
+    private val staging = obj(stagingSec.map { case (k, v) => k -> num(v) })
+    private val sfTag = "sf" -> Verify.jsonString(sf)
+    private val head = Seq("metric" -> "\"total\"", value, "unit" -> "\"sec\"",
+      n, version, cpu, "canary_rows" -> canaryRows.toString, shuffle,
+      "canary_shuffle_rows" -> canaryShuffleRows.toString)
+    private val errorsJson = errors.map(Verify.jsonString).mkString("[", ",", "]")
+
+    /** The complete record: BENCH_FULL.json and the SPARK_GRAFT_OUT
+      * file; the latter adds the containment candidate funnel. */
+    def full(funnel: Option[(Long, Long, Long)] = None): String = obj(
+      head ++ Seq("staging_build_sec" -> staging) ++
+        funnel.map { case (cands, surv, ver) => "containment_funnel" ->
+          obj(Seq("cand_pairs" -> cands.toString,
+            "ub_survivors" -> surv.toString, "verified" -> ver.toString))
+        } ++
+        Seq("headline_subtotal" ->
+            num(results.view.filterKeys(headline).values.sum),
+          "family_bound" -> familyBound, "errors" -> errorsJson,
+          "queries" -> secs(results), "spread" -> secs(spreads), sfTag))
+
+    /** The stdout line: the headline subset of `full`, one line. Its
+      * spreads cover the 16 slowest headline gates, where every
+      * spread criterion has lived, and come BEFORE the queries map so
+      * a head-bounded capture cannot cut them. `tail` repeats the
+      * head-of-line scalars after the queries map, so a tail-bounded
+      * capture that cut the head can still rebuild total, canaries and
+      * staging. Key names and order are a parsed contract. */
+    def line: String = {
+      val shown = results.view.filterKeys(headline).toMap
+      val watched = shown.toSeq.sortBy(-_._2).take(16)
+        .flatMap { case (k, _) => spreads.get(k).map(k -> _) }.toMap
+      obj(head ++ Seq("staging_sec" -> staging, "errors" -> errorsJson,
+        "spread" -> secs(watched), "queries" -> secs(shown),
+        "tail" -> obj(Seq(value, n, version, cpu, shuffle,
+          "staging_sec" -> staging, sfTag)),
+        sfTag))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the run; a name no
+    // gate has is reported in `errors`
+    val only: Option[Set[String]] =
+      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // SPARK_GRAFT_OUT=<path> writes the complete record of THIS run
+    // (any SF, any SPARK_GRAFT_ONLY subset) to an explicit path, with
+    // the containment funnel; tools/scaling.py runs Bench once per SF
+    // and fits per-query scaling exponents from these files
+    val outPath = sys.env.get("SPARK_GRAFT_OUT")
     val spark = Conf.session(cpus)
     // absorb one-time session cost (codegen compiler, parquet footer
     // reads, broadcast machinery) so per-query numbers measure the
@@ -34,100 +188,62 @@ object Bench {
     // against YESTERDAY'S stored artifacts, so the input build is a
     // once-per-corpus cost that must not sit inside any timed pass.
     // The build is NOT free at 100 TB, so it is TIMED here and
-    // published as its own metric (staging_build_sec) in every JSON
-    // artifact — the recurring per-corpus-generation cost, reported
-    // next to (not inside) the per-query consumer times. A failure is
-    // LOUD: the first timed consumer gate would otherwise silently
-    // absorb a full rebuild and the artifact would misattribute it.
-    // SPARK_GRAFT_STAGE_FRESH=1 (tools/scaling.py) evicts first so the
-    // measured build is a real from-scratch cost at every SF.
+    // published as its own metric (staging_build_sec) — the recurring
+    // per-corpus-generation cost, reported next to (not inside) the
+    // per-query consumer times. A failure is LOUD: the first timed
+    // consumer gate would otherwise silently absorb a full rebuild and
+    // the record would misattribute it.
     def timedSec(work: => Unit): Double = {
       val t0 = System.nanoTime(); work; (System.nanoTime() - t0) / 1e9
     }
-    // dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the run (driver sets
-    // only SF_DIR/CPUS, so driver rounds always measure everything)
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // FULL runs always evict first (r12 measurement rule): a staged
-    // artifact surviving from a PREVIOUS invocation would make this
-    // run's consumer gates read intermediates this run never computed
-    // — every bench invocation must derive everything it measures from
-    // the parquet inputs. The rebuild is timed and published
-    // (staging_build_sec). SPARK_GRAFT_ONLY dev-loop subsets keep
-    // cross-run reuse: their numbers are scratch, and a per-iteration
-    // rebuild would bury the gate being iterated on.
-    val stageFresh =
-      only.isEmpty || sys.env.get("SPARK_GRAFT_STAGE_FRESH").contains("1")
-    spark.sparkContext.setJobDescription("staging: canonical corpus artifacts")
-    val stagingCanonSec =
+    // Full runs and SPARK_GRAFT_OUT runs evict first: a staged artifact
+    // surviving from a PREVIOUS invocation would make this run's
+    // consumer gates read intermediates this run never computed, and
+    // the staging time would not be a from-scratch build at this SF.
+    // SPARK_GRAFT_ONLY dev-loop subsets keep cross-run reuse: their
+    // numbers are scratch, and a per-iteration rebuild would bury the
+    // gate being iterated on.
+    val stageFresh = only.isEmpty || outPath.nonEmpty
+    def staged(what: String)(evict: => Unit)(ensure: => Unit): Double = {
+      spark.sparkContext.setJobDescription(s"staging: $what")
       try {
-        if (stageFresh)
-          graft.operators.Dedup.evictCanonicalStaging(sfDir, keepCurrent = false)
-        timedSec(graft.operators.Dedup.ensureCanonicalStaging(spark, sfDir))
+        if (stageFresh) evict
+        timedSec(ensure)
       } catch { case e: Throwable =>
-        System.err.println("[bench] CANONICAL STAGING BUILD FAILED — first " +
-          s"timed consumer gate will absorb a full rebuild: $e")
+        System.err.println(s"[bench] ${what.toUpperCase} STAGING BUILD FAILED " +
+          s"— first timed consumer gate will absorb a full rebuild: $e")
         -1.0
       }
-    spark.sparkContext.setJobDescription("staging: embedding pair table")
-    val stagingEmbedSec =
-      try {
-        if (stageFresh)
-          graft.operators.Similarity.evictEmbedPairStaging(sfDir, keepCurrent = false)
-        timedSec(graft.operators.Similarity.ensureEmbedPairStaging(spark, sfDir))
-      } catch { case e: Throwable =>
-        System.err.println("[bench] EMBED PAIR STAGING BUILD FAILED — first " +
-          s"timed consumer gate will absorb a full rebuild: $e")
-        -1.0
-      }
+    }
+    val stagingCanonSec = staged("canonical corpus artifacts")(
+      graft.operators.Dedup.evictCanonicalStaging(sfDir, keepCurrent = false))(
+      graft.operators.Dedup.ensureCanonicalStaging(spark, sfDir))
+    val stagingEmbedSec = staged("embedding pair table")(
+      graft.operators.Similarity.evictEmbedPairStaging(sfDir, keepCurrent = false))(
+      graft.operators.Similarity.ensureEmbedPairStaging(spark, sfDir))
     spark.sparkContext.setJobDescription(null)
-    val stagingJson =
-      s"""{"canon":${f"$stagingCanonSec%.2f"},"embpairs":${f"$stagingEmbedSec%.2f"}}"""
-    // Host-speed canaries (fixed microbenchmarks, min of 3 each):
-    // published in both JSON artifacts so driver-vs-builder wall-clock
-    // deltas can be NORMALIZED against measured host throughput instead
-    // of asserted — round 9's +26% suite drift on untouched code was
-    // unadjudicatable without one. The WORKLOADS ARE VERSIONED via
-    // canary_rows/canary_shuffle_rows fields (r10 resized the CPU
-    // canary between its two artifacts and made them incomparable;
-    // never again — a reader must refuse to compare canaries whose
-    // rows fields differ). Skipped (-1) in SPARK_GRAFT_ONLY dev-loop
-    // runs, where nothing consumes them.
-    //
+    // Host-speed canaries (fixed microbenchmarks, min of 3 each), so
+    // wall-clock deltas between hosts can be NORMALIZED against
+    // measured host throughput instead of asserted. Skipped (-1) in
+    // SPARK_GRAFT_ONLY dev-loop runs, where nothing consumes them.
+    def minOf3(work: => Unit): Double =
+      if (only.nonEmpty) -1.0
+      else (1 to 3).map(_ => timedSec(work)).min
     // canary_sec — whole-stage-codegen'd long arithmetic: no shuffle,
     // no IO, no GC pressure — pure cores × clock. 8e9 rows (~1 s):
     // sub-second canaries measure scheduler jitter, not sustained
     // throughput. `id % 1000` keeps the running sum ~4e12, inside Long
-    // under ANSI too (the previous id*3+7 form summed to ~9.6e19 and
-    // survived only because ansi.enabled is forced false here).
-    // canary_version: bumped on ANY canary workload change, not just a
-    // row-count change (r11 changed the CPU canary's expression from
-    // sum(id*3+7) to sum(id%1000) at unchanged canary_rows, so the
-    // "refuse to compare canaries whose rows fields differ" guard never
-    // tripped and r10-vs-r11 canaries were silently incomparable).
-    // v2 = {cpu: sum(id%1000) @ 8e9, shuffle: repartition(64)+agg @ 1e8}.
-    // A reader must refuse to compare canaries across versions.
-    val canaryVersion = 2
-    val canaryRows = 8000000000L
-    def minOf3(work: => Unit): Double =
-      if (only.nonEmpty) -1.0
-      else (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        work
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    // under ANSI too.
     spark.sparkContext.setJobDescription("canary:cpu")
     val canary = minOf3 {
       spark.range(canaryRows).selectExpr("sum(id % 1000)").collect(); ()
     }
-    // canary_shuffle_sec — the dimension the CPU canary provably can't
-    // see (r10: driver host 2.9× FASTER per-row on the CPU canary, yet
-    // ran the shuffle-bound dedup gates ~3× slower): a fixed full-row
-    // exchange of 1e8 (id, key) rows through repartition(64) into a
-    // hash agg — ~1.6 GB of shuffle write+read hitting the same local
-    // dirs and page cache the suite's wide exchanges use. Tracks
-    // disk/FS contention; compare like-rows canaries only.
-    val canaryShuffleRows = 100000000L
+    // canary_shuffle_sec — the dimension the CPU canary can't see (a
+    // host faster per row on the CPU canary once ran the shuffle-bound
+    // dedup gates ~3× slower): a fixed full-row exchange of 1e8
+    // (id, key) rows through repartition(64) into a hash agg — ~1.6 GB
+    // of shuffle write+read hitting the same local dirs and page cache
+    // the suite's wide exchanges use. Tracks disk/FS contention.
     spark.sparkContext.setJobDescription("canary:shuffle")
     val canaryShuffle = minOf3 {
       spark.range(canaryShuffleRows)
@@ -139,270 +255,77 @@ object Bench {
         .groupBy("k").agg(sum("id").as("s"))
         .agg(sum("s")).collect(); ()
     }
-    val benched = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val (benched, unknown) = SparkEntry.select(only)
     // two passes, min per query: single-pass numbers at local[32] swing
     // 2-4x with JIT/GC timing and which heavy query runs first; the min
     // of two runs is a far more stable estimate of the plan's cost.
-    // A query that THROWS records -1, never an elapsed time — round 4's
-    // corpus drift turned 63 crashes into fake 0.05 s "speedups" because
-    // the old catch timed the failure.
+    // A query that THROWS records -1, never an elapsed time.
     def pass(names: Seq[String]): Map[String, Double] = names.iterator.map { name =>
       val fn = benched(name)
       // UI/event-log attribution only (guide: label your jobs) — a
       // thread-local string set outside the timed window's hot path
       spark.sparkContext.setJobDescription(s"gate:$name")
-      val t0 = System.nanoTime()
-      val ok =
-        try { materialize(fn(spark, sfDir)); true }
+      // the gate reset runs after the clock stops: later gates aren't
+      // timed under the memory pressure of earlier gates' persists, and
+      // a 3-pass sweep doesn't hold one replay corpus copy per stream
+      // gate per pass
+      val secs =
+        try SparkEntry.isolated(spark)(timedSec(materialize(fn(spark, sfDir))))
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator.take(2).mkString(" | ")}")
-          false
+          -1.0
         }
-      val secs = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       spark.sparkContext.setJobDescription(null)
-      // queries persist intermediates (shingles, tf) scoped to their own
-      // run; drop them so later queries aren't timed under the memory
-      // pressure of earlier ones
-      spark.catalog.clearCache()
-      // drop this gate's replay staging dirs (result is materialized);
-      // a 3-pass sweep would otherwise hold one corpus copy per stream
-      // gate per pass under /tmp
-      graft.streaming.EventStream.purgeStaging()
       // force a GC so the ContextCleaner reclaims dead broadcasts /
       // shuffle files / RDD blocks NOW, between gates, instead of mid-
-      // way through a later gate's timed window. Round 7's forensics:
-      // embed_lsh_recall measured 6.59 s in-suite vs 2.43 s isolated
-      // with zero code change — the suite's accumulated heap garbage
-      // (thousands of broadcasts over 305 gates on an 8g heap) taxed
-      // whichever allocation-heavy gate ran when the heap filled.
+      // way through a later gate's timed window: embed_lsh_recall once
+      // measured 6.59 s in-suite vs 2.43 s isolated with zero code
+      // change — the suite's accumulated heap garbage (thousands of
+      // broadcasts over 305 gates on an 8g heap) taxed whichever
+      // allocation-heavy gate ran when the heap filled.
       System.gc()
       name -> secs
     }.toMap
     val names = benched.keys.toSeq.sorted
     val (p1, p2) = (pass(names), pass(names))
-    def min2(k: String): Double = {
-      val (v, w) = (p1(k), p2(k))
-      if (v < 0) w else if (w < 0) v else math.min(v, w)
+    // variance discipline: gates over 1 s (min of the two passes) get a
+    // THIRD pass, and every gate publishes its cross-pass spread, so a
+    // delta between runs can be read against the gate's own noise
+    val slow = names.filter { k =>
+      Seq(p1(k), p2(k)).filter(_ >= 0).minOption.exists(_ > 1.0)
     }
-    // variance discipline (round-7 verdict): gates over 1 s get a THIRD
-    // pass, and every gate publishes its cross-pass spread, so a round-
-    // over-round delta can be read against the gate's own measured
-    // noise instead of burning a forensics task on it.
-    val slow = names.filter(k => min2(k) > 1.0)
     val p3 = pass(slow)
-    val runsOf: Map[String, Seq[Double]] = names.map { k =>
-      k -> (Seq(p1(k), p2(k)) ++ p3.get(k)).filter(_ >= 0)
-    }.toMap
-    // min of the passes that succeeded; -1 only if ALL failed
-    val results: Map[String, Double] = runsOf.map { case (k, vs) =>
-      k -> (if (vs.isEmpty) -1.0 else vs.min)
-    }
-    val spreads: Map[String, Double] = runsOf.collect {
-      case (k, vs) if vs.size >= 2 => k -> (vs.max - vs.min)
-    }
-    val errored = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
-    def fmt(v: Double): String = f"$v%.2f"
-    def toJson(m: Map[String, Double], prec: String => String): String =
-      m.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + prec(fmt(v)) }
-        .mkString("{", ",", "}")
-    // The driver captures only the last ~2 KB of the build log, so the
-    // stdout line carries a curated headline subset (one-plus query per
-    // operator family, heavies included); the COMPLETE per-query map goes
-    // to BENCH_FULL.json in the repo root. Round 3's full map overflowed
-    // the tail window and the driver recorded parsed:null.
-    val okResults = results.filter(_._2 >= 0)
-    val full = toJson(okResults, identity)
-    // round-over-round deltas vs the PREVIOUS BENCH_FULL.json (read
-    // before we overwrite it): regressions like r4's 8x
-    // dedup_simhash_pairs get caught by the builder, not the judge
-    val prevQueries: Map[String, Double] =
+    val record = Record(
+      runs = names.map { k =>
+        k -> (Seq(p1(k), p2(k)) ++ p3.get(k)).filter(_ >= 0)
+      }.toMap ++ unknown.map(_ -> Seq.empty[Double]),
+      canarySec = canary, canaryShuffleSec = canaryShuffle,
+      stagingSec = Seq("canon" -> stagingCanonSec, "embpairs" -> stagingEmbedSec),
+      sf = sfDir.split('/').last)
+    // BENCH_FULL.json is the committed sf0.1 artifact; a smoke run
+    // (other SF, or a SPARK_GRAFT_ONLY subset) must not clobber it.
+    // Both writes swallow-and-report: a bad path must not crash Bench
+    // AFTER the full run completed and lose the stdout line.
+    def write(path: String, body: => String): Unit =
       try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_FULL.json")))
-        val qStart = txt.indexOf("\"queries\":{")
-        if (qStart < 0) Map.empty
-        else {
-          val body = txt.substring(qStart + 11, txt.indexOf('}', qStart))
-          """"([A-Za-z0-9_]+)":(-?[0-9.]+)""".r.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      } catch { case _: Throwable => Map.empty }
-    val deltas = okResults.collect {
-      case (k, v) if prevQueries.get(k).exists(_ >= 0) => k -> (v - prevQueries(k))
-    }
-    val errJson = errored.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // BENCH_FULL.json is the round's committed sf0.1 artifact; a smoke
-    // run (other SF, or a SPARK_GRAFT_ONLY subset) must not clobber it
-    // — that would both lose the artifact and poison prev_delta.
-    val isArtifactRun =
-      sfDir.split('/').last == "sf0.1" && only.isEmpty
-    // per-FAMILY bound tags (r10 verdict #8): which canary a family's
-    // round-over-round drift should be read against — "cpu" tracks
-    // canary_sec (cores × clock), "shuffle" tracks canary_shuffle_sec
-    // (exchange/disk), "harness+state" is micro-batch trigger cycles +
-    // state-store commits (neither canary; replay machinery dominates).
-    // Adjudicated from the r10 356-vs-400 split: the gates that moved
-    // between artifacts were exactly the shuffle-tagged families while
-    // the CPU canary said the slower host was FASTER per-row.
-    val familyBound =
-      """{"dedup":"shuffle","embed":"shuffle","knn":"cpu","text":"cpu",""" +
-      """"train":"shuffle","curate":"shuffle","graph":"shuffle",""" +
-      """"behavior":"shuffle","stream":"harness+state","sessionize":"harness+state",""" +
-      """"agg":"cpu","join":"cpu","window":"cpu","sql":"cpu","setops":"cpu",""" +
-      """"asof":"cpu","skew":"shuffle","sketch":"cpu","aqp":"cpu","dp":"cpu",""" +
-      """"stats":"cpu","ts":"cpu","func":"cpu","core":"cpu","multimodal":"cpu",""" +
-      """"search":"cpu","decontaminate":"cpu","pii":"cpu","dq":"cpu",""" +
-      """"ingest":"cpu","pipeline":"harness+state","catalog":"cpu",""" +
-      """"upsert":"cpu","export":"cpu","schema":"cpu","store":"cpu",""" +
-      """"scd2":"cpu","meta":"cpu","approx":"cpu","yearly":"cpu"}"""
-    // BYTE BUDGET: the driver reads this subset off the last ~2 KB of
-    // the build log — the full map lives in BENCH_FULL.json. The r11
-    // line measured 2,140 bytes; additions must be paid for by
-    // removing equally many stable sub-second gates, or the driver
-    // records parsed:null (the round-3 failure mode).
-    val headline = Set(
-      "join_agg", "join_bucketed", "join_bloom", "join_range", "asof_join",
-      "skew_salted_join", "agg_percentiles", "agg_topk", "agg_cube",
-      "agg_heavy_hitters", "window_running_sum", "sessionize",
-      "dedup_exact", "dedup_minhash_bands", "dedup_clusters", "dedup_setsim",
-      "dedup_simhash_pairs", "dedup_semantic", "embed_neardup_lsh",
-      "knn_brute", "knn_ivf", "embed_clusters", "text_tfidf", "text_langid",
-      "text_tokens_bpe", "multimodal_frames",
-      "train_pipeline", "decontaminate", "stream_tumbling_append",
-      "stream_dedup", "stream_upsert_deltas_tws", "pipeline_run",
-      "ingest_parse", "yearly_revenue", "asof_join_native",
-      "text_lm_score", "curate_source_cap", "knn_filtered",
-      "knn_ivf_sampled", "stats_cuped", "text_bpe_train",
-      "train_token_budget", "behavior_attribution_linear",
-      "dedup_winnowing_pairs", "embed_lsh_recall",
-      // round-5 additions, one per new family
-      "dedup_rewrite", "graph_bfs_hops", "behavior_pattern_match",
-      "stream_pattern_match", "ts_concurrency", "meta_lineage",
-      "stream_checkpoint_resume", "join_point_in_time",
-      "store_backfill", "dedup_cross_source", "behavior_time_to_convert",
-      "stats_analyze",
-      // round-5 late additions
-      "graph_link_predict", "graph_kcore", "asof_join_nearest",
-      "stats_welch", "behavior_seq_support", "ts_rolling_slope",
-      "store_time_travel", "stream_asof", "behavior_markov_stationary",
-      "ts_bollinger",
-      // round-8/9/10 headline additions: the canonical-dedup pair the
-      // verdict tracks, the TTL-bounded stream dedup, the error-budget
-      // eval
-      "dedup_setsim_canonical", "dedup_canonical_incremental",
-      "stream_dedup_watermarked", "stream_neardup_ttl",
-      "approx_error_budget",
-      "sketch_hll_distinct",
-      "agg_q1_pricing", "join_q5_volume", "join_q19_disjunctive",
-      "agg_q6_forecast",
-      // round-11 additions, each a verdict-tracked criterion this
-      // round (set-sim agreement monitor, stream-stream outer joins,
-      // the two staged-index consumers); paid for by dropping
-      // window_topn / knn_pq_adc / sketch_kmv_union / aqp_uniform_sum
-      // / dp_sum_clipped / ts_twa / text_quality — all stable
-      // sub-second gates whose record continues in BENCH_FULL.json.
-      // MEMBERSHIP IS FROZEN from r12 (advice r11 #2): cross-round
-      // headline totals must measure the same set; new flagship gates
-      // go to BENCH_FULL and the verdict reads them there.
-      "dedup_method_agreement", "stream_stream_left", "stream_stream_full",
-      "dedup_containment", "dedup_cosine", "stream_sessionize")
-    // MEASUREMENT BASIS (advice r11): per-gate times are only
-    // comparable across rounds on an unchanged basis. Two basis shifts
-    // are on record, tagged here so a reader of round-over-round deltas
-    // knows which gates' drops are routing changes, not code speedups:
-    //  - r11 routed these gates onto pre-built staged corpus artifacts
-    //    (the warmup build above, now timed as staging_build_sec);
-    //  - r12 caches staged REPLAY inputs per (key × JVM), so stream
-    //    gates' pass-2+ times exclude the replay staging write jobs
-    //    (pass 1 still pays any cache miss; min-of-passes reads cached).
-    // Producer gates (dedup_minhash_bands, dedup_simhash_pairs,
-    // dedup_jaccard_exact, embed_neardup_lsh) stay inline end-to-end.
-    val basisJson =
-      """{"staged_r11":["dedup_setsim","dedup_setsim_canonical",""" +
-      """"dedup_canonical_incremental","dedup_method_agreement",""" +
-      """"dedup_canonical","dedup_clusters","dedup_clusters_star",""" +
-      """"dedup_cross_source","dedup_minhash_calibration","dedup_cosine",""" +
-      """"dedup_containment","embed_clusters","graph_modularity",""" +
-      """"graph_label_prop","graph_pagerank","graph_triangles",""" +
-      """"graph_component_sizes","graph_bfs_hops","graph_link_predict",""" +
-      """"graph_kcore"],""" +
-      """"replay_cached_r12":["stream_tumbling_append","stream_dedup",""" +
-      """"stream_dedup_watermarked","stream_upsert_latest",""" +
-      """"stream_upsert_deltas","stream_upsert_deltas_tws",""" +
-      """"stream_neardup_minhash","stream_neardup_ttl","stream_static_join",""" +
-      """"stream_cms","stream_stream_join","stream_stream_left",""" +
-      """"stream_stream_full","stream_sessionize","stream_pattern_match",""" +
-      """"stream_asof","stream_ewma","stream_psi","stream_sketch_distinct"]}"""
-    // Headline membership changed in r11 (6 added, 7 dropped); publish
-    // BOTH subtotals for the transition window so cross-round headline
-    // totals stay meaningful (advice r11 #2). Old basis = current set
-    // minus the r11 additions plus the r10 drops.
-    val r11Adds = Set("dedup_method_agreement", "stream_stream_left",
-      "stream_stream_full", "dedup_containment", "dedup_cosine",
-      "stream_sessionize")
-    val r10Drops = Set("window_topn", "text_quality", "knn_pq_adc",
-      "sketch_kmv_union", "aqp_uniform_sum", "dp_sum_clipped", "ts_twa")
-    try if (isArtifactRun) {
-      val hlNew = okResults.view.filterKeys(headline).values.sum
-      val hlOld = okResults.view
-        .filterKeys(k => (headline.contains(k) && !r11Adds.contains(k)) ||
-          r10Drops.contains(k)).values.sum
-      val w = new java.io.PrintWriter("BENCH_FULL.json")
-      try w.println(s"""{"metric":"total","value":${fmt(okResults.values.sum)},"unit":"sec","n":${okResults.size},"canary_version":$canaryVersion,"canary_sec":${fmt(canary)},"canary_rows":$canaryRows,"canary_shuffle_sec":${fmt(canaryShuffle)},"canary_shuffle_rows":$canaryShuffleRows,"staging_build_sec":$stagingJson,"headline_subtotal":${fmt(hlNew)},"headline_subtotal_r10basis":${fmt(hlOld)},"measurement_basis":$basisJson,"family_bound":$familyBound,"errors":$errJson,"queries":$full,"spread":${toJson(spreads, identity)},"prev_delta":${toJson(deltas, identity)},"sf":"${sfDir.split('/').last}"}""")
-      finally w.close()
-    } catch { case _: Throwable => () }
-    // scaling harness: SPARK_GRAFT_OUT=<path> dumps the complete
-    // per-query map for THIS run to an explicit path — any SF, any
-    // SPARK_GRAFT_ONLY subset — without touching the committed sf0.1
-    // artifact or its prev_delta chain. tools/scaling.py runs Bench
-    // once per SF and fits per-query scaling exponents from these.
-    // swallow-and-report like the artifact write above: a bad path must
-    // not crash Bench AFTER the full run completed and lose the stdout
-    // JSON line the driver reads.
-    // candidate-funnel census (scaling observability, r11 verdict #4):
-    // computed only for SPARK_GRAFT_CAND_STATS runs (tools/scaling.py),
-    // after every timed pass — extra jobs, never inside a timing window
-    val funnelJson: String =
-      if (!sys.env.get("SPARK_GRAFT_CAND_STATS").contains("1")) ""
-      else try {
-        val (cands, surv, ver) =
-          graft.operators.Dedup.containmentFunnel(spark, sfDir)
-        s""","containment_funnel":{"cand_pairs":$cands,"ub_survivors":$surv,"verified":$ver}"""
+        val w = new java.io.PrintWriter(path)
+        try w.println(body) finally w.close()
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] containment funnel failed: $e"); ""
+        System.err.println(s"[bench] write of $path failed: $e")
       }
-    try sys.env.get("SPARK_GRAFT_OUT").foreach { p =>
-      val w = new java.io.PrintWriter(p)
-      try w.println(s"""{"metric":"total","value":${fmt(okResults.values.sum)},"unit":"sec","n":${okResults.size},"canary_version":$canaryVersion,"canary_sec":${fmt(canary)},"canary_rows":$canaryRows,"canary_shuffle_sec":${fmt(canaryShuffle)},"canary_shuffle_rows":$canaryShuffleRows,"staging_build_sec":$stagingJson$funnelJson,"errors":$errJson,"queries":$full,"sf":"${sfDir.split('/').last}"}""")
-      finally w.close()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] SPARK_GRAFT_OUT write failed: $e")
+    if (record.sf == "sf0.1" && only.isEmpty)
+      write("BENCH_FULL.json", record.full())
+    outPath.foreach { p =>
+      // candidate-funnel census, after every timed pass: extra jobs,
+      // never inside a timing window
+      val funnel =
+        try Some(graft.operators.Dedup.containmentFunnel(spark, sfDir))
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] containment funnel failed: $e"); None
+        }
+      write(p, record.full(funnel))
     }
-    val qs = toJson(okResults.view.filterKeys(headline).toMap, identity)
-    // Spreads in the STDOUT line too: the driver's round artifact is
-    // built from this line under a bounded capture, so "spread < N s"
-    // done-criteria must be adjudicable from the DRIVER artifact, not
-    // only from the committed BENCH_FULL.json (r11 verdict #3 — three
-    // rounds of narration-based adjudication). Kept compact — the 16
-    // slowest headline gates, where every such criterion has lived —
-    // and placed BEFORE the queries map so a head-bounded capture
-    // cannot cut it; the full 313-gate map stays in BENCH_FULL.json.
-    val spreadWatch = okResults.view.filterKeys(headline).toSeq
-      .sortBy(-_._2).take(16).map(_._1)
-      .flatMap(k => spreads.get(k).map(k -> _)).toMap
-    val total = if (okResults.nonEmpty) okResults.values.sum else 0.0
-    val sfTag = sfDir.split('/').last
-    // `tail` REPEATS the head-of-line scalars AFTER the queries map
-    // (additions-only; r12 verdict #8): the driver's bounded log capture
-    // once cut the head of this line and lost a whole round's
-    // round-over-round comparison (PERF_r12 prev_bench_ok=false with a
-    // healthy artifact on disk). With the scalars duplicated inside the
-    // last ~200 bytes, either a head- or tail-bounded capture can
-    // reconstruct total/canary/staging.
-    val tailJson = s""""tail":{"value":${fmt(total)},"n":${okResults.size},"canary_version":$canaryVersion,"canary_sec":${fmt(canary)},"canary_shuffle_sec":${fmt(canaryShuffle)},"staging_sec":$stagingJson,"sf":"$sfTag"}"""
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${okResults.size},"canary_version":$canaryVersion,"canary_sec":${fmt(canary)},"canary_rows":$canaryRows,"canary_shuffle_sec":${fmt(canaryShuffle)},"canary_shuffle_rows":$canaryShuffleRows,"staging_sec":$stagingJson,"errors":$errJson,"spread":${toJson(spreadWatch, identity)},"queries":$qs,$tailJson,"sf":"$sfTag"}""")
+    println(record.line)
     spark.stop()
   }
 }

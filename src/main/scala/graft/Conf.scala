@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level tuning knobs (SCALE.md "bucket-count knobs" gap):
+/** Session-level tuning knobs (SCALE.md "Tuning knobs"):
   * read from `spark.conf` with engine defaults, so a deployment tunes
   * task sizing without code changes — e.g.
   * `--conf spark.graft.neardup.groups=64` on a large cluster.

@@ -168,7 +168,8 @@ object PlanDump extends AdaptiveSparkPlanHelper {
         case None => "(no such gate)\n"
         case Some(fn) =>
           try {
-            val (_, ex) = executed(spark)(Bench.materialize(fn(spark, sfDir)))
+            val (_, ex) = SparkEntry.isolated(spark)(
+              executed(spark)(Bench.materialize(fn(spark, sfDir))))
             ex.zipWithIndex.map { case (e, i) =>
               // the heavies' plans run to hundreds of lines of
               // per-column detail; the operator tree carries the shape
@@ -178,10 +179,6 @@ object PlanDump extends AdaptiveSparkPlanHelper {
               s"### ${i + 1}. `${e.funcName}`\n\n```\n${shown.mkString("\n")}\n```\n"
             }.mkString("\n")
           } catch { case e: Throwable => s"(failed: ${e.getMessage})\n" }
-          finally {
-            spark.catalog.clearCache()
-            graft.streaming.EventStream.purgeStaging()
-          }
       }
       s"\n## $name\n\n$body"
     }.mkString

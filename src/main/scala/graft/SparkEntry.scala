@@ -2,7 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** A module that contributes gates to the registry: each gate name
+  * maps to the query that builds its result (`queries`) and to the
+  * DuckDB SQL that computes the same result (`oracles`), over the same
+  * key set. */
+trait GateModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
+}
+
+/** The gate registry — see SURVEY.md §7.
   *
   * Aggregates the full operator inventory: core declared-SQL surface
   * (analytics.CoreQueries), join/window/set-op surface
@@ -10,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * upsert (operators.Upsert), dedup + similarity + multimodal extensions
   * (operators.*), text analysis (functions.TextAnalysis) and streaming
   * (streaming.EventStream). Every SQL-expressible query has a DuckDB
-  * oracle with identical column aliases.
+  * oracle with identical column aliases. Each module that defines
+  * gates extends [[GateModule]] and is listed once in [[modules]].
   */
 object SparkEntry {
 
@@ -18,118 +28,60 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     analytics.JoinQueries.joinAgg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every gate module, each listed once: a new module's gates join
+    * the registry by being added here. */
+  val modules: Seq[GateModule] = Seq(
+    analytics.CoreQueries, analytics.JoinQueries, sources.AlphaVantage,
+    operators.Upsert, operators.Dedup, operators.Similarity,
+    operators.Multimodal, functions.TextAnalysis, streaming.EventStream,
+    store.Catalog, pipeline.StockPipeline, streaming.Sessionize,
+    operators.SkewJoin, operators.AsofJoin, operators.RangeJoin,
+    analytics.OlapQueries, analytics.FunctionQueries, functions.TopK,
+    store.Bucketing, operators.TrainPrep, operators.Decontaminate,
+    operators.Incremental, streaming.StreamJoin, analytics.TimeSeries,
+    operators.BloomJoin, operators.Scd, store.Zorder,
+    streaming.ForeachBatchSink, operators.TableDiff,
+    analytics.BehaviorQueries, analytics.DataQuality, store.Partitioned,
+    store.Compaction, store.ZoneMap, analytics.Retrieval,
+    analytics.StatsQueries, analytics.Skyline, operators.GramMatrix,
+    store.MaterializedView, analytics.MarketBasket, store.BloomIndex,
+    streaming.StreamEwma, streaming.StreamDrift, streaming.StreamPattern,
+    streaming.StreamCheckpoint, store.Backfill, store.TimeTravel,
+    streaming.StreamAsof, plans.Lineage, analytics.Aqp, analytics.Sketches,
+    analytics.Privacy, streaming.StreamSketch, plans.ApproxRewrite)
+
+  /** Every gate: name → the query that builds its result. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    analytics.CoreQueries.queries ++
-      analytics.JoinQueries.queries ++
-      sources.AlphaVantage.queries ++
-      operators.Upsert.queries ++
-      operators.Dedup.queries ++
-      operators.Similarity.queries ++
-      operators.Multimodal.queries ++
-      functions.TextAnalysis.queries ++
-      streaming.EventStream.queries ++
-      store.Catalog.queries ++
-      pipeline.StockPipeline.queries ++
-      streaming.Sessionize.queries ++
-      operators.SkewJoin.queries ++
-      operators.AsofJoin.queries ++
-      operators.RangeJoin.queries ++
-      analytics.OlapQueries.queries ++
-      analytics.FunctionQueries.queries ++
-      functions.TopK.queries ++
-      store.Bucketing.queries ++
-      operators.TrainPrep.queries ++
-      operators.Decontaminate.queries ++
-      operators.Incremental.queries ++
-      streaming.StreamJoin.queries ++
-      analytics.TimeSeries.queries ++
-      operators.BloomJoin.queries ++
-      operators.Scd.queries ++
-      store.Zorder.queries ++
-      streaming.ForeachBatchSink.queries ++
-      operators.TableDiff.queries ++
-      analytics.BehaviorQueries.queries ++
-      analytics.DataQuality.queries ++
-      store.Partitioned.queries ++
-      store.Compaction.queries ++
-      store.ZoneMap.queries ++
-      analytics.Retrieval.queries ++
-      analytics.StatsQueries.queries ++
-      analytics.Skyline.queries ++
-      operators.GramMatrix.queries ++
-      store.MaterializedView.queries ++
-      analytics.MarketBasket.queries ++
-      store.BloomIndex.queries ++
-      streaming.StreamEwma.queries ++
-      streaming.StreamDrift.queries ++
-      streaming.StreamPattern.queries ++
-      streaming.StreamCheckpoint.queries ++
-      store.Backfill.queries ++
-      store.TimeTravel.queries ++
-      streaming.StreamAsof.queries ++
-      plans.Lineage.queries ++
-      analytics.Aqp.queries ++
-      analytics.Sketches.queries ++
-      analytics.Privacy.queries ++
-      streaming.StreamSketch.queries ++
-      plans.ApproxRewrite.queries
+    modules.foldLeft(Map.empty[String, (SparkSession, String) => DataFrame])(
+      _ ++ _.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check. */
+    * the same parquet tables; EntrySpec checks the two key sets match. */
   def oracleSql: Map[String, String] =
-    analytics.CoreQueries.oracles ++
-      analytics.JoinQueries.oracles ++
-      sources.AlphaVantage.oracles ++
-      operators.Upsert.oracles ++
-      operators.Dedup.oracles ++
-      operators.Similarity.oracles ++
-      operators.Multimodal.oracles ++
-      functions.TextAnalysis.oracles ++
-      streaming.EventStream.oracles ++
-      store.Catalog.oracles ++
-      pipeline.StockPipeline.oracles ++
-      streaming.Sessionize.oracles ++
-      operators.SkewJoin.oracles ++
-      operators.AsofJoin.oracles ++
-      operators.RangeJoin.oracles ++
-      analytics.OlapQueries.oracles ++
-      analytics.FunctionQueries.oracles ++
-      functions.TopK.oracles ++
-      store.Bucketing.oracles ++
-      operators.TrainPrep.oracles ++
-      operators.Decontaminate.oracles ++
-      operators.Incremental.oracles ++
-      streaming.StreamJoin.oracles ++
-      analytics.TimeSeries.oracles ++
-      operators.BloomJoin.oracles ++
-      operators.Scd.oracles ++
-      store.Zorder.oracles ++
-      streaming.ForeachBatchSink.oracles ++
-      operators.TableDiff.oracles ++
-      analytics.BehaviorQueries.oracles ++
-      analytics.DataQuality.oracles ++
-      store.Partitioned.oracles ++
-      store.Compaction.oracles ++
-      store.ZoneMap.oracles ++
-      analytics.Retrieval.oracles ++
-      analytics.StatsQueries.oracles ++
-      analytics.Skyline.oracles ++
-      operators.GramMatrix.oracles ++
-      store.MaterializedView.oracles ++
-      analytics.MarketBasket.oracles ++
-      store.BloomIndex.oracles ++
-      streaming.StreamEwma.oracles ++
-      streaming.StreamDrift.oracles ++
-      streaming.StreamPattern.oracles ++
-      streaming.StreamCheckpoint.oracles ++
-      store.Backfill.oracles ++
-      store.TimeTravel.oracles ++
-      streaming.StreamAsof.oracles ++
-      plans.Lineage.oracles ++
-      analytics.Aqp.oracles ++
-      analytics.Sketches.oracles ++
-      analytics.Privacy.oracles ++
-      streaming.StreamSketch.oracles ++
-      plans.ApproxRewrite.oracles
+    modules.foldLeft(Map.empty[String, String])(_ ++ _.oracles)
+
+  /** The gates `only` names (every gate when it is None), and the
+    * names in `only` that no module defines, sorted. Callers report
+    * the unknown names as errors, so a mistyped filter never reads as
+    * a clean run. */
+  def select(only: Option[Set[String]])
+      : (Map[String, (SparkSession, String) => DataFrame], Seq[String]) = {
+    val all = queries
+    only.fold((all, Seq.empty[String])) { names =>
+      (all.filter { case (name, _) => names(name) },
+        names.toSeq.filterNot(all.contains).sorted)
+    }
+  }
+
+  /** Runs one gate's work, then drops what a gate may leave behind:
+    * its persisted intermediates (the session cache) and the replay
+    * staging dirs of stream gates. Every caller that runs gates one
+    * after another goes through here, so no gate runs or is measured
+    * under the state of the one before it. */
+  def isolated[T](spark: SparkSession)(body: => T): T =
+    try body
+    finally {
+      spark.catalog.clearCache()
+      streaming.EventStream.purgeStaging()
+    }
 }

@@ -92,13 +92,11 @@ object StreamScale {
         : Option[(Long, Long, Long, Long, Long, Long)] = {
       StreamMetrics.clear()
       val ok =
-        try { Bench.materialize(run); true }
+        try { SparkEntry.isolated(spark)(Bench.materialize(run)); true }
         catch { case e: Throwable =>
           System.err.println(s"[streamscale] $tag FAILED: ${e.getMessage}")
           false
         }
-      spark.catalog.clearCache()
-      graft.streaming.EventStream.purgeStaging()
       // a gate may run several queries (e.g. static prep); sum them
       val ss = StreamMetrics.snapshot.values
       if (!ok || ss.isEmpty) None else Some((

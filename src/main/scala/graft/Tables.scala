@@ -169,10 +169,6 @@ object Tables {
     filtered.withColumn("ts", tsNormalizer(raw.schema("ts").dataType))
   }
 
-  /** Register every table as a temp view so spark.sql(...) works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    register(spark, dir, names: _*)
-
   /** Register only the named tables (a view registration reads parquet
     * footers, so SQL-path queries register just what they touch). */
   def register(spark: SparkSession, dir: String, tables: String*): Unit =
@@ -198,10 +194,6 @@ object Tables {
 
   /** Order-independent sum of a money-like double column. */
   def dsum(c: Column): Column = sum(dec(c)).cast("double")
-
-  /** Order-independent average of a money-like double column. */
-  def davg(c: Column): Column =
-    (sum(dec(c)) / count(c)).cast("double")
 
   /** Order-independent revenue-style sum of a PRODUCT of two money-like
     * doubles (`sum(price * (1 - discount))` et al.): exact decimal

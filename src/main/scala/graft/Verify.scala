@@ -5,6 +5,19 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
+  /** A JSON string literal. Escapes backslash, quote and ALL control
+    * chars (< 0x20): a tab or CR in oracle SQL would otherwise make the
+    * compare's json.load fail and silently read as zero correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The dump body, factored out of [[main]] so VerifyContractSpec can
     * drive it (including the degraded path) on the shared test session.
     * Returns the per-query error map that [[main]] reports; ALWAYS
@@ -17,40 +30,31 @@ object Verify {
       only: Option[Set[String]] = None): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val (gates, unknown) = SparkEntry.select(only)
+    unknown.foreach { name =>
+      System.err.println(s"[verify] $name failed: no such gate")
+      errors(name) = "no such gate"
+    }
+    gates.foreach { case (name, fn) =>
+      // the parquet dump materializes the result, so the reset after
+      // it drops nothing a later step still reads
+      try SparkEntry.isolated(spark) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")
         errors(name) = msg.linesIterator.take(3).mkString(" | ").take(500)
       }
-      finally {
-        spark.catalog.clearCache() // drop per-query persists
-        // the parquet dump above materialized the result, so this
-        // gate's replay staging dirs are no longer referenced
-        graft.streaming.EventStream.purgeStaging()
-      }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     if (errors.nonEmpty)
       System.err.println(

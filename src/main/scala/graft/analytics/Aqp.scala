@@ -31,7 +31,7 @@ import graft.Tables
   * `DIV` operands (abs before divide — Spark truncates toward zero,
   * DuckDB floors; they agree only above zero).
   */
-object Aqp {
+object Aqp extends graft.GateModule {
 
   /** glibc-rand LCG; key is pre-reduced mod the ODD PRIME P so
     * `key*A + C` is exact in a long for ANY 64-bit row key

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * relies on Spark's native `window(ts, dur, hop)` slot generator —
   * rows expand map-side by exactly dur/hop slots, then one hash
   * aggregation; no self-join, no range join. */
-object BehaviorQueries {
+object BehaviorQueries extends graft.GateModule {
 
   /** RFM customer segmentation — the retention-marketing workhorse:
     * per user, Recency (days since last purchase, against the corpus

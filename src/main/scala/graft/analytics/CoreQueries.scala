@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * combine), sorts are either TakeOrderedAndProject (T1) or after
   * aggregation (tiny), and filters/pruning push into the parquet scan.
   */
-object CoreQueries {
+object CoreQueries extends graft.GateModule {
 
   /** A1: hash agg — count + max per group. */
   def recordsPerGroup(spark: SparkSession, dir: String): DataFrame =

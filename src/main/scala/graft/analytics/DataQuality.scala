@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Output is a fixed (check, violations) report: green = all zeros,
   * and the gate hash-checks exact violation counts, not just pass/fail. */
-object DataQuality {
+object DataQuality extends graft.GateModule {
 
   def audit(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(spark, dir, "lineitem")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * field extraction, string/regex manipulation, and the ranked-window
   * family. All row-level (single codegen stage over a pruned, pushed
   * scan) except the window query (one keyed sort). */
-object FunctionQueries {
+object FunctionQueries extends graft.GateModule {
 
   /** JSON access: extract props.k per event and aggregate. */
   def jsonFuncs(spark: SparkSession, dir: String): DataFrame =

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *  - windows partition by high-cardinality keys (customer, user) so no
   *    single partition holds more than one key's rows.
   */
-object JoinQueries {
+object JoinQueries extends graft.GateModule {
 
   /** Fact-fact-dim join + grouped revenue (decimal-exact). */
   def joinAgg(spark: SparkSession, dir: String): DataFrame = {

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * This is exactly how distributed frequent-itemset mining shapes its
   * candidate-2 pass; higher-order itemsets iterate the same join.
   */
-object MarketBasket {
+object MarketBasket extends graft.GateModule {
 
   /** Minimum pair co-occurrence count to emit a rule. */
   val minSupport = 3

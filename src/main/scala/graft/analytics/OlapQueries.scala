@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (at 100 TB the approx_percentile sketch is the drop-in), and HLL
   * (approx_count_distinct) is the designated cardinality sketch from
   * SURVEY.md §2.4. */
-object OlapQueries {
+object OlapQueries extends graft.GateModule {
 
   /** TPC-H Q1 shape (pricing summary report) — the single most-quoted
     * OLAP aggregation, rendered in this engine's integer-exact money

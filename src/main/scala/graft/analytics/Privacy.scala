@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * pushed-down scan; the noise arithmetic runs on the GROUP rows
   * (5 here, bounded by group cardinality), never on the corpus.
   */
-object Privacy {
+object Privacy extends graft.GateModule {
 
   /** 3-stage hash of an integer expression: two LCG rounds, xorshift
     * fold, final LCG round — uniform on [0, 2^31). xor and

@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * is a |q|-partition window rank — WindowGroupLimit pushes the k cut
   * below the sort at every executor.
   */
-object Retrieval {
+object Retrieval extends graft.GateModule {
 
   /** Fixed keyword query set (query_id → terms). Term choice spans the
     * df spectrum of the synthetic vocabulary: `dup` is rare (high idf),

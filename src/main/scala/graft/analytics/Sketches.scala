@@ -52,7 +52,7 @@ import graft.Tables
   * BIGINT via `DIV` with non-negative operands (Spark truncates toward
   * zero, DuckDB floors — they agree only above zero).
   */
-object Sketches {
+object Sketches extends graft.GateModule {
 
   private val A = 1103515245L
   private val C = 12345L

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * partition — banned at scale) or a quadratic self-join. The output
   * is the EXACT skyline regardless of partitioning — the spec
   * reshuffles and re-runs to pin partition-invariance. */
-object Skyline {
+object Skyline extends graft.GateModule {
 
   /** One sweep: sort by price desc / date desc, walk price GROUPS in
     * descending order keeping a running `m` = max date over strictly

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * null counts, distinct counts, min/max. At 100 TB the stats job IS a
   * query — it must be one scan, not one scan per column.
   */
-object StatsQueries {
+object StatsQueries extends graft.GateModule {
 
   /** Columns profiled by [[analyzeTable]].
     *

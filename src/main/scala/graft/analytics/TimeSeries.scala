@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * running `last(ignoreNulls)` window per key — same single exchange as
   * any per-key window, with the chunked-window pattern
   * (`window_running_sum_chunked`) available for pathological keys. */
-object TimeSeries {
+object TimeSeries extends graft.GateModule {
 
   /** Hourly (event_type, hour) grid over each type's observed span,
     * with empty buckets filled as cnt=0 / val_sum=0.0. */

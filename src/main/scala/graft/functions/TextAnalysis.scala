@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * UDFs, no shuffles, fully parallel at any scale; each runs in a single
   * WholeStageCodegen pass over the scan.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.GateModule {
 
   /** Whitespace tokenization (single-space corpus; a BPE-ish regex
     * variant is `split(text, "\\s+|(?=\\p{Punct})")` for real corpora). */

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * rows regardless of input size. Deterministic tie-break on
   * (score desc, key asc) keeps it oracle-comparable.
   */
-object TopK {
+object TopK extends graft.GateModule {
 
   case class Scored(score: Double, key: Long)
 

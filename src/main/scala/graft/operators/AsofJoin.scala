@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * per key. (DuckDB expresses the same operator natively as ASOF JOIN,
   * which is the oracle.)
   */
-object AsofJoin {
+object AsofJoin extends graft.GateModule {
 
   /** Generic form: left/right must share `key`; both need `ts`.
     * Emits right rows with the as-of matched left columns (nullable).

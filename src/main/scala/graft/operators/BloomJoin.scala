@@ -39,7 +39,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * but its retention scan (scripts/retention.py:10-14) is the
   * scan-reduction idea this generalizes to joins.
   */
-object BloomJoin {
+object BloomJoin extends graft.GateModule {
 
   /** False-positive probability for the pre-filter. 1% costs ~9.6 bits
     * per key and removes ~99% of the non-matching shuffle volume. */

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * avoids). At 100 TB: one pass over the corpus to shingle (shuffle-free
   * generate), one broadcast join, one doc-keyed count.
   */
-object Decontaminate {
+object Decontaminate extends graft.GateModule {
 
   /** Overlap n-gram width. 5 keeps the collision signal sparse but
     * non-trivial on the synthetic corpus (~30-word vocabulary);

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
 case class StagingGeneration(family: String, name: String, done: Boolean,
     ageMs: Long, bytes: Long)
 
-object Dedup {
+object Dedup extends graft.GateModule {
 
   /** Distinct word-trigram shingles of the token array (docs here always
     * have >= 3 tokens; callers filter otherwise). Column form — used

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * The d² fan-out per row is not overhead — it IS the Gram matrix's
   * O(n·d²) multiply count; no alternative shape does fewer multiplies.
   */
-object GramMatrix {
+object GramMatrix extends graft.GateModule {
 
   /** Fixed quantization grid (thousandths). */
   val gridScale = 1000.0

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * exactly the DuckDB oracle. The same algebra is what makes partial
   * (map-side) aggregation, AQE re-planning, and retry idempotence safe
   * everywhere else in the engine. */
-object Incremental {
+object Incremental extends graft.GateModule {
 
   /** Deterministic "late data" rule — a fifth of events arrive in the
     * delta batch. */

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * proof the decode-stage architecture carries a genuine file format,
   * not only the stub.
   */
-object Multimodal {
+object Multimodal extends graft.GateModule {
 
   case class Asset(asset_id: Long, kind: String, payload: Array[Byte])
   case class DecodedMeta(asset_id: Long, kind: String, byte_len: Long,

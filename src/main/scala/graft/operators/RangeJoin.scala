@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * hi/width buckets) against bucket fan-in, exactly like the triangle
   * join's group count.
   */
-object RangeJoin {
+object RangeJoin extends graft.GateModule {
 
   /** Fixed price bands over o_totalprice (half-open [lo, hi)). A
     * literal dimension so the gate is deterministic; at scale this is

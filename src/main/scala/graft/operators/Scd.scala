@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * the surviving change rows). Timestamps are second-floored on output
   * like `ts_fill_forward` (the corpus clock is ns in DuckDB, micros
   * here); ordering uses the raw timestamp with event_id tiebreak. */
-object Scd {
+object Scd extends graft.GateModule {
 
   private val w =
     Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    Centroids here are a deterministic subsample (vec_id % 97 == 0)
   *    standing in for k-means (which would be an offline job at scale).
   */
-object Similarity {
+object Similarity extends graft.GateModule {
 
   private def asD(c: Column): Column = c.cast("array<double>")
 

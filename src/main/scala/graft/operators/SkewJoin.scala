@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * for sort-merge joins; explicit salting is the deterministic form
   * that also works for aggregations and doesn't depend on runtime
   * stats.) */
-object SkewJoin {
+object SkewJoin extends graft.GateModule {
 
   val Salt = 8
 

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * At 100 TB the op is bounded by the table scan + one co-partitioned
   * join — the minimum any byte-accurate diff must pay.
   */
-object TableDiff {
+object TableDiff extends graft.GateModule {
 
   /** Classify rows of `after` vs `before` by `keys`. All non-key
     * columns participate in the equality via one null-safe struct

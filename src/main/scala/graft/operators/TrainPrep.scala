@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *  - curation is survivor-join ∘ quality-filter ∘ lang-gate — each
   *    stage is an operator this engine already gates individually.
   */
-object TrainPrep {
+object TrainPrep extends graft.GateModule {
 
   /** Row shapes for the packing kernel (top-level-object nested case
     * classes get stable encoders). */

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * partition (dynamic partition overwrite prunes untouched partitions);
   * the merge itself stays a single hash-partitioned exchange either way.
   */
-object Upsert {
+object Upsert extends graft.GateModule {
 
   /** Merge `batch` into `current`. Both must share a schema.
     * @param keys      conflict key columns

@@ -254,7 +254,7 @@ class Scheduler(
   }
 }
 
-object StockPipeline {
+object StockPipeline extends graft.GateModule {
 
   case class SymbolResult(symbol: String, success: Boolean, records: Long)
 

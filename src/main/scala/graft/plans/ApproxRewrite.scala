@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions.{col, count_distinct, expr}
   * The rewrite output contains no distinct Count, so the rule is a
   * fixed-point no-op on its own output.
   */
-object ApproxRewrite extends Rule[LogicalPlan] {
+object ApproxRewrite extends Rule[LogicalPlan] with graft.GateModule {
 
   val Flag = "spark.graft.approx.countDistinct"
   val RsdKey = "spark.graft.approx.rsd"

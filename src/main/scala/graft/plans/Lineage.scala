@@ -26,7 +26,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LeafNode, Logical
   * nature — the input is the plan tree, not data — so the operator
   * costs O(plan size) regardless of corpus scale.
   */
-object Lineage {
+object Lineage extends graft.GateModule {
 
   /** (table, column) sources keyed by ExprId. The INNERMOST
     * SubqueryAlias is the relation boundary: that is how temp-view /

@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   * codegen'd, no UDFs — so at scale the parse runs inside one
   * WholeStageCodegen span per partition of raw payloads.
   */
-object AlphaVantage {
+object AlphaVantage extends graft.GateModule {
 
   val barSchema: StructType = StructType(Seq(
     StructField("1. open", StringType),

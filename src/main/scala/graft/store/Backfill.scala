@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * calendar (one row per damaged DAY), the standard bounded-scalar
   * pattern. Re-runs are deterministic: damage → detect → repair is a
   * fixed cycle regardless of prior table state. */
-object Backfill {
+object Backfill extends graft.GateModule {
 
   private def sfTag(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9]", "_")

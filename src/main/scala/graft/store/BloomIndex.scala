@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * residual filter — false positives cost scan bytes, never wrong
   * rows, which is what the plain-filter oracle proves.
   */
-object BloomIndex {
+object BloomIndex extends graft.GateModule {
 
   /** Files the hash-clustered copy is written into. */
   val nFiles = 16

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * re-attaches the existing LOCATION) runs idempotently every session;
   * the data itself is written once per scale factor.
   */
-object Bucketing {
+object Bucketing extends graft.GateModule {
 
   /** Local-mode default; `spark.graft.bucketing.buckets` overrides (at
     * 100 TB size for ~128-512 MB per bucket file). The count is part of

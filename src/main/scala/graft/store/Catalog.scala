@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * declared. Tables are plain managed parquet tables — at scale they'd
   * be date-partitioned (see Upsert.writePartitioned).
   */
-object Catalog {
+object Catalog extends graft.GateModule {
 
   val tableNames: Seq[String] = Seq("stock_data", "stock_metadata", "pipeline_logs")
 

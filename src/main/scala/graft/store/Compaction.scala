@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * it against the ORIGINAL table through a fragment→compact round
   * trip).
   */
-object Compaction {
+object Compaction extends graft.GateModule {
 
   /** Gate/spec byte target, sized so the fragmented gate input
     * compacts to a handful of files at every SF. Production: 256 MB

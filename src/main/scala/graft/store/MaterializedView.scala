@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.DecimalType
   * count/sum-shaped state from an append delta), so the rule +
   * registry is the missing read-side half of a full MV subsystem.
   */
-object MaterializedView {
+object MaterializedView extends graft.GateModule {
 
   private val decT = DecimalType(18, 4)
 

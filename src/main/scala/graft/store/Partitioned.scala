@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * columns a production deployment would partition on; this gate
   * proves the engine turns such layouts into pruned scans.
   */
-object Partitioned {
+object Partitioned extends graft.GateModule {
 
   private def sfTag(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9]", "_")

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * the check proves the pinned read returns the OLD state after the
   * new write landed. Re-runs overwrite both snapshots deterministically.
   */
-object TimeTravel {
+object TimeTravel extends graft.GateModule {
 
   /** Version-1 high watermark (mid-corpus, both halves populated). */
   val asOfSplit = "2024-01-16 00:00:00"

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * exactly what the gate's oracle (a plain filter over the ORIGINAL
   * table) proves, while the spec proves files were actually skipped.
   */
-object ZoneMap {
+object ZoneMap extends graft.GateModule {
 
   /** Files the sorted copy is binned into — enough that the gate's
     * range predicate demonstrably skips most of them. */

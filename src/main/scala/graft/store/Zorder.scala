@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * UDF, no shuffle beyond the range partitioning the write pays anyway.
   * Dimensions are clamped to 16 bits after normalization (user ids are
   * small; event hours are offset from the corpus epoch so they fit). */
-object Zorder {
+object Zorder extends graft.GateModule {
 
   val bits = 16
   private val mask = (1 << bits) - 1

@@ -34,7 +34,7 @@ case class BandHitT(band_id: Int, bucket: Long, doc_id: Long,
   * `withWatermark("ts", ...)` + append mode and a real sink; complete
   * mode + memory sink is the deterministic offline harness form.
   */
-object EventStream {
+object EventStream extends graft.GateModule {
 
   def streamTumbling(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {
@@ -259,8 +259,7 @@ object EventStream {
     * outer joins stage the same purchase files), so without this
     * every pass pays the same coalesce(1)/union write jobs again.
     * A gate's FIRST run in a JVM still pays the build (cache miss);
-    * min-of-passes therefore reads the cached form — tagged in
-    * BENCH_FULL's measurement_basis so round deltas aren't misread.
+    * min-of-passes therefore reads the cached form.
     * purgeStaging() never touches the cache (per-gate staging dirs
     * stay per-gate); cache dirs die with the JVM's shutdown hook. */
   private[streaming] def stageReplayCached(key: String)

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * Per-trigger work scales with the touched buckets, never the table —
   * the 100 TB serving-table story. The emitted final table equals the
   * batch LWW answer, which is the oracle. */
-object ForeachBatchSink {
+object ForeachBatchSink extends graft.GateModule {
 
   def streamForeachBatchMerge(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {

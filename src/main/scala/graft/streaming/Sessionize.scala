@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *    count) triple per user, TTL'd by watermark in production).
   * The spec asserts both produce the same sessions.
   */
-object Sessionize {
+object Sessionize extends graft.GateModule {
 
   val gapMinutes = 30
 

@@ -34,7 +34,7 @@ case class AsofMatch(purchase_id: Long, user_id: Long,
   * state carry demonstrably runs, and asserts stream == batch; the
   * gate shares the batch gate's DuckDB ASOF oracle, closing the
   * three-way stream == batch == native-ASOF equivalence. */
-object StreamAsof {
+object StreamAsof extends graft.GateModule {
 
   /** Fold one user's in-order events through the O(1) view state,
     * emitting a match per purchase — micro-batch-split-invariant

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * exactly-once in the store. At 100 TB nothing changes — the offset
   * log and commit log are O(batches), the sink layout is
   * O(partitions per batch). */
-object StreamCheckpoint {
+object StreamCheckpoint extends graft.GateModule {
 
   def checkpointResume(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {

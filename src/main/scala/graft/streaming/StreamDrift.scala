@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * each day's drift cells when its window closes; the reference side
   * broadcasts (|types|·bins rows).
   */
-object StreamDrift {
+object StreamDrift extends graft.GateModule {
 
   import EventStream.{streamShufflePartitions, withConf}
 

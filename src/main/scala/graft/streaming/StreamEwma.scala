@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.DecimalType
   * the other streaming gates, so state demonstrably carries the
   * smoothing window across micro-batch boundaries.
   */
-object StreamEwma {
+object StreamEwma extends graft.GateModule {
 
   case class Bar(event_type: String, h: java.sql.Timestamp, x_q4: Long)
   case class EwmaHist(recent: List[Long])

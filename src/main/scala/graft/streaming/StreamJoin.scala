@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * (`unix_timestamp` diff here, `date_diff('second')` in the oracle,
   * both floor); the raw-timestamp range bounds are strictly wider than
   * the floored test, so they only ever bound state, never the output. */
-object StreamJoin {
+object StreamJoin extends graft.GateModule {
 
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {

@@ -41,7 +41,7 @@ case class PatOut(user_id: Long, n_events: Long, n_conversions: Long)
   * equal to the batch gate by the spec. Per-trigger group buffers are
   * bounded by a user's events per trigger — production bounds that by
   * watermark-paced triggers, state itself never grows. */
-object StreamPattern {
+object StreamPattern extends graft.GateModule {
 
   /** One automaton transition — the whole streaming operator reduces
     * to folding this over a user's events in time order, which is what

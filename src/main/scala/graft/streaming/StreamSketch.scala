@@ -26,7 +26,7 @@ import graft.analytics.Sketches
   * gate's, and StreamingSpec asserts frame equality between the two:
   * one sketch definition, two execution modes, one oracle.
   */
-object StreamSketch {
+object StreamSketch extends graft.GateModule {
 
   def streamHllDistinct(spark: SparkSession, dir: String): DataFrame =
     EventStream.withConf(spark, "spark.sql.shuffle.partitions",

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{col, count, lit, struct, sum, xxhash64}
   * Per gate: run the gate and one count-plus-hash aggregate over its
   * result (the Bench materialization shape, plus the row count) under
   * [[PlanDump.executed]], note whether the session cache registry is
-  * empty, then clear the cache and purge replay staging so the next
+  * empty, then reset through [[SparkEntry.isolated]] so the next
   * gate's record is not polluted by this one. */
 object SurfacePass {
 
@@ -27,7 +27,7 @@ object SurfacePass {
     spark.catalog.clearCache()
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val gate =
-        try {
+        try SparkEntry.isolated(spark) {
           val (rows, executed) = PlanDump.executed(spark) {
             val df = fn(spark, SparkTestSession.sf)
             df.agg(count(lit(1)),
@@ -39,9 +39,6 @@ object SurfacePass {
           Gate(0L, cacheEmpty = true,
             Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120)),
             Nil)
-        } finally {
-          spark.catalog.clearCache()
-          graft.streaming.EventStream.purgeStaging()
         }
       name -> gate
     }.toMap

@@ -29,6 +29,15 @@ class VerifyContractSpec extends AnyFunSuite {
       assert(oracle.contains("\"" + k + "\""), s"oracle_sql misses $k"))
   }
 
+  test("filter with an unknown gate name: it is an error, real gates still run") {
+    val out = java.nio.file.Files.createTempDirectory("verify_typo").toString
+    val errors = Verify.run(spark, SparkTestSession.sf, out,
+      only = Some(Set("core_health_probe", "no_such_gate")))
+    assert(errors.keySet == Set("no_such_gate"))
+    assert(slurp(s"$out/_errors.json").contains("\"no_such_gate\""))
+    assert(spark.read.parquet(s"$out/core_health_probe").count() > 0)
+  }
+
   test("degraded run: a missing corpus yields per-query errors, not silence") {
     val out = java.nio.file.Files.createTempDirectory("verify_bad").toString
     val names = Set("core_summary_stats", "text_stats")

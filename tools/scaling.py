@@ -54,13 +54,10 @@ def run_bench(sf: str, out: str) -> None:
         "SPARK_GRAFT_ONLY": ",".join(GATES),
         "SPARK_GRAFT_OUT": out,
         "SPARK_GRAFT_CPUS": env.get("SPARK_GRAFT_CPUS", "32"),
-        # a REAL from-scratch staging build per SF (Bench evicts first),
-        # timed and dumped as staging_build_sec — the recurring
-        # per-corpus-generation cost is a SCALING row of its own
-        "SPARK_GRAFT_STAGE_FRESH": "1",
-        # containment candidate-funnel census per SF (r11 verdict #4)
-        "SPARK_GRAFT_CAND_STATS": "1",
     })
+    # with SPARK_GRAFT_OUT set, Bench evicts its staged artifacts first
+    # (staging_build_sec is a from-scratch build at every SF, a SCALING
+    # row of its own) and adds the containment candidate funnel
     subprocess.run(
         ["sbt", "-batch", "runMain graft.Bench"],
         cwd="/root/repo", env=env, check=True,
@@ -92,8 +89,7 @@ def main() -> None:
 
     # staging build cost per SF as first-class SCALING rows (the staged
     # consumers scale flat by construction; the honest recurring cost is
-    # the producers' build, which Bench times fresh per SF under
-    # SPARK_GRAFT_STAGE_FRESH)
+    # the producers' build, which Bench times fresh per SF)
     extras = {}
     for sf in SFS:
         with open(f"/tmp/scaling_{sf}.json") as f:
