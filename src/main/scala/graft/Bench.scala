@@ -204,23 +204,17 @@ object Bench {
     // numbers are scratch, and a per-iteration rebuild would bury the
     // gate being iterated on.
     val stageFresh = only.isEmpty || outPath.nonEmpty
-    def staged(what: String)(evict: => Unit)(ensure: => Unit): Double = {
-      spark.sparkContext.setJobDescription(s"staging: $what")
-      try {
-        if (stageFresh) evict
-        timedSec(ensure)
+    val stagingSec = store.Staging.families.map { f =>
+      spark.sparkContext.setJobDescription(s"staging: ${f.name}")
+      f.name -> (try {
+        if (stageFresh) f.evict(sfDir, keepCurrent = false)
+        timedSec(f.ensure(spark, sfDir))
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] ${what.toUpperCase} STAGING BUILD FAILED " +
+        System.err.println(s"[bench] ${f.name.toUpperCase} STAGING BUILD FAILED " +
           s"— first timed consumer gate will absorb a full rebuild: $e")
         -1.0
-      }
+      })
     }
-    val stagingCanonSec = staged("canonical corpus artifacts")(
-      graft.operators.Dedup.evictCanonicalStaging(sfDir, keepCurrent = false))(
-      graft.operators.Dedup.ensureCanonicalStaging(spark, sfDir))
-    val stagingEmbedSec = staged("embedding pair table")(
-      graft.operators.Similarity.evictEmbedPairStaging(sfDir, keepCurrent = false))(
-      graft.operators.Similarity.ensureEmbedPairStaging(spark, sfDir))
     spark.sparkContext.setJobDescription(null)
     // Host-speed canaries (fixed microbenchmarks, min of 3 each), so
     // wall-clock deltas between hosts can be NORMALIZED against
@@ -300,7 +294,7 @@ object Bench {
         k -> (Seq(p1(k), p2(k)) ++ p3.get(k)).filter(_ >= 0)
       }.toMap ++ unknown.map(_ -> Seq.empty[Double]),
       canarySec = canary, canaryShuffleSec = canaryShuffle,
-      stagingSec = Seq("canon" -> stagingCanonSec, "embpairs" -> stagingEmbedSec),
+      stagingSec = stagingSec,
       sf = sfDir.split('/').last)
     // BENCH_FULL.json is the committed sf0.1 artifact; a smoke run
     // (other SF, or a SPARK_GRAFT_ONLY subset) must not clobber it.

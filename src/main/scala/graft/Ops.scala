@@ -150,7 +150,7 @@ object Ops {
       // tables, embpairs LSH pairs): generations, completeness, age,
       // size — the readout that bounds "is lazy GC keeping up with
       // corpus churn". Listing a local temp root: bounded, no Spark.
-      val gens = operators.Dedup.stagingReport()
+      val gens = store.Staging.report()
       gens.foreach { g =>
         out(f"[ops] staging ${g.family}%s ${g.name}%s " +
           f"${if (g.done) "DONE" else "BUILDING"}%s " +
@@ -175,13 +175,12 @@ object Ops {
         case _ => Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
           "/root/testdata/sf0.1").filter(new java.io.File(_).isDirectory)
       }
-      val before = operators.Dedup.stagingReport().map(_.bytes).sum
+      val before = store.Staging.report().map(_.bytes).sum
       dirs.foreach { d =>
-        operators.Dedup.evictCanonicalStaging(d, keepCurrent = !all)
-        operators.Similarity.evictEmbedPairStaging(d, keepCurrent = !all)
+        store.Staging.families.foreach(_.evict(d, keepCurrent = !all))
         out(s"[ops] staging-gc $d${if (all) " (--all)" else ""}")
       }
-      val after = operators.Dedup.stagingReport().map(_.bytes).sum
+      val after = store.Staging.report().map(_.bytes).sum
       out(s"[ops] staging-gc reclaimed ${(before - after) / 1024} KB, " +
         s"${after / 1024} KB remain")
       0

@@ -74,14 +74,14 @@ object SparkEntry {
   }
 
   /** Runs one gate's work, then drops what a gate may leave behind:
-    * its persisted intermediates (the session cache) and the replay
-    * staging dirs of stream gates. Every caller that runs gates one
+    * its persisted intermediates (the session cache) and its scratch
+    * dirs ([[store.Staging.gateDir]]). Every caller that runs gates one
     * after another goes through here, so no gate runs or is measured
     * under the state of the one before it. */
   def isolated[T](spark: SparkSession)(body: => T): T =
     try body
     finally {
       spark.catalog.clearCache()
-      streaming.EventStream.purgeStaging()
+      store.Staging.purgeGateDirs()
     }
 }

@@ -677,7 +677,7 @@ object TextAnalysis extends graft.GateModule {
     * pair application ("aaaa" + (a,a) → [aa][aa]); per-symbol wrapping
     * keeps replacements boundary-aligned even across adjacent merges.
     * localCheckpoint per round truncates the growing plan (the
-    * dupClusters discipline). Output: the learned merge table
+    * dupClustersStar discipline). Output: the learned merge table
     * (rank, left_sym, right_sym, pair_count). */
   /** The shared training loop: returns the post-merge symbolized
     * vocabulary (for [[bpeApply]]) and the learned merge table (for

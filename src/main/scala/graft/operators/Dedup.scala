@@ -24,12 +24,6 @@ import org.apache.spark.sql.functions._
   *    boilerplate trigram shared by d documents would emit d² join
   *    rows on a single key.
   */
-/** One staged-artifact generation under the per-user staging root
-  * (see [[Dedup.stagingReport]]): `done` distinguishes published
-  * generations from in-flight/abandoned `.build-*` dirs. */
-case class StagingGeneration(family: String, name: String, done: Boolean,
-    ageMs: Long, bytes: Long)
-
 object Dedup extends graft.GateModule {
 
   /** Distinct word-trigram shingles of the token array (docs here always
@@ -337,74 +331,6 @@ object Dedup extends graft.GateModule {
 
   // --- Duplicate clustering (connected components) -----------------------
 
-  /** Connected components over candidate duplicate pairs: every node
-    * gets the smallest doc_id reachable through the pair graph as its
-    * cluster id — the survivor/keep-list step that turns pairwise LSH
-    * candidates into actionable dedup groups.
-    *
-    * Hash-min label propagation: each round, every node takes the min
-    * of its own and its neighbors' labels — a join + hash-agg pair per
-    * round, all distributed, with a driver-side convergence test on a
-    * count (O(1) result; the label frame itself never leaves executors).
-    * Rounds needed = graph diameter; duplicate clusters are near-cliques
-    * (diameter 1-2 from shared bands), so this converges in 2-3 rounds.
-    * For adversarial long-chain graphs production would switch to the
-    * large-star/small-star alternation (O(log n) rounds, same join+agg
-    * building blocks). The fixpoint — min reachable id — is independent
-    * of iteration schedule, hence deterministic and oracle-checkable. */
-  def dupClusters(nodes: DataFrame, pairs: DataFrame,
-      maxIter: Int = 50): DataFrame = {
-    // symmetric closure via a map-side explode, NOT union(pairs, swap):
-    // a union reads `pairs` twice, and the pair input is typically an
-    // expensive pipeline (LSH candidates) that would run twice before
-    // the cache materializes
-    // pre-partitioned on the join key, so the per-round neighbor join
-    // re-exchanges only the (changing) labels side — the cached edge
-    // scan reports HashPartitioning(v) and skips its exchange in every
-    // round
-    val edges = pairs
-      .select(explode(array(
-        struct(col("da").as("u"), col("db").as("v")),
-        struct(col("db").as("u"), col("da").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct().repartition(col("v")).cache()
-    var labels = nodes.select(col("doc_id").as("node"))
-      .withColumn("label", col("node")).cache()
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      // neighbor minima, then ONE union+groupBy instead of a two-sided
-      // left join against the previous labels: the old label rides
-      // along as the `orig`-tagged row, so min(label) is the new label
-      // and min(label WHERE orig) the old one — change detection costs
-      // no extra exchange. localCheckpoint (not cache): `labels` feeds
-      // both sides of the round, so the LOGICAL plan doubles per
-      // iteration — a cache truncates execution but not lineage, and
-      // ~20 rounds of a long-diameter graph OOM the driver on plan
-      // analysis. Checkpointing truncates the lineage; production on a
-      // cluster would use a reliable checkpoint dir (localCheckpoint
-      // trades executor-loss recovery for speed).
-      val nbrMin = edges.join(labels, col("v") === col("node"))
-        .groupBy(col("u")).agg(min("label").as("label"))
-        .select(col("u").as("node"), col("label"), lit(false).as("orig"))
-      val next = labels.select(col("node"), col("label"), lit(true).as("orig"))
-        .union(nbrMin)
-        .groupBy("node")
-        .agg(min("label").as("label"),
-          min(when(col("orig"), col("label"))).as("old"))
-        .select(col("node"), col("label"),
-          (col("label") < col("old")).as("chg"))
-        .localCheckpoint()
-      val changed = next.filter(col("chg")).limit(1).count()
-      labels.unpersist()
-      labels = next
-      done = changed == 0
-      iter += 1
-    }
-    edges.unpersist()
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
-  }
-
   /** Shuffle-partition override for the iterative clustering loops:
     * their per-round frames are EDGES (thousands of rows at any SF —
     * candidate pairs, not documents), so the batch default pays ~4
@@ -417,12 +343,10 @@ object Dedup extends graft.GateModule {
     * LSH candidates (uncapped here so the DuckDB edge set is identical;
     * observed bucket sizes are single-digit at every SF).
     *
-    * Bound to [[dupClustersStar]] since r5: both algorithms hash-match
-    * the same recursive-CTE oracle (r4 proved it on the full corpus),
-    * and the star alternation is both faster here (2.8 s vs 6.1 s at
-    * sf0.1) and O(log n)-round on adversarial chain graphs, so it is
-    * the production default; [[dupClusters]] label propagation stays as
-    * the spec-verified reference implementation. */
+    * Bound to [[dupClustersStar]] since r5: it hash-matched the same
+    * recursive-CTE oracle as the earlier label propagation, was faster
+    * here (2.8 s vs 6.1 s at sf0.1) and is O(log n)-round on
+    * adversarial chain graphs. */
   def clustersQuery(spark: SparkSession, dir: String): DataFrame =
     graft.Conf.withConf(spark, "spark.sql.shuffle.partitions",
         clusterShufflePartitions) {
@@ -437,12 +361,12 @@ object Dedup extends graft.GateModule {
   /** Connected components by large-star/small-star alternation
     * (the MapReduce CC algorithm of Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14): converges in
-    * O(log n) rounds on ANY graph, versus diameter rounds for the
-    * label propagation in [[dupClusters]]. Duplicate clusters from LSH
-    * are near-cliques where propagation wins on constants, but a
-    * chain-shaped component (e.g. a gradually-drifting boilerplate
-    * series, each revision pairing only with its neighbors) has
-    * diameter O(n) — this is the adversarial-shape path.
+    * O(log n) rounds on ANY graph, versus diameter rounds for hash-min
+    * label propagation. Duplicate clusters from LSH are near-cliques
+    * where propagation wins on constants, but a chain-shaped component
+    * (e.g. a gradually-drifting boilerplate series, each revision
+    * pairing only with its neighbors) has diameter O(n) — this is the
+    * adversarial-shape path.
     *
     * Each round is two groupBy+join rounds over the edge list:
     *  - large-star: every node links its LARGER neighbors to the
@@ -451,9 +375,11 @@ object Dedup extends graft.GateModule {
     *    every node links itself and its smaller neighbors to its
     *    minimum neighbor.
     * The edge set monotonically flattens into per-component stars
-    * rooted at the component minimum — the same fixpoint as
-    * [[dupClusters]], so the two share an oracle. localCheckpoint per
-    * round truncates the doubling logical plan, as in [[dupClusters]].
+    * rooted at the component minimum: the smallest doc_id reachable
+    * through the pair graph, the fixpoint the oracle's recursive CTE
+    * computes. localCheckpoint (not cache) per round: the logical plan
+    * otherwise doubles per round, and a cache truncates execution but
+    * not lineage.
     *
     * Returns (labels, rounds): every node with the smallest doc_id in
     * its component, and the number of alternation rounds taken. */
@@ -1511,9 +1437,10 @@ object Dedup extends graft.GateModule {
       withMemberCounts(labels.localCheckpoint())
   }
 
-  /** STAGING LIFECYCLE operator — the stored-artifact convention every
+  /** The `canon` staged family — the stored-artifact convention every
     * recurring dedup job assumes. For a corpus dir it persists, as
-    * parquet under a per-user temp root:
+    * parquet under the per-user staging root ([[graft.store.Staging]]
+    * owns the keying, atomic publish and GC):
     *
     *  - the union-corpus token index (the df-ordered prefix frame +
     *    per-doc sorted tid arrays) — built once per corpus, read by
@@ -1528,25 +1455,9 @@ object Dedup extends graft.GateModule {
     *    SimHash-chunk candidates, the gate-reproducible forms) — the
     *    artifacts [[methodAgreementFrom]] monitors; each method's
     *    build cost is timed by its own gate, and agreement is a read
-    *    over the stored outputs, as in production.
-    *
-    * Keyed by (corpus path) × (content generation): generation folds
-    * the file's length, mtime AND a first/last-block content
-    * fingerprint (the parquet footer lives in the last block, so any
-    * rewrite perturbs it) — a corpus regenerated in place with
-    * identical byte length inside the filesystem's mtime granularity
-    * (1 s on many FSes) still re-stages. Idempotent and
-    * concurrency-safe: built in a unique temp dir, atomically renamed
-    * into place, losers of the race adopt the winner's staging; the
-    * root is scoped per OS user so multi-user hosts never collide on
-    * directory ownership. Superseded generations are garbage-collected
-    * lazily (only once >1 h old, so a concurrent JVM still reading an
-    * older generation is never yanked mid-query) — or immediately via
-    * the explicit [[evictCanonicalStaging]] verb. */
-  def ensureCanonicalStaging(spark: SparkSession,
-      dir: String): java.nio.file.Path =
-    ensureStagedArtifacts(new java.io.File(s"$dir/documents.parquet"),
-      family = "canon", paramsKey = s"$setSimNum:$setSimDen:v3") { tmp =>
+    *    over the stored outputs, as in production. */
+  val canonStaging: graft.store.Staging.Family = graft.store.Staging.Family(
+      "canon", "documents", s"$setSimNum:$setSimDen:v3") { (spark, dir, tmp) =>
       val docs = Tables.load(spark, dir, "documents")
       val mx = docs.agg(max("doc_id")).head().getLong(0) // 1-row bounded agg
       val cut = 4L * mx / 5L
@@ -1607,201 +1518,13 @@ object Dedup extends graft.GateModule {
       } finally { cleanup(); docsTok.unpersist(); () }
     }
 
-  /** Generic staging-lifecycle skeleton shared by every stored-
-    * artifact family ([[ensureCanonicalStaging]]'s token/pair tables,
-    * [[Similarity.ensureEmbedPairStaging]]'s embedding pair table):
-    * per-user root, (family × source path) keying with the content-
-    * generation suffix, idempotent reuse behind a `_DONE` marker,
-    * unique-temp-dir build + atomic publish with loser-adopts-winner
-    * races, partial-dir cleanup on failure, and deferred GC of
-    * superseded generations. `build` writes the family's artifacts
-    * into the provided temp dir. */
-  private[graft] def ensureStagedArtifacts(src: java.io.File,
-      family: String, paramsKey: String)
-      (build: java.nio.file.Path => Unit): java.nio.file.Path = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val pathKey = stagingPathKey(family, src)
-    val genKey = stagingGenKey(src, paramsKey)
-    val root = stagingRoot
-    val out = root.resolve(s"$family-$pathKey-$genKey")
-    if (Files.exists(out.resolve("_DONE"))) return out
-    val tmp = root.resolve(
-      s"$family-$pathKey-$genKey.build-${java.util.UUID.randomUUID}")
-    Files.createDirectories(tmp)
-    try {
-      build(tmp)
-      Files.createFile(tmp.resolve("_DONE"))
-      try Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileSystemException =>
-        // a concurrent build won the rename; adopt it if complete,
-        // else leave ours under the unique name and use it directly
-        if (Files.exists(out.resolve("_DONE"))) { deleteRecursively(tmp); }
-        else return tmp
-      }
-      evictStaleStaging(root, family, pathKey,
-        keep = Some(out.getFileName.toString), minAgeMs = 3600000L)
-      out
-    } catch { case e: Throwable =>
-      // a failed build must not leak its partial dir (the same
-      // lifecycle rule EventStream.purgeStaging enforces for replays)
-      deleteRecursively(tmp)
-      throw e
-    }
-  }
+  /** The published [[canonStaging]] generation for `dir`. */
+  def ensureCanonicalStaging(spark: SparkSession,
+      dir: String): java.nio.file.Path = canonStaging.ensure(spark, dir)
 
-  private def stagingPathKey(family: String, src: java.io.File): String =
-    Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(
-      s"$family:${src.getAbsolutePath}"))
-
-  /** Per-user staging root: `user.name` is folded into the directory
-    * name so two users on one host never contend for ownership of a
-    * shared world-writable path (the second user's createDirectories
-    * would fail on the first's root). */
-  private def stagingRoot: java.nio.file.Path = {
-    val user = Option(System.getProperty("user.name")).getOrElse("anon")
-      .filter(_.isLetterOrDigit)
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-canon-staging-$user")
-  }
-
-  /** Build-logic fingerprint folded into every staged generation key:
-    * a hash of the operator CLASSFILE bytes that produce the staged
-    * artifacts (Dedup for the canon family, Similarity for embpairs —
-    * one combined fingerprint keyed over both, so a change to either
-    * pipeline re-stages both families: over-eager by one cheap build,
-    * never stale). The hand-bumped params-version suffixes remain the
-    * documented knob for SEMANTIC changes; this closes the silent
-    * hole behind them — a code change to minhashCandidates /
-    * simhashCandidates / setSimPartsFull / embedNearDupLsh without a
-    * manual bump would otherwise keep serving pair tables built by
-    * the old code, surfacing only as confusing downstream oracle
-    * failures (r11 advice). Classfile bytes are stable within a
-    * compile and change with any recompiled logic, which is exactly
-    * the invalidation granularity wanted; cost is one staging rebuild
-    * per (re)build per corpus, absorbed by the Bench warmup. */
-  private[graft] lazy val stagingLogicFingerprint: String = {
-    def h(res: String): Int = {
-      val in = getClass.getResourceAsStream(res)
-      if (in == null) 0
-      else {
-        try scala.util.hashing.MurmurHash3.bytesHash(in.readAllBytes())
-        finally in.close()
-      }
-    }
-    val fp = h("/graft/operators/Dedup$.class") ^
-      java.lang.Integer.rotateLeft(h("/graft/operators/Similarity$.class"), 16)
-    // a classloader that can't serve the bytes of THIS loaded class
-    // would silently disable the invalidation — fail loudly instead
-    require(fp != 0, "staging logic fingerprint unavailable: operator " +
-      "classfile bytes not readable from the classloader")
-    Integer.toHexString(fp)
-  }
-
-  /** Content-generation key: length + mtime + a first/last-64KB
-    * fingerprint (the parquet footer sits in the last block, so ANY
-    * rewrite — even same-length within mtime granularity — perturbs
-    * it) + the params the staged artifacts were built at + the
-    * [[stagingLogicFingerprint]] of the code that builds them. */
-  private[graft] def stagingGenKey(src: java.io.File,
-      paramsKey: String): String = {
-    val fp = try {
-      val raf = new java.io.RandomAccessFile(src, "r")
-      try {
-        val block = 65536
-        val head = new Array[Byte](math.min(block.toLong, raf.length).toInt)
-        raf.readFully(head)
-        val tail = new Array[Byte](head.length)
-        raf.seek(math.max(0L, raf.length - tail.length))
-        raf.readFully(tail)
-        scala.util.hashing.MurmurHash3.bytesHash(head) ^
-          java.lang.Integer.rotateLeft(
-            scala.util.hashing.MurmurHash3.bytesHash(tail), 16)
-      } finally raf.close()
-    } catch { case _: java.io.IOException => 0 }
-    Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(
-      s"${src.length}:${src.lastModified}:$fp:$stagingLogicFingerprint:$paramsKey"))
-  }
-
-  /** Explicit staging GC verb — the caller-facing form of the lazy
-    * eviction [[ensureCanonicalStaging]] performs: drop every staged
-    * generation of `dir`'s corpus except the current one (or ALL of
-    * them with `keepCurrent = false`, e.g. before decommissioning a
-    * corpus). Unlike the automatic path this deletes superseded
-    * COMPLETED generations immediately — it is an operator's explicit
-    * "nothing else is reading these" declaration — while in-flight
-    * `.build-*` dirs keep the >1 h age guard (a live concurrent build
-    * must never be deleted under itself). */
+  /** [[canonStaging]]'s explicit GC verb. */
   def evictCanonicalStaging(dir: String, keepCurrent: Boolean = true): Unit =
-    evictStagedArtifacts(new java.io.File(s"$dir/documents.parquet"),
-      family = "canon", paramsKey = s"$setSimNum:$setSimDen:v3", keepCurrent)
-
-  /** One row per staged generation under the per-user root — the
-    * observability half of the staging lifecycle (the root is
-    * otherwise invisible: artifacts accrue under /tmp with lazy >1 h
-    * GC, and nothing reported generations or sizes). Driver-side
-    * only: lists a LOCAL temp root, bounded by generations on disk.
-    * Row: (family, dirName, done, ageMs, bytes) — `done` false means
-    * an in-flight or abandoned `.build-*` dir. */
-  def stagingReport(): Seq[StagingGeneration] = {
-    def sizeOf(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .map(sizeOf).sum
-      else f.length()
-    val now = System.currentTimeMillis()
-    Option(stagingRoot.toFile.listFiles()).getOrElse(Array.empty[java.io.File])
-      .toSeq.filter(_.isDirectory)
-      .map { d =>
-        StagingGeneration(
-          family = d.getName.takeWhile(_ != '-'),
-          name = d.getName,
-          done = new java.io.File(d, "_DONE").exists(),
-          ageMs = math.max(0L, now - d.lastModified),
-          bytes = sizeOf(d))
-      }
-      .sortBy(g => (g.family, g.name))
-  }
-
-  /** Family-generic form of [[evictCanonicalStaging]]. */
-  private[graft] def evictStagedArtifacts(src: java.io.File, family: String,
-      paramsKey: String, keepCurrent: Boolean): Unit = {
-    val pathKey = stagingPathKey(family, src)
-    val keep = if (keepCurrent)
-      Some(s"$family-$pathKey-${stagingGenKey(src, paramsKey)}") else None
-    evictStaleStaging(stagingRoot, family, pathKey, keep, minAgeMs = 0L)
-  }
-
-  /** Drop superseded staging for one corpus path: completed dirs of
-    * other generations once older than `minAgeMs` (the automatic path
-    * passes 1 h so a concurrent JVM still reading an older generation
-    * is never yanked mid-query; the explicit verb passes 0), and
-    * abandoned `.build-*` dirs older than an hour regardless (a LIVE
-    * concurrent build is younger; race losers and crash leftovers are
-    * not). Never touches other corpora's keys. */
-  private def evictStaleStaging(root: java.nio.file.Path, family: String,
-      pathKey: String, keep: Option[String], minAgeMs: Long): Unit = {
-    val kids = root.toFile.listFiles()
-    if (kids == null) return
-    val now = System.currentTimeMillis()
-    val buildCutoff = now - 3600000L
-    kids.iterator
-      .filter(_.getName.startsWith(s"$family-$pathKey-"))
-      .filter(f => !keep.contains(f.getName))
-      .filter(f =>
-        if (f.getName.contains(".build-")) f.lastModified < buildCutoff
-        else f.lastModified < now - minAgeMs)
-      .foreach(f => deleteRecursively(f.toPath))
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
-  }
+    canonStaging.evict(dir, keepCurrent)
 
   /** Gate form of [[setSimCanonicalIncremental]]: the newest 20% of
     * doc_ids play the delta crawl, the rest the already-canonicalized

@@ -976,8 +976,8 @@ object Similarity extends graft.GateModule {
       .select(col("a"), col("b"))
   }
 
-  /** Stored pair-table staging for the embedding near-dup GRAPH
-    * family — the [[Dedup.ensureCanonicalStaging]] convention applied
+  /** The `embpairs` staged family: the embedding near-dup GRAPH's
+    * stored pair table — the [[Dedup.canonStaging]] convention applied
     * to the embeddings corpus: the verified LSH pair table is a
     * once-per-corpus stored artifact (keyed by embeddings.parquet's
     * content generation + the LSH banding params), and every graph
@@ -987,24 +987,19 @@ object Similarity extends graft.GateModule {
     * persisted output. The LSH pipeline itself stays timed and
     * oracled end-to-end by its own gates (`embed_neardup_lsh`, with
     * `embed_lsh_recall` proving recall against the exact baseline). */
-  private def embPairsParamsKey: String = s"$lshBands:$lshBits:v1"
+  val embPairStaging: graft.store.Staging.Family = graft.store.Staging.Family(
+      "embpairs", "embeddings", s"$lshBands:$lshBits:v1") { (spark, dir, tmp) =>
+    embedNearDupLsh(spark, dir).write.mode("overwrite")
+      .parquet(tmp.resolve("pairs.parquet").toString)
+  }
 
+  /** The published [[embPairStaging]] generation for `dir`. */
   private[graft] def ensureEmbedPairStaging(spark: SparkSession,
-      dir: String): java.nio.file.Path =
-    Dedup.ensureStagedArtifacts(
-      new java.io.File(s"$dir/embeddings.parquet"),
-      family = "embpairs", paramsKey = embPairsParamsKey) { tmp =>
-      embedNearDupLsh(spark, dir).write.mode("overwrite")
-        .parquet(tmp.resolve("pairs.parquet").toString)
-    }
+      dir: String): java.nio.file.Path = embPairStaging.ensure(spark, dir)
 
-  /** Explicit GC verb for the embedding pair-table staging family —
-    * the embpairs twin of [[Dedup.evictCanonicalStaging]] (same
-    * semantics: superseded completed generations dropped immediately,
-    * in-flight builds keep the 1 h age guard). */
+  /** [[embPairStaging]]'s explicit GC verb. */
   def evictEmbedPairStaging(dir: String, keepCurrent: Boolean = true): Unit =
-    Dedup.evictStagedArtifacts(new java.io.File(s"$dir/embeddings.parquet"),
-      family = "embpairs", paramsKey = embPairsParamsKey, keepCurrent)
+    embPairStaging.evict(dir, keepCurrent)
 
   /** The staged verified pair table (a, b) for `dir`'s embeddings. */
   private def stagedEmbedPairs(spark: SparkSession, dir: String): DataFrame =
@@ -1324,12 +1319,11 @@ object Similarity extends graft.GateModule {
     * boilerplate family, complementing the quality-argmax rule in
     * [[Dedup.canonicalQuery]].
     *
-    * Scale shape, same discipline as [[Dedup.dupClusters]]: the edge
-    * list builds once (map-side explode for the symmetric closure),
-    * pre-partitions on the join key, and persists; each iteration is
-    * ONE join of the (small) rank frame against the cached edges plus
-    * one hash-agg — the per-iteration shuffle carries rank rows, never
-    * the graph. Iterations are a fixed plan unrolling (5 joins in one
+    * Scale shape: the edge list builds once (map-side explode for the
+    * symmetric closure), pre-partitions on the join key, and persists;
+    * each iteration is ONE join of the (small) rank frame against the
+    * cached edges plus one hash-agg — the per-iteration shuffle carries
+    * rank rows, never the graph. Iterations are a fixed plan unrolling (5 joins in one
     * DAG), not driver-side collects. Overflow-safe: per-node inbound
     * mass is bounded by total mass n·prScale ≈ 2e15 at sf0.1, and
     * 17 × that is far under Long.MaxValue. */

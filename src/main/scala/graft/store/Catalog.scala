@@ -20,9 +20,12 @@ object Catalog extends graft.GateModule {
 
   /** Explicit external-table root: the driver recreates the Spark
     * session (and its in-memory catalog) every round, so managed-table
-    * locations would orphan. External LOCATIONs re-attach cleanly. */
-  def warehouse: String =
-    sys.env.getOrElse("GRAFT_WAREHOUSE", "/root/repo/data/warehouse")
+    * locations would orphan. External LOCATIONs re-attach cleanly.
+    * `GRAFT_WAREHOUSE`, else `data/warehouse` under the working
+    * directory (the checkout root under sbt), so two checkouts never
+    * share tables. */
+  def warehouse: String = sys.env.getOrElse("GRAFT_WAREHOUSE",
+    new java.io.File(System.getProperty("user.dir"), "data/warehouse").getPath)
 
   /** `stock_data` is date-partitioned on `trade_date` =
     * to_date(timestamp): the merge key (symbol, timestamp) functionally
@@ -212,7 +215,7 @@ object Catalog extends graft.GateModule {
     * this puts the text-format path under the DuckDB oracle.) */
   def exportRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.load(spark, dir, "documents")
-    val base = java.nio.file.Files.createTempDirectory("graft_export").toString
+    val base = Staging.gateDir("graft_export").toString
     Seq("csv", "json").map { fmt =>
       export(docs, s"$base/$fmt", fmt)
       importAs(spark, s"$base/$fmt", fmt, docs.schema)
@@ -238,7 +241,7 @@ object Catalog extends graft.GateModule {
     val modern = ev.filter(col("event_id") % 2 =!= 0)
       .select(col("event_id"), col("user_id"), col("value"),
         col("event_type"))
-    val base = java.nio.file.Files.createTempDirectory("graft_schema_evo")
+    val base = Staging.gateDir("graft_schema_evo")
     val (pa, pb) = (s"$base/legacy", s"$base/modern")
     legacy.write.mode("overwrite").parquet(pa)
     modern.write.mode("overwrite").parquet(pb)

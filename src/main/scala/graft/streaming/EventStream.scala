@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.Tables.dsum
+import graft.store.Staging
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -136,12 +137,10 @@ object EventStream extends graft.GateModule {
   /** Stage DataFrames as one parquet file each in a fresh directory with
     * strictly ascending modification times, so a file streaming source
     * with `maxFilesPerTrigger=1` replays them as ordered micro-batches
-    * (the source processes oldest mtime first). Every dir is registered
-    * for cleanup: the harnesses call [[purgeStaging]] between gates
-    * (safe — each gate materializes its memory-sink snapshot before
-    * returning, so nothing re-reads staging), and a JVM shutdown hook
-    * sweeps whatever remains, so a bench sweep no longer accumulates
-    * one corpus copy per stream gate per pass under /tmp. */
+    * (the source processes oldest mtime first). Every dir is a
+    * [[graft.store.Staging.gateDir]], deleted by the reset after each
+    * gate (safe — each gate materializes its memory-sink snapshot
+    * before returning, so nothing re-reads staging). */
   private[streaming] def stageReplay(frames: Seq[DataFrame]): String =
     // multi-frame replays are always same-schema splits of one frame,
     // so they take the one-job union path (unionByName fails loudly on
@@ -156,16 +155,15 @@ object EventStream extends graft.GateModule {
     * full coalesce(1) write JOB per gate per bench pass (12 sentinel
     * writes per pass across the watermark-flush gates — pure harness
     * tax the r10 verdict charged against the stream gates' wall
-    * time). The tagged frame is written once under a shutdown-hook-
-    * scoped cache dir, then byte-copied into each staging dir; replay
-    * mtime ordering is applied to the COPY, exactly as [[stageFile]]
-    * does. Callers must only tag frames whose content is a pure
+    * time). The tagged frame is written once under a JVM-scoped cache
+    * dir ([[graft.store.Staging.jvmDir]]), then byte-copied into each
+    * staging dir; replay mtime ordering is applied to the COPY, exactly
+    * as [[stageFile]] does. Callers must only tag frames whose content is a pure
     * function of the key. */
   private[streaming] def stageReplayKeyed(
       frames: Seq[(DataFrame, Option[String])]): String = {
     import java.nio.file.Files
-    val work = Files.createTempDirectory("graft_stream_replay")
-    stagingDirs.add(work)
+    val work = Staging.gateDir("graft_stream_replay")
     val staging = work.resolve("input")
     Files.createDirectories(staging)
     // one t0 for ALL slots (a per-slot "now" after a >60 s write job
@@ -176,8 +174,7 @@ object EventStream extends graft.GateModule {
         stageFile(df, work, staging, f"b$i%02d.parquet", i, t0)
       case ((df, Some(key)), i) =>
         val src = sentinelCache.computeIfAbsent(key, _ => {
-          val d = Files.createTempDirectory("graft_sentinel_cache")
-          sentinelDirs.add(d)
+          val d = Staging.jvmDir("graft_sentinel_cache")
           val tmp = d.resolve("w").toString
           df.coalesce(1).write.mode("overwrite").parquet(tmp)
           val part = new java.io.File(tmp).listFiles()
@@ -209,8 +206,7 @@ object EventStream extends graft.GateModule {
     * batch-count contract exact. */
   private[streaming] def stageReplayUnion(frames: Seq[DataFrame]): String = {
     import java.nio.file.{Files, StandardCopyOption}
-    val work = Files.createTempDirectory("graft_stream_replay")
-    stagingDirs.add(work)
+    val work = Staging.gateDir("graft_stream_replay")
     val staging = work.resolve("input")
     Files.createDirectories(staging)
     val slotted = frames.zipWithIndex
@@ -260,27 +256,25 @@ object EventStream extends graft.GateModule {
     * every pass pays the same coalesce(1)/union write jobs again.
     * A gate's FIRST run in a JVM still pays the build (cache miss);
     * min-of-passes therefore reads the cached form.
-    * purgeStaging() never touches the cache (per-gate staging dirs
-    * stay per-gate); cache dirs die with the JVM's shutdown hook. */
+    * The gate reset never touches the cache (per-gate staging dirs
+    * stay per-gate); cache dirs are JVM-scoped. */
   private[streaming] def stageReplayCached(key: String)
       (build: => String): String = {
     import java.nio.file.{Files, StandardCopyOption}
     val hit = replayDirCache.get(key)
     if (hit == null) {
       val src = java.nio.file.Paths.get(build)
-      val d = Files.createTempDirectory("graft_replay_cache")
-      sentinelDirs.add(d)
+      val d = Staging.jvmDir("graft_replay_cache")
       Option(src.toFile.listFiles()).getOrElse(Array.empty[java.io.File])
         .filter(_.getName.endsWith(".parquet"))
         .foreach(f => Files.copy(f.toPath, d.resolve(f.getName),
           StandardCopyOption.REPLACE_EXISTING))
       // losing a (theoretical) publish race just strands one cache dir
-      // until the shutdown sweep — gates run sequentially in practice
+      // until JVM exit — gates run sequentially in practice
       replayDirCache.putIfAbsent(key, d)
       return src.toString
     }
-    val work = Files.createTempDirectory("graft_stream_replay")
-    stagingDirs.add(work)
+    val work = Staging.gateDir("graft_stream_replay")
     val staging = work.resolve("input")
     Files.createDirectories(staging)
     // slot order = the b<NN>.parquet naming every stageReplay* form
@@ -305,34 +299,9 @@ object EventStream extends graft.GateModule {
 
   private val sentinelCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private val sentinelDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var p = sentinelDirs.poll()
-      while (p != null) { deleteRec(p.toFile); p = sentinelDirs.poll() }
-    }))
-  }
-
-  private val stagingDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => purgeStaging()))
-  }
-
-  /** Delete every replay staging dir created so far. Callers must only
-    * invoke this once in-flight gate results are materialized (the
-    * Bench/Verify/StreamScale loops do, per gate). */
-  def purgeStaging(): Unit = {
-    var p = stagingDirs.poll()
-    while (p != null) { deleteRec(p.toFile); p = stagingDirs.poll() }
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val cs = f.listFiles()
-    if (cs != null) cs.foreach(deleteRec)
-    f.delete(); ()
-  }
+  /** Delete every gate-scoped scratch dir created so far (see
+    * [[graft.store.Staging.purgeGateDirs]]). */
+  def purgeStaging(): Unit = Staging.purgeGateDirs()
 
   def streamTumblingAppend(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {

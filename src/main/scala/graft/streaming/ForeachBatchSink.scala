@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import graft.operators.Upsert
+import graft.store.Staging.gateDir
 import graft.streaming.EventStream.{stageReplay, streamShufflePartitions, withConf}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -43,8 +44,7 @@ object ForeachBatchSink extends graft.GateModule {
         purchases.filter(col("ts") < cut),
         purchases.filter(col("ts") >= cut)))
     }
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_fbm").toString + "/serving"
+    val table = gateDir("graft_fbm").toString + "/serving"
     val mergeBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
       val latest = batch
         .groupBy("user_id")
@@ -63,8 +63,7 @@ object ForeachBatchSink extends graft.GateModule {
       val merged = Upsert.upsert(current, latest, keys = Seq("user_id"))
       // same-path read+overwrite needs a staging hop; volume = touched
       // buckets only
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_fbm_stage").toString
+      val stage = gateDir("graft_fbm_stage").toString
       merged.write.mode("overwrite").parquet(stage)
       Upsert.writePartitioned(
         batch.sparkSession.read.parquet(stage), table, "bucket")
@@ -105,8 +104,7 @@ object ForeachBatchSink extends graft.GateModule {
         purchases.filter(col("event_id") % 2 === 0),
         purchases.filter(col("event_id") % 2 =!= 0)))
     }
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_scd").toString + "/state"
+    val table = gateDir("graft_scd").toString + "/state"
     val applyBatch: (Dataset[Row], Long) => Unit = { (batch, _) =>
       val touched = batch.select(pmod(col("user_id"), lit(8)).as("bucket"))
         .distinct().collect().map(_.getLong(0)) // <= 8 bucket ids
@@ -117,8 +115,7 @@ object ForeachBatchSink extends graft.GateModule {
         else batch.limit(0)
       val folded = Scd.scd2Apply(current, batch)
         .withColumn("bucket", pmod(col("user_id"), lit(8)))
-      val stage = java.nio.file.Files
-        .createTempDirectory("graft_scd_stage").toString
+      val stage = gateDir("graft_scd_stage").toString
       folded.write.mode("overwrite").parquet(stage)
       Upsert.writePartitioned(
         batch.sparkSession.read.parquet(stage), table, "bucket")

@@ -33,7 +33,7 @@ object StreamCheckpoint extends graft.GateModule {
     val batch = Tables.load(spark, dir, "events")
       .select(col("ts"), col("event_type"), col("value"))
     val cut = lit(Sessionize.streamCut).cast("timestamp")
-    val work = Files.createTempDirectory("graft_ckpt")
+    val work = graft.store.Staging.gateDir("graft_ckpt")
     val staging = work.resolve("input")
     Files.createDirectories(staging)
     val ckpt = work.resolve("ckpt").toString

@@ -18,6 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * notes after each gate whether the session cache registry is empty
   * and resets it before the next. Failures name the offending gate
   * directly.
+  *
+  * The same walk notes which `graft_*`/`graft-*` temp dirs each gate
+  * left behind after the reset: a recurring job must own its on-disk
+  * residue, so every scratch dir a gate makes has to go with the
+  * reset (see [[store.Staging]]).
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -35,5 +40,18 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(leaks.isEmpty,
       s"${leaks.size} gates leak cached frames to library callers: " +
         leaks.mkString(", "))
+  }
+
+  test("no gate leaves a scratch dir behind in java.io.tmpdir") {
+    // by design these outlive a gate: the cross-JVM staging root and
+    // the JVM-scoped replay byte caches
+    def exempt(n: String): Boolean = n.startsWith("graft-canon-staging-") ||
+      n.startsWith("graft_replay_cache") || n.startsWith("graft_sentinel_cache")
+    val left = SurfacePass.gates.toSeq.sortBy(_._1).collect {
+      case (name, g) if g.leftDirs.exists(!exempt(_)) =>
+        s"$name (${g.leftDirs.filterNot(exempt).mkString(" ")})"
+    }
+    assert(left.isEmpty,
+      s"${left.size} gates leave scratch dirs behind: " + left.mkString(", "))
   }
 }

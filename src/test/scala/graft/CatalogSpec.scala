@@ -20,6 +20,13 @@ class CatalogSpec extends AnyFunSuite {
     assert(ex.head.plan.contains("RepairTable"), ex.head.plan)
   }
 
+  test("warehouse defaults to data/warehouse under the working directory") {
+    assume(!sys.env.contains("GRAFT_WAREHOUSE"), "GRAFT_WAREHOUSE is set")
+    val cwd = java.nio.file.Paths.get(System.getProperty("user.dir"))
+    assert(java.nio.file.Paths.get(Catalog.warehouse) ==
+      cwd.resolve("data/warehouse"), Catalog.warehouse)
+  }
+
   test("mergeSchema read unifies pre- and post-evolution file layouts") {
     val out = graft.store.Catalog.schemaEvolution(spark, SparkTestSession.sf)
     // the merged frame sees the added column; legacy rows surface as

@@ -141,33 +141,10 @@ class DedupSpec extends AnyFunSuite {
     // must pull 12 down to cluster 10 even though (10,12) is no pair
     val nodes = Seq(10L, 11L, 12L, 20L, 21L, 30L, 31L).toDF("doc_id")
     val pairs = Seq((10L, 11L), (11L, 12L), (20L, 21L)).toDF("da", "db")
-    val got = Dedup.dupClusters(nodes, pairs).collect()
+    val got = Dedup.dupClustersStar(nodes, pairs)._1.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(10L -> 10L, 11L -> 10L, 12L -> 10L,
       20L -> 20L, 21L -> 20L, 30L -> 30L, 31L -> 31L))
-  }
-
-  test("dup clustering matches union-find on a random graph") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val n = 200
-    val edgeSet = (0 until 150).map { _ =>
-      val a = rnd.nextInt(n).toLong; val b = rnd.nextInt(n).toLong
-      (math.min(a, b), math.max(a, b))
-    }.filter(p => p._1 != p._2).distinct
-    // reference union-find
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-    edgeSet.foreach { case (a, b) =>
-      val (ra, rb) = (find(a.toInt), find(b.toInt))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val expected = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-    val got = Dedup.dupClusters(
-      (0L until n.toLong).toDF("doc_id"),
-      edgeSet.toDF("da", "db")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expected)
   }
 
   test("star-alternation clustering matches union-find on a random graph") {

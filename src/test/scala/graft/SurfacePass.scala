@@ -11,21 +11,32 @@ import org.apache.spark.sql.functions.{col, count, lit, struct, sum, xxhash64}
   * result (the Bench materialization shape, plus the row count) under
   * [[PlanDump.executed]], note whether the session cache registry is
   * empty, then reset through [[SparkEntry.isolated]] so the next
-  * gate's record is not polluted by this one. */
+  * gate's record is not polluted by this one. After the reset, note
+  * the `graft_*`/`graft-*` entries of `java.io.tmpdir` the gate left
+  * behind. */
 object SurfacePass {
 
   /** @param rows the result's row count
     * @param cacheEmpty the cache registry was empty once the result
     *   was materialized
     * @param error the gate's failure, if it threw
-    * @param executed every query the gate and its materialization ran */
+    * @param executed every query the gate and its materialization ran
+    * @param leftDirs `graft_*`/`graft-*` entries of `java.io.tmpdir`
+    *   that exist after the reset but did not before the gate ran */
   final case class Gate(rows: Long, cacheEmpty: Boolean,
-      error: Option[String], executed: Seq[PlanDump.Executed])
+      error: Option[String], executed: Seq[PlanDump.Executed],
+      leftDirs: Seq[String] = Nil)
+
+  private def scratchEntries(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .getOrElse(Array.empty[String])
+      .filter(n => n.startsWith("graft_") || n.startsWith("graft-")).toSet
 
   lazy val gates: Map[String, Gate] = {
     val spark = SparkTestSession.spark
     spark.catalog.clearCache()
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val before = scratchEntries()
       val gate =
         try SparkEntry.isolated(spark) {
           val (rows, executed) = PlanDump.executed(spark) {
@@ -40,7 +51,7 @@ object SurfacePass {
             Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120)),
             Nil)
         }
-      name -> gate
+      name -> gate.copy(leftDirs = (scratchEntries() -- before).toSeq.sorted)
     }.toMap
   }
 }

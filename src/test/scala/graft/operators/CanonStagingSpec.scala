@@ -84,7 +84,7 @@ class CanonStagingSpec extends AnyFunSuite {
     // completeness, age, and non-zero sizes
     Dedup.ensureCanonicalStaging(spark, graft.SparkTestSession.sf)
     Similarity.ensureEmbedPairStaging(spark, graft.SparkTestSession.sf)
-    val gens = Dedup.stagingReport()
+    val gens = graft.store.Staging.report()
     for (fam <- Seq("canon", "embpairs")) {
       val fs = gens.filter(_.family == fam)
       assert(fs.nonEmpty, s"no $fam generation in ${gens.map(_.name)}")
@@ -101,16 +101,16 @@ class CanonStagingSpec extends AnyFunSuite {
     // the invalidation — the require inside fails loudly) and that the
     // key actually varies with it (same file, different logic version
     // -> different generation).
-    val fp = Dedup.stagingLogicFingerprint
+    val fp = graft.store.Staging.logicFingerprint
     assert(fp.nonEmpty && fp.matches("[0-9a-f]+"), s"bad fingerprint: $fp")
     val dir = freshCorpusDir()
     try {
       val corpus = new java.io.File(dir, "documents.parquet")
-      val k1 = Dedup.stagingGenKey(corpus, "params:vX")
+      val k1 = graft.store.Staging.genKey(corpus, "params:vX")
       // params change -> new generation (the hand-bump path still works)
-      assert(Dedup.stagingGenKey(corpus, "params:vY") != k1)
+      assert(graft.store.Staging.genKey(corpus, "params:vY") != k1)
       // stable within a JVM/build: the same inputs give the same key
-      assert(Dedup.stagingGenKey(corpus, "params:vX") == k1)
+      assert(graft.store.Staging.genKey(corpus, "params:vX") == k1)
     } finally {
       def rm(f: java.io.File): Unit = {
         val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()

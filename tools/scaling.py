@@ -21,6 +21,11 @@ import math
 import os
 import subprocess
 import sys
+from pathlib import Path
+
+# the checkout this script lives in: benches build from it and
+# SCALING.json lands in its root, whichever clone runs it
+ROOT = Path(__file__).resolve().parents[1]
 
 # One-plus representative per heavy plan family; streaming gates are
 # excluded from the TIME fit (micro-batch harness constant dominates,
@@ -60,7 +65,7 @@ def run_bench(sf: str, out: str) -> None:
     # row of its own) and adds the containment candidate funnel
     subprocess.run(
         ["sbt", "-batch", "runMain graft.Bench"],
-        cwd="/root/repo", env=env, check=True,
+        cwd=ROOT, env=env, check=True,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
 
 
@@ -108,7 +113,7 @@ def main() -> None:
     doc = {"sfs": SFS, "rows": rows}
     if funnel:
         doc["containment_funnel"] = funnel
-    with open("/root/repo/SCALING.json", "w") as f:
+    with open(ROOT / "SCALING.json", "w") as f:
         json.dump(doc, f, indent=1)
 
     print(f"{'gate':28s} {'sf0.001':>8s} {'sf0.01':>8s} {'sf0.1':>8s} {'exp':>5s}")
