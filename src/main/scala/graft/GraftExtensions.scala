@@ -19,6 +19,10 @@ import graft.functions.{CosineSimilarity, DotProduct}
   * `graft.plans` (native as-of join). The declared-SQL parity surface
   * needs no custom rules (SURVEY.md §4.1) — Catalyst covers it; the
   * strategy exists for the operator Spark genuinely lacks.
+  *
+  * It also installs [[org.apache.spark.sql.BroadcastRelease]] on the
+  * session's context, so a query's broadcast relations leave the block
+  * store when the query ends.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -34,5 +38,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => graft.plans.AsofJoinPushDown)
     ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
     ext.injectOptimizerRule(_ => graft.plans.ApproxRewrite)
+    ext.injectCheckRule { session =>
+      org.apache.spark.sql.BroadcastRelease.install(session.sparkContext)
+      _ => ()
+    }
   }
 }

@@ -87,7 +87,7 @@ object Ops {
     case "backup" :: table :: path :: Nil =>
       store.Catalog.bootstrap(spark)
       store.Catalog.snapshot(spark, table, path)
-      out(s"[ops] backup $table -> $path: ${spark.read.parquet(path).count()} rows")
+      out(s"[ops] backup $table -> $path: ${Tables.parquet(spark, path).count()} rows")
       0
 
     case "restore" :: path :: table :: Nil =>

@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table access + shared helpers.
   *
-  * Loads the driver-generated TPC-H-ish corpus (`/root/repo/TESTDATA.md`):
-  * one parquet file per table under the scale-factor directory. Reads are
-  * plain parquet scans so Catalyst pushes filters/pruning into the scan
-  * (verified via .explain: PushedFilters / ReadSchema).
+  * Loads the TPC-H-ish corpus (TESTDATA.md): one parquet file per table
+  * under the scale-factor directory. Reads are plain parquet scans so
+  * Catalyst pushes filters/pruning into the scan (verified via .explain:
+  * PushedFilters / ReadSchema). Every schema-less parquet read in graft,
+  * corpus or staged, goes through [[parquet]], which infers each input's
+  * schema once per file generation.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -128,9 +130,77 @@ object Tables {
       // harmless when ts is already a timestamp; required to read the
       // legacy nanosecond-int64 corpus at all
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = parquet(spark, s"$dir/$name.parquet")
       raw.withColumn("ts", tsNormalizer(raw.schema("ts").dataType))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else parquet(spark, s"$dir/$name.parquet")
+  }
+
+  /** The one schema-less parquet read: `spark.read.parquet(paths: _*)`,
+    * minus the schema inference on repeat reads. Without a schema Spark
+    * infers one with a Spark job per read (a footer-merging `collect`,
+    * tens of ms), which at gate scale costs more than the query it
+    * feeds. Here the inferred schema is kept JVM-wide (the 1024 most
+    * recently used) per (paths, schema-shaping settings) together with
+    * the stamp of the files it was inferred from, and a read whose
+    * stamp matches passes it to `spark.read.schema(...)`, so Spark
+    * skips inference and starts no job.
+    *
+    * The stamp is (path, length, mtime) of every file under each path:
+    * a superset of the leaf files Spark lists for the read, so any
+    * rewrite of a path misses. The settings part holds the session's
+    * `spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` and partition
+    * type inference settings (`nanosAsLong` decides whether `events.ts`
+    * reads as a long or a timestamp), so a flip misses too.
+    * A miss is a plain Spark read, so every schema returned is Spark's
+    * own inference. A path that matches no file gets no stamp and reads
+    * uncached, so Spark raises its own error for it.
+    *
+    * Scale: the stamp lists the input's files on the driver, O(files),
+    * the same listing `InMemoryFileIndex` already does for the read. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val key = (paths.toList, spark.conf.getAll.toList
+      .filter { case (k, _) => schemaConfPrefixes.exists(k.startsWith) }.sorted)
+    val files = fileStamp(spark, paths)
+    parquetSchemas.synchronized(Option(parquetSchemas.get(key)))
+      .filter(c => files.contains(c._1)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(paths: _*)
+      case None =>
+        val df = spark.read.parquet(paths: _*)
+        files.foreach(f => parquetSchemas.synchronized(parquetSchemas.put(key, (f, df.schema))))
+        df
+    }
+  }
+
+  private val schemaConfPrefixes: Seq[String] = Seq("spark.sql.parquet.",
+    "spark.sql.legacy.parquet.", "spark.sql.sources.partitionColumnTypeInference.")
+
+  private type FileStamp = Seq[(String, Long, Long)]
+  private type SchemaKey = (List[String], List[(String, String)])
+  // access-ordered, evicting the least recently used: callers also
+  // read one-shot temp paths (Catalog's retention staging) that no
+  // later read matches
+  private val parquetSchemas = new java.util.LinkedHashMap[SchemaKey, (FileStamp, StructType)](
+      64, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[SchemaKey, (FileStamp, StructType)]): Boolean = size() > 1024
+  }
+
+  /** (path, length, mtime) of every file under `paths`, or None when a
+    * path (or glob) matches nothing. */
+  private def fileStamp(spark: SparkSession, paths: Seq[String]): Option[FileStamp] = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val matched = paths.map { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      val fs = path.getFileSystem(hc)
+      // listFiles of a file is the file itself
+      Option(fs.globStatus(path)).filter(_.nonEmpty).map(_.toSeq.flatMap { st =>
+        val it = fs.listFiles(st.getPath, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      })
+    }
+    if (matched.exists(_.isEmpty)) None
+    else Some(matched.flatMap(_.get).map(st =>
+      (st.getPath.toString, st.getLen, st.getModificationTime)))
   }
 
   /** Fanned documents load for single-pass expression-heavy pipelines
@@ -158,7 +228,7 @@ object Tables {
     val ldt = java.time.LocalDateTime.parse(cutoffUtc.replace(' ', 'T'))
     val i = ldt.toInstant(java.time.ZoneOffset.UTC)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     val filtered = raw.schema("ts").dataType match {
       case LongType =>
         val cutoffNs = i.getEpochSecond * 1000000000L + i.getNano

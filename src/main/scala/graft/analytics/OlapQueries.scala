@@ -617,8 +617,7 @@ object OlapQueries extends graft.GateModule {
     * smaller than k report exactly. */
   def kmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TopK
-    val mink = udaf(new TopK.TopKAgg(kmvK),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
+    val mink = udaf(new TopK.TopKAgg(kmvK), TopK.scoredEncoder)
     val base = Tables.load(spark, dir, "lineitem")
       .select(col("l_returnflag"),
         pmod(col("l_partkey") * lit(1103515245L) + lit(12345L),
@@ -665,8 +664,7 @@ object OlapQueries extends graft.GateModule {
     import graft.functions.TopK
     val k = kmvK
     val M = 2147483648L
-    val mink = udaf(new TopK.TopKAgg(k),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
+    val mink = udaf(new TopK.TopKAgg(k), TopK.scoredEncoder)
     val nullL = lit(null).cast("long")
     val base = Tables.load(spark, dir, "events")
       .filter(col("event_type").isin("click", "purchase"))

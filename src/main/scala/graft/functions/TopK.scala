@@ -32,16 +32,22 @@ object TopK extends graft.GateModule {
     override def merge(x: List[Scored], y: List[Scored]): List[Scored] =
       trim(x ++ y)
     override def finish(r: List[Scored]): Seq[Scored] = r.sortWith(better)
-    override def bufferEncoder: Encoder[List[Scored]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[Scored]]()
-    override def outputEncoder: Encoder[Seq[Scored]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
+    override def bufferEncoder: Encoder[List[Scored]] = bufferEnc
+    override def outputEncoder: Encoder[Seq[Scored]] = outputEnc
   }
+
+  // derived once: each derivation walks the types through Scala
+  // reflection, and Spark asks for these on every plan of the aggregate
+  val scoredEncoder: Encoder[Scored] = Encoders.product[Scored]
+  private val bufferEnc: Encoder[List[Scored]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[Scored]]()
+  private val outputEnc: Encoder[Seq[Scored]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
 
   /** Gate query: top-3 orders by value per priority through the
     * aggregator, exploded back to rows; oracle is the QUALIFY form. */
   def topOrders(spark: SparkSession, dir: String): DataFrame = {
-    val top3 = udaf(new TopKAgg(3), Encoders.product[Scored])
+    val top3 = udaf(new TopKAgg(3), scoredEncoder)
     Tables.load(spark, dir, "orders")
       .groupBy("o_orderpriority")
       .agg(top3(col("o_totalprice"), col("o_orderkey")).as("top"))

@@ -112,7 +112,7 @@ object Dedup extends graft.GateModule {
     // stored pair table ([[ensureCanonicalStaging]]): the provenance
     // matrix consumes the banding method's persisted output — the
     // method itself is timed end-to-end by dedup_jaccard_exact
-    val pairs = spark.read.parquet(
+    val pairs = Tables.parquet(spark,
       ensureCanonicalStaging(spark, dir).resolve("mh_pairs.parquet").toString)
     val src = docs.select(col("doc_id"), col("source"))
     pairs
@@ -355,7 +355,7 @@ object Dedup extends graft.GateModule {
       // stored pair table: clustering consumes the banding method's
       // persisted output, as the production keep-list job does
       dupClustersStar(docs.select(col("doc_id")),
-        spark.read.parquet(st.resolve("mh_pairs.parquet").toString))._1
+        Tables.parquet(spark, st.resolve("mh_pairs.parquet").toString))._1
     }
 
   /** Connected components by large-star/small-star alternation
@@ -614,7 +614,7 @@ object Dedup extends graft.GateModule {
       val st = ensureCanonicalStaging(spark, dir)
       val docs = Tables.load(spark, dir, "documents")
       dupClustersStar(docs.select(col("doc_id")),
-        spark.read.parquet(st.resolve("mh_pairs.parquet").toString))._1
+        Tables.parquet(spark, st.resolve("mh_pairs.parquet").toString))._1
     }
 
   // --- SimHash -----------------------------------------------------------
@@ -847,8 +847,8 @@ object Dedup extends graft.GateModule {
     // pressure back-to-back).
     val st = ensureCanonicalStaging(spark, dir)
     methodAgreementFrom(
-      spark.read.parquet(st.resolve("mh_pairs.parquet").toString),
-      spark.read.parquet(st.resolve("sh_pairs.parquet").toString))
+      Tables.parquet(spark, st.resolve("mh_pairs.parquet").toString),
+      Tables.parquet(spark, st.resolve("sh_pairs.parquet").toString))
   }
 
   /** The agreement readout over two stored pair tables (da, db): one
@@ -880,7 +880,7 @@ object Dedup extends graft.GateModule {
     // stored pair table (parquet — rescannable, so unlike the old
     // inline pipeline it needs no persist): the calibration scores the
     // banding method's persisted output against exact Jaccard
-    val pairs = spark.read.parquet(
+    val pairs = Tables.parquet(spark,
       st.resolve("mh_pairs.parquet").toString)
     val sigs = minhashSigs(docs, reproducible = true)
     def side(p: String) = sigs.select(
@@ -1173,9 +1173,9 @@ object Dedup extends graft.GateModule {
     // artifact is many-split and fanout no-ops (guide §2.5).
     setSimJoinFromParts(
       Tables.fanout(
-        spark.read.parquet(st.resolve("pref.parquet").toString),
+        Tables.parquet(spark, st.resolve("pref.parquet").toString),
         col("doc_id")),
-      spark.read.parquet(st.resolve("doctoks.parquet").toString),
+      Tables.parquet(spark, st.resolve("doctoks.parquet").toString),
       setSimNum, setSimDen)
   }
 
@@ -1335,9 +1335,9 @@ object Dedup extends graft.GateModule {
     // the seed's token-explode stage is sub-0.3 s.
     withMemberCounts(canonicalLabelsFromParts(nodes,
       Tables.fanout(
-        spark.read.parquet(st.resolve("pref.parquet").toString),
+        Tables.parquet(spark, st.resolve("pref.parquet").toString),
         col("doc_id")),
-      spark.read.parquet(st.resolve("doctoks.parquet").toString),
+      Tables.parquet(spark, st.resolve("doctoks.parquet").toString),
       setSimNum, setSimDen))
   }
 
@@ -1544,10 +1544,10 @@ object Dedup extends graft.GateModule {
     // delta filter evaluates above the fan-out barrier — cheap long
     // comparison; at 100 TB fanout no-ops and pushdown is preserved.
     val pref = Tables.fanout(
-      spark.read.parquet(st.resolve("pref.parquet").toString),
+      Tables.parquet(spark, st.resolve("pref.parquet").toString),
       col("doc_id"))
-    val docToks = spark.read.parquet(st.resolve("doctoks.parquet").toString)
-    val baseLab = spark.read.parquet(st.resolve("base_labels.parquet").toString)
+    val docToks = Tables.parquet(spark, st.resolve("doctoks.parquet").toString)
+    val baseLab = Tables.parquet(spark, st.resolve("base_labels.parquet").toString)
     incrementalFromParts(Tables.load(spark, dir, "documents"), baseLab,
       col("doc_id") > cut, pref, docToks, setSimNum, setSimDen)
   }
@@ -1839,11 +1839,11 @@ object Dedup extends graft.GateModule {
       dir: String): (Long, Long, Long) = {
     val st = ensureCanonicalStaging(spark, dir)
     val ranked = Tables.fanout(
-      spark.read.parquet(st.resolve("ranked.parquet").toString),
+      Tables.parquet(spark, st.resolve("ranked.parquet").toString),
       col("doc_id")) // same fanned read as containmentQuery
     val (hits, cand) = containmentCandidateFrames(ranked, containNum,
       containDen, probePred = col("doc_id") % 10 === 0)
-    val docToks = spark.read.parquet(st.resolve("doctoks.parquet").toString)
+    val docToks = Tables.parquet(spark, st.resolve("doctoks.parquet").toString)
     import graft.functions.SortedIntersectCount.sorted_intersect_count
     val verified = cand
       .join(docToks.select(col("doc_id").as("da"), col("toks").as("ta")), "da")
@@ -1879,9 +1879,9 @@ object Dedup extends graft.GateModule {
     // exchange (ReusedExchange — identical subtrees).
     containmentJoinFromParts(
       Tables.fanout(
-        spark.read.parquet(st.resolve("ranked.parquet").toString),
+        Tables.parquet(spark, st.resolve("ranked.parquet").toString),
         col("doc_id")),
-      spark.read.parquet(st.resolve("doctoks.parquet").toString),
+      Tables.parquet(spark, st.resolve("doctoks.parquet").toString),
       containNum, containDen, probePred = col("doc_id") % 10 === 0)
   }
       .groupBy(col("da"))
@@ -1916,7 +1916,7 @@ object Dedup extends graft.GateModule {
       val st = ensureCanonicalStaging(spark, dir)
       val docs = Tables.load(spark, dir, "documents")
       val clusters = dupClustersStar(docs.select(col("doc_id")),
-        spark.read.parquet(st.resolve("mh_pairs.parquet").toString))._1
+        Tables.parquet(spark, st.resolve("mh_pairs.parquet").toString))._1
       val scored = graft.functions.TextAnalysis.qualityScore(spark, dir)
         .select(col("doc_id"), col("score"))
       val w = org.apache.spark.sql.expressions.Window
@@ -2059,7 +2059,7 @@ object Dedup extends graft.GateModule {
     // banding pipeline is timed end-to-end by dedup_simhash_pairs);
     // this gate times the TF-weighted vector build + cosine verify
     cosineVerify(cosineVectors(docs),
-      spark.read.parquet(st.resolve("sh_pairs.parquet").toString))
+      Tables.parquet(spark, st.resolve("sh_pairs.parquet").toString))
   }
 
   /** Lossless all-pairs cosine join above `num/den` (Bayardo, Ma &

@@ -1003,7 +1003,7 @@ object Similarity extends graft.GateModule {
 
   /** The staged verified pair table (a, b) for `dir`'s embeddings. */
   private def stagedEmbedPairs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ensureEmbedPairStaging(spark, dir)
+    Tables.parquet(spark, ensureEmbedPairStaging(spark, dir)
       .resolve("pairs.parquet").toString)
 
   /** LSH recall scorecard — the one-row eval every approximate-dedup

@@ -255,8 +255,7 @@ object TrainPrep extends graft.GateModule {
     * same exchange volume as a tiny one. */
   def sourceCap(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TopK
-    val topk = udaf(new TopK.TopKAgg(sourceCapK),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
+    val topk = udaf(new TopK.TopKAgg(sourceCapK), TopK.scoredEncoder)
     // raw scan, not Tables.docs: the cap reads (source, doc_id) only and
     // its per-row work is one LCG multiply — the r12 text fan-out
     // exchange DOUBLED this gate at the canonical 32-core config

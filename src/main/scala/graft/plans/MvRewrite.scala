@@ -71,7 +71,7 @@ object MvRewrite extends Rule[LogicalPlan] {
         Some(a.name)
       case _ => None
     }
-    mvPlan = SparkSession.active.read.parquet(mv.mvPath)
+    mvPlan = graft.Tables.parquet(SparkSession.active, mv.mvPath)
       .queryExecution.analyzed
     mvAttr = mvPlan.output.map(a => a.name -> a).toMap
     newAggs <- traverse(agg.aggregateExpressions)(

@@ -70,7 +70,7 @@ object BloomIndex extends graft.GateModule {
   def index(spark: SparkSession, path: String): DataFrame = {
     val pos = explode(array((0 until nHashes)
       .map(i => bloomPosCol(col("user_id"), i)): _*)).as("pos")
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .select(col("user_id"), col("_metadata.file_path").as("file"))
       .select(col("file"), pos)
       .groupBy(col("file"), (col("pos") / 64).cast("long").as("word"))
@@ -94,7 +94,7 @@ object BloomIndex extends graft.GateModule {
     * span (dense ids, so both exist — but correctness never depends
     * on that). */
   private def probeKeys(spark: SparkSession, path: String): Seq[Long] = {
-    val Array(lo, hi) = spark.read.parquet(path)
+    val Array(lo, hi) = Tables.parquet(spark, path)
       .agg(min(col("user_id")), max(col("user_id")))
       .collect()(0).toSeq.map(_.toString.toLong).toArray
     val span = hi - lo
@@ -113,8 +113,8 @@ object BloomIndex extends graft.GateModule {
     val keep = keys.flatMap(candidateFiles(idx, _)).distinct
     val src =
       if (keep.isEmpty)
-        spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(keep: _*)
+        Tables.parquet(spark, path).filter(lit(false))
+      else Tables.parquet(spark, keep: _*)
     src.filter(col("user_id").isin(keys: _*))
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"),

@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -105,7 +106,7 @@ object Catalog extends graft.GateModule {
     spark.table(table).write.mode("overwrite").parquet(path)
 
   def restore(spark: SparkSession, path: String, table: String): Unit =
-    spark.read.parquet(path).write.mode("overwrite").insertInto(table)
+    Tables.parquet(spark, path).write.mode("overwrite").insertInto(table)
 
   /** K3 extension (reference README's export roadmap): export any
     * DataFrame as parquet/orc/csv/json. Parquet/ORC are the columnar
@@ -197,7 +198,7 @@ object Catalog extends graft.GateModule {
           .createTempDirectory(s"graft_retention_$table")
         try {
           kept.write.mode("overwrite").parquet(staging.toString)
-          spark.read.parquet(staging.toString).write.mode("overwrite")
+          Tables.parquet(spark, staging.toString).write.mode("overwrite")
             .insertInto(table)
         } finally org.apache.hadoop.fs.FileUtil.fullyDelete(staging.toFile)
       }

@@ -50,7 +50,7 @@ object Compaction extends graft.GateModule {
       target: Long = targetBytes): (Int, Int) = {
     val (bytes, nBefore) = dirStats(spark, inPath)
     val nOut = math.max(1L, (bytes + target - 1) / target).toInt
-    val df = spark.read.parquet(inPath)
+    val df = Tables.parquet(spark, inPath)
     val packed = if (nOut < nBefore) df.coalesce(nOut) else df.repartition(nOut)
     packed.write.mode("overwrite").parquet(outPath)
     (nBefore, dirStats(spark, outPath)._2)
@@ -74,7 +74,7 @@ object Compaction extends graft.GateModule {
         .write.mode("overwrite").parquet(fragDir)
       compact(spark, fragDir, outDir)
     }
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"),
         countDistinct(col("user_id")).as("n_users"),

@@ -36,27 +36,32 @@ object Partitioned extends graft.GateModule {
     * DDL names the partition column LAST so positional insertInto
     * lines up; the dim is a plain parquet so the DPP rule sees a real
     * file scan with a selective filter (the production shape — dims
-    * live in tables, not literals). */
+    * live in tables, not literals). A warm call runs no statement and
+    * no job: the table is created only when the catalog lacks it, and
+    * filled when just created (its partitions are registered by the
+    * insert, not by files an earlier session left at the location) or
+    * when its location holds no data file. */
   def bootstrap(spark: SparkSession, dir: String): (String, String) = {
     val tag = sfTag(dir)
     val factT = s"events_p_$tag"
     val loc = s"${Catalog.warehouse}/partitioned/$tag"
     val dimPath = s"$loc/event_tier"
-    spark.sql(
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val created = !spark.catalog.tableExists(factT)
+    if (created) spark.sql(
       s"""CREATE TABLE IF NOT EXISTS $factT (
          |  event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT,
          |  value DOUBLE, props STRING, event_type STRING)
          |USING PARQUET
          |PARTITIONED BY (event_type)
          |LOCATION '$loc/$factT'""".stripMargin)
-    if (spark.table(factT).isEmpty) {
+    if (created || !hasDataFile(fs, s"$loc/$factT")) {
       Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("value"), col("props"), col("event_type"))
         .write.mode("overwrite").insertInto(factT)
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(dimPath))) {
       Tables.load(spark, dir, "events")
         .select(col("event_type")).distinct()
@@ -69,6 +74,19 @@ object Partitioned extends graft.GateModule {
     (factT, dimPath)
   }
 
+  /** Whether a file lies under `path` with no hidden (`_`/`.`) name on
+    * the way, as a Spark scan would list it (a Hadoop FS listing that
+    * stops at the first one). */
+  private def hasDataFile(fs: org.apache.hadoop.fs.FileSystem, path: String): Boolean = {
+    val p = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
+    fs.exists(p) && {
+      val it = fs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext)
+        .map(_.next().getPath.toString.stripPrefix(p.toString).split('/').filter(_.nonEmpty))
+        .exists(_.forall(n => !n.startsWith("_") && !n.startsWith(".")))
+    }
+  }
+
   /** Gate query: per-type conversion volume through the partitioned
     * fact ⋈ filtered dim join. The plan's fact scan carries a
     * `dynamicpruning` partition filter (asserted by the spec): only
@@ -79,7 +97,7 @@ object Partitioned extends graft.GateModule {
     * exchange is the final 5-row agg. */
   def dppJoin(spark: SparkSession, dir: String): DataFrame = {
     val (factT, dimPath) = bootstrap(spark, dir)
-    val dim = spark.read.parquet(dimPath).filter(col("tier") === "conv")
+    val dim = Tables.parquet(spark, dimPath).filter(col("tier") === "conv")
     spark.table(factT)
       .join(broadcast(dim), "event_type")
       .groupBy("event_type")

@@ -68,13 +68,13 @@ object TimeTravel extends graft.GateModule {
   /** Pinned read: largest manifest version ≤ `asOf`. The collect is
     * ONE manifest row (bounded by the version count, never data). */
   def readAsOf(spark: SparkSession, base: String, asOf: Long): DataFrame = {
-    val pick = spark.read.parquet(s"$base/_versions")
+    val pick = Tables.parquet(spark, s"$base/_versions")
       .filter(col("version") <= asOf)
       .orderBy(col("version").desc)
       .limit(1)
       .collect()
     require(pick.nonEmpty, s"no snapshot at or before version $asOf")
-    spark.read.parquet(pick(0).getAs[String]("path"))
+    Tables.parquet(spark, pick(0).getAs[String]("path"))
       .withColumn("version", lit(pick(0).getAs[Long]("version")))
   }
 

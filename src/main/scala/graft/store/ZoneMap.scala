@@ -55,7 +55,7 @@ object ZoneMap extends graft.GateModule {
     * count. Reads only the key column (column-pruned scan); at scale
     * this is the manifest-build job, run once per compaction. */
   def stats(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .select(col("user_id"), col("_metadata.file_path").as("file"))
       .groupBy("file")
       .agg(min(col("user_id")).as("u_min"), max(col("user_id")).as("u_max"),
@@ -75,7 +75,7 @@ object ZoneMap extends graft.GateModule {
     val (lo, hi) = (uMin + span * 3 / 5, uMin + span * 4 / 5)
     val keep = zm.filter(r => r.getLong(2) >= lo && r.getLong(1) <= hi)
       .map(_.getString(0))
-    spark.read.parquet(keep: _*)
+    Tables.parquet(spark, keep: _*)
       .filter(col("user_id").between(lo, hi))
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"),

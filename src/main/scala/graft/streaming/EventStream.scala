@@ -45,7 +45,7 @@ object EventStream extends graft.GateModule {
     // read of the legacy ns-int64 corpus and a no-op on timestamp
     // corpora, so scoping it per gate would only thrash the conf.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     val stream = spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -1000,7 +1000,7 @@ object EventStream extends graft.GateModule {
   def streamSliding(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     val stream = spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")

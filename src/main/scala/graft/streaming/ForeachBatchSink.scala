@@ -57,7 +57,7 @@ object ForeachBatchSink extends graft.GateModule {
         .collect().map(_.getLong(0))
       val current =
         if (new java.io.File(table).exists())
-          batch.sparkSession.read.parquet(table)
+          Tables.parquet(batch.sparkSession, table)
             .filter(col("bucket").isin(touched.toIndexedSeq: _*))
         else latest.limit(0)
       val merged = Upsert.upsert(current, latest, keys = Seq("user_id"))
@@ -66,7 +66,7 @@ object ForeachBatchSink extends graft.GateModule {
       val stage = gateDir("graft_fbm_stage").toString
       merged.write.mode("overwrite").parquet(stage)
       Upsert.writePartitioned(
-        batch.sparkSession.read.parquet(stage), table, "bucket")
+        Tables.parquet(batch.sparkSession, stage), table, "bucket")
     }
     val q = spark.readStream.schema(purchases.schema)
       .option("maxFilesPerTrigger", "1")
@@ -76,7 +76,7 @@ object ForeachBatchSink extends graft.GateModule {
       .foreachBatch(mergeBatch)
       .start()
     try q.processAllAvailable() finally { StreamMetrics.record(q); q.stop() }
-    spark.read.parquet(table)
+    Tables.parquet(spark, table)
       .select(col("user_id"), col("value"),
         date_trunc("second", col("ts")).as("ts_s"))
   }
@@ -110,7 +110,7 @@ object ForeachBatchSink extends graft.GateModule {
         .distinct().collect().map(_.getLong(0)) // <= 8 bucket ids
       val current =
         if (new java.io.File(table).exists())
-          batch.sparkSession.read.parquet(table)
+          Tables.parquet(batch.sparkSession, table)
             .filter(col("bucket").isin(touched.toIndexedSeq: _*))
         else batch.limit(0)
       val folded = Scd.scd2Apply(current, batch)
@@ -118,7 +118,7 @@ object ForeachBatchSink extends graft.GateModule {
       val stage = gateDir("graft_scd_stage").toString
       folded.write.mode("overwrite").parquet(stage)
       Upsert.writePartitioned(
-        batch.sparkSession.read.parquet(stage), table, "bucket")
+        Tables.parquet(batch.sparkSession, stage), table, "bucket")
     }
     val q = spark.readStream.schema(purchases.schema)
       .option("maxFilesPerTrigger", "1")
@@ -128,7 +128,7 @@ object ForeachBatchSink extends graft.GateModule {
       .foreachBatch(applyBatch)
       .start()
     try q.processAllAvailable() finally { StreamMetrics.record(q); q.stop() }
-    Scd.deriveHistory(spark.read.parquet(table))
+    Scd.deriveHistory(Tables.parquet(spark, table))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

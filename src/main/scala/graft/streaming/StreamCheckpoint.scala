@@ -57,7 +57,7 @@ object StreamCheckpoint extends graft.GateModule {
     run() // first life: commits batch 0 (the pre-cut file)
     place(batch.filter(col("ts") >= cut), "b01.parquet", 1)
     run() // restart from the SAME checkpoint: must process ONLY b01
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
       .groupBy(date_trunc("hour", col("ts")).as("hour_start"),
         col("event_type"))
       .agg(count(lit(1)).as("cnt"), Tables.dsum(col("value")).as("val_sum"))

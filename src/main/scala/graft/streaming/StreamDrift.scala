@@ -39,7 +39,7 @@ object StreamDrift extends graft.GateModule {
         .groupBy(col("event_type"), binCol.as("bin"))
         .agg(count(lit(1)).as("ref_cnt"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
+      val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
       val cellsStream = spark.readStream
         .schema(schema)
         .option("pathGlobFilter", "events.parquet")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +32,7 @@ object StreamSketch extends graft.GateModule {
   def streamHllDistinct(spark: SparkSession, dir: String): DataFrame =
     EventStream.withConf(spark, "spark.sql.shuffle.partitions",
       EventStream.streamShufflePartitions) {
-      val schema = spark.read.parquet(s"$dir/lineitem.parquet").schema
+      val schema = Tables.parquet(spark, s"$dir/lineitem.parquet").schema
       val regs = spark.readStream
         .schema(schema)
         .option("pathGlobFilter", "lineitem.parquet")

@@ -332,7 +332,7 @@ class BehaviorSpec extends AnyFunSuite {
     assert(mutants.nonEmpty)
     val vocab = (base +: mutants).toDF("p_name")
     // reuse the gate's expansion by writing vocab as a part table stand-in
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuzzy").toString
+    val dir = graft.store.Staging.jvmDir("graft_fuzzy").toString
     vocab.withColumn("p_type", lit("T")).withColumn("p_brand", lit("B"))
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
     val pairs = JoinQueries.fuzzyJoin(spark, dir)

@@ -47,7 +47,7 @@ class CatalogSpec extends AnyFunSuite {
         "total_records")
       .write.mode("append").insertInto("stock_metadata")
     val before = spark.table("stock_metadata").count()
-    val path = java.nio.file.Files.createTempDirectory("graft_snap").toString
+    val path = graft.store.Staging.jvmDir("graft_snap").toString
     Catalog.snapshot(spark, "stock_metadata", path)
     Catalog.restore(spark, path, "stock_metadata")
     assert(spark.table("stock_metadata").count() == before)

@@ -28,7 +28,7 @@ class ClusterSmokeSpec extends AnyFunSuite {
     val classesDirs = cp.split(java.io.File.pathSeparator)
       .filter(p => p.endsWith("classes") || p.endsWith("test-classes"))
       .mkString(java.io.File.pathSeparator)
-    val out = java.nio.file.Files.createTempDirectory("cluster_smoke").toString
+    val out = graft.store.Staging.jvmDir("cluster_smoke").toString
     val log = new StringBuilder
     val cmd = Seq(
       s"${sys.props("java.home")}/bin/java",

@@ -7,11 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class CompactionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_compact_$name")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmp(name: String): String =
+    graft.store.Staging.jvmDir(s"graft_compact_$name").toString
 
   test("compaction shrinks file count to the byte-target bin count") {
     val in = s"${tmp("in")}/frag"

@@ -14,8 +14,7 @@ class FormatSpec extends AnyFunSuite {
 
   for (fmt <- Seq("parquet", "orc", "json", "csv")) {
     test(s"orders round-trips through $fmt") {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"graft_fmt_$fmt").toString
+      val out = graft.store.Staging.jvmDir(s"graft_fmt_$fmt").toString
       val src = orders
       Catalog.export(src, out, fmt)
       val back = Catalog.importAs(spark, out, fmt, src.schema)
@@ -32,7 +31,7 @@ class FormatSpec extends AnyFunSuite {
   }
 
   test("parquet round-trip is bitwise-complete on all columns") {
-    val out = java.nio.file.Files.createTempDirectory("graft_fmt_full").toString
+    val out = graft.store.Staging.jvmDir("graft_fmt_full").toString
     Catalog.export(orders, out, "parquet")
     val back = Catalog.importAs(spark, out, "parquet", orders.schema)
     assert(orders.exceptAll(back).isEmpty && back.exceptAll(orders).isEmpty)

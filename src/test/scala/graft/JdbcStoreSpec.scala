@@ -10,7 +10,7 @@ class JdbcStoreSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private lazy val url = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby")
+    val dir = graft.store.Staging.jvmDir("graft_derby")
     s"jdbc:derby:$dir/db;create=true"
   }
 

@@ -49,7 +49,7 @@ class OpsSpec extends AnyFunSuite {
         "total_records")
       .write.mode("append").insertInto("stock_metadata")
     val before = spark.table("stock_metadata").count()
-    val dir = java.nio.file.Files.createTempDirectory("ops_backup").toString
+    val dir = graft.store.Staging.jvmDir("ops_backup").toString
     assert(capture("backup", "stock_metadata", s"$dir/snap")()._1 == 0)
     assert(capture("restore", s"$dir/snap", "stock_metadata")()._1 == 0)
     assert(spark.table("stock_metadata").count() == before)

@@ -40,4 +40,10 @@ class PartitionedDppSpec extends AnyFunSuite {
     val planStr = one.queryExecution.executedPlan.toString
     assert(planStr.contains("PartitionFilters"), planStr)
   }
+
+  test("a warm bootstrap runs no statement or query") {
+    Partitioned.bootstrap(spark, SparkTestSession.sf)
+    val (_, executed) = PlanDump.executed(spark)(Partitioned.bootstrap(spark, SparkTestSession.sf))
+    assert(executed.isEmpty, executed.mkString("\n"))
+  }
 }

@@ -12,7 +12,7 @@ class PartitionedWriteSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   test("dynamic date-partitioned write + partition-pruned scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = graft.store.Staging.jvmDir("graft_part").toString
     val df = Tables.load(spark, SparkTestSession.sf, "orders")
       .withColumn("order_date", col("o_orderdate").cast("date"))
       .withColumn("order_year", year(col("o_orderdate")))
@@ -120,7 +120,7 @@ class PartitionedWriteSpec extends AnyFunSuite {
   }
 
   test("dynamic overwrite replaces only touched partitions") {
-    val out = java.nio.file.Files.createTempDirectory("graft_dyn").toString
+    val out = graft.store.Staging.jvmDir("graft_dyn").toString
     import spark.implicits._
     val v1 = Seq((1L, "a", 2000), (2L, "b", 2001)).toDF("k", "v", "y")
     Upsert.writePartitioned(v1, out, "y")

@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ResilienceSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
 
-  private def freshDir(): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory("resilience")
-    d.toFile.deleteOnExit()
-    d
-  }
+  private def freshDir(): java.nio.file.Path = graft.store.Staging.jvmDir("resilience")
 
   private def writeGoodAndCorrupt(): String = {
     val dir = freshDir().toString

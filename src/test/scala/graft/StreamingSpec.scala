@@ -20,7 +20,7 @@ class StreamingSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(dir)
 
   test("file stream discovers late-arriving files across micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_in").toString
+    val dir = graft.store.Staging.jvmDir("graft_stream_in").toString
     writeBatch(dir, 10, 0)
     val schema = spark.read.parquet(dir).schema
     val q = spark.readStream.schema(schema).parquet(dir)
@@ -41,7 +41,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dedup within watermark drops re-delivered events (M3)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_dd").toString
+    val dir = graft.store.Staging.jvmDir("graft_stream_dd").toString
     writeBatch(dir, 10, 0)
     writeBatch(dir, 10, 0) // exact re-delivery of the same 10 events
     val schema = spark.read.parquet(dir).schema
@@ -61,7 +61,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("watermark + append emits only windows sealed by the watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_wm").toString
+    val dir = graft.store.Staging.jvmDir("graft_stream_wm").toString
     writeBatch(dir, 10, 0)   // hour 0
     writeBatch(dir, 5, 3)    // hour 3 advances watermark past hour 0+1h
     val schema = spark.read.parquet(dir).schema

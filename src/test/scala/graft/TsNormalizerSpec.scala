@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,8 +20,7 @@ class TsNormalizerSpec extends AnyFunSuite {
   private val micros = 1704067200123456L // 2024-01-01 00:00:00.123456 UTC
 
   private def writeFixture(dfWriter: String => Unit): String = {
-    val dir = Files.createTempDirectory("graft_ts_fixture").toFile
-    dir.deleteOnExit()
+    val dir = graft.store.Staging.jvmDir("graft_ts_fixture").toFile
     dfWriter(dir.getAbsolutePath)
     dir.getAbsolutePath
   }

@@ -14,7 +14,7 @@ class VerifyContractSpec extends AnyFunSuite {
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
 
   test("healthy run: parquet per query, empty _errors.json, oracle dump") {
-    val out = java.nio.file.Files.createTempDirectory("verify_ok").toString
+    val out = graft.store.Staging.jvmDir("verify_ok").toString
     val errors = Verify.run(spark, SparkTestSession.sf, out,
       only = Some(Set("core_health_probe", "core_summary_stats")))
     assert(errors.isEmpty)
@@ -30,7 +30,7 @@ class VerifyContractSpec extends AnyFunSuite {
   }
 
   test("filter with an unknown gate name: it is an error, real gates still run") {
-    val out = java.nio.file.Files.createTempDirectory("verify_typo").toString
+    val out = graft.store.Staging.jvmDir("verify_typo").toString
     val errors = Verify.run(spark, SparkTestSession.sf, out,
       only = Some(Set("core_health_probe", "no_such_gate")))
     assert(errors.keySet == Set("no_such_gate"))
@@ -39,7 +39,7 @@ class VerifyContractSpec extends AnyFunSuite {
   }
 
   test("degraded run: a missing corpus yields per-query errors, not silence") {
-    val out = java.nio.file.Files.createTempDirectory("verify_bad").toString
+    val out = graft.store.Staging.jvmDir("verify_bad").toString
     val names = Set("core_summary_stats", "text_stats")
     val errors = Verify.run(spark, "/nonexistent_corpus_dir", out,
       only = Some(names))

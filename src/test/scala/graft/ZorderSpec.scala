@@ -23,7 +23,7 @@ class ZorderSpec extends AnyFunSuite {
   /** Per-file (min,max) of both dimensions after writing events under
     * the given layout — the stats parquet pruning operates on. */
   private def fileStats(write: (DataFrame, String) => Unit): Array[(Long, Long, Long, Long)] = {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = graft.store.Staging.jvmDir("zorder").toString
     val ev = Zorder.zorderKeys(spark, SparkTestSession.sf)
     write(ev, dir)
     spark.read.parquet(dir)

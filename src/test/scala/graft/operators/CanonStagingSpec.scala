@@ -14,7 +14,7 @@ class CanonStagingSpec extends AnyFunSuite {
     * corpus file's mtime, so mutating the shared testdata is not an
     * option — and writing outside /tmp is banned anyway). */
   private def freshCorpusDir(): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory("graft_canonstage_corpus").toFile
+    val d = graft.store.Staging.jvmDir("graft_canonstage_corpus").toFile
     val src = new java.io.File(s"${graft.SparkTestSession.sf}/documents.parquet")
     java.nio.file.Files.copy(src.toPath,
       new java.io.File(d, "documents.parquet").toPath)
