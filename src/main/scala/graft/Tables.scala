@@ -40,6 +40,14 @@ object Tables {
       s"events.ts has unsupported physical type $other; extend Tables.tsNormalizer")
   }
 
+  /** Bytes of (compressed) scan input per fan-out task. The width
+    * below divides estimated input size by this, so small inputs get
+    * few, larger partitions instead of `defaultParallelism` near-empty
+    * ones (guide §2.2: shuffles degrade as block counts grow; §2.5
+    * sizes partitions to the data, never to the core count).
+    * Output-invariant: placement only. */
+  private val FanoutBytesPerTask = 65536L
+
   /** Adaptive scan fan-out (optimization guide §2.5, "input skew: one
     * huge unsplittable file"): a parquet ROW GROUP is the split atom,
     * and this corpus ships one single-row-group file per table — so a
@@ -61,14 +69,6 @@ object Tables {
     * frame would eagerly execute its shuffle stages under AQE. The
     * `.rdd` probe only ever runs on scan/filter/project-shaped frames,
     * where it is pure planning. */
-  /** Conf key: bytes of (compressed) scan input per fan-out task. The
-    * width knob below divides estimated input size by this, so small
-    * inputs get few, larger partitions instead of `defaultParallelism`
-    * near-empty ones (guide §2.2: shuffles degrade as block counts
-    * grow; §2.5 sizes partitions to the data, never to the core
-    * count). Output-invariant: placement only. */
-  val FanoutBytesPerTask = "spark.graft.fanout.bytesPerTask"
-
   def fanout(df: DataFrame, key: Column): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
     val cp = df.queryExecution.logical
@@ -91,12 +91,10 @@ object Tables {
     // 100 TB the guard above (splits >= parallelism) no-ops first, so
     // this width only ever shapes UNDER-SPLIT inputs.
     val par = spark.sparkContext.defaultParallelism
-    val perTask = spark.conf.getOption(FanoutBytesPerTask)
-      .map(_.trim.toLong).getOrElse(65536L)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
       .min(BigInt(Long.MaxValue)).toLong
-    val target = math.max(2L,
-      math.min(par.toLong, (bytes + perTask - 1) / perTask)).toInt
+    val target = math.max(2L, math.min(par.toLong,
+      (bytes + FanoutBytesPerTask - 1) / FanoutBytesPerTask)).toInt
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, key)
       // Pushdown barrier — an always-TRUE predicate (partition ids are
@@ -125,15 +123,28 @@ object Tables {
   // graph_modularity ran ~2x slower. Heavy single-pass pipelines call
   // [[fanout]] explicitly; cheap projections and iterative vertex
   // frames read the raw scan.
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      // harmless when ts is already a timestamp; required to read the
-      // legacy nanosecond-int64 corpus at all
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = parquet(spark, s"$dir/$name.parquet")
-      raw.withColumn("ts", tsNormalizer(raw.schema("ts").dataType))
-    } else parquet(spark, s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    decoded(name, parquet(spark, file(spark, dir, name)))
+
+  /** The streaming twin of [[load]]: table `name` as a file-source
+    * stream over `dir`, with the schema [[parquet]] resolves for the
+    * file and `events.ts` decoded as in [[load]]. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    decoded(name, spark.readStream
+      .schema(parquet(spark, file(spark, dir, name)).schema)
+      .option("pathGlobFilter", s"$name.parquet")
+      .parquet(dir))
+
+  private def file(spark: SparkSession, dir: String, name: String): String = {
+    // harmless when ts is already a timestamp; required to read the
+    // legacy nanosecond-int64 corpus at all
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s"$dir/$name.parquet"
   }
+
+  private def decoded(name: String, raw: DataFrame): DataFrame =
+    if (name == "events") raw.withColumn("ts", tsNormalizer(raw.schema("ts").dataType))
+    else raw
 
   /** The one schema-less parquet read: `spark.read.parquet(paths: _*)`,
     * minus the schema inference on repeat reads. Without a schema Spark
@@ -227,8 +238,7 @@ object Tables {
   def eventsFrom(spark: SparkSession, dir: String, cutoffUtc: String): DataFrame = {
     val ldt = java.time.LocalDateTime.parse(cutoffUtc.replace(' ', 'T'))
     val i = ldt.toInstant(java.time.ZoneOffset.UTC)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = parquet(spark, s"$dir/events.parquet")
+    val raw = parquet(spark, file(spark, dir, "events"))
     val filtered = raw.schema("ts").dataType match {
       case LongType =>
         val cutoffNs = i.getEpochSecond * 1000000000L + i.getNano

@@ -38,7 +38,9 @@ import org.apache.spark.sql.functions.{col, count_distinct, expr}
 object ApproxRewrite extends Rule[LogicalPlan] with graft.GateModule {
 
   val Flag = "spark.graft.approx.countDistinct"
-  val RsdKey = "spark.graft.approx.rsd"
+
+  /** HLL++ relative standard deviation of the rewritten distinct count. */
+  private val Rsd = 0.05
 
   /** Second rewrite under its OWN flag: exact `percentile(x, p)` →
     * `approx_percentile` (Greenwald–Khanna quantile summaries). The
@@ -53,29 +55,28 @@ object ApproxRewrite extends Rule[LogicalPlan] with graft.GateModule {
     * silently also get approximate percentiles — each flag's name
     * matches its blast radius exactly. */
   val PercentileFlag = "spark.graft.approx.percentile"
-  val AccuracyKey = "spark.graft.approx.percentileAccuracy"
+
+  /** GK summary accuracy of the rewritten percentile (rank error
+    * 1/accuracy). */
+  private val Accuracy = 10000
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val doDistinct = conf.getConfString(Flag, "false").toBoolean
     val doPct = conf.getConfString(PercentileFlag, "false").toBoolean
     if (!doDistinct && !doPct) plan
-    else {
-      val rsd = conf.getConfString(RsdKey, "0.05").toDouble
-      val acc = conf.getConfString(AccuracyKey, "10000").toInt
-      plan.transform {
-        case agg: Aggregate =>
-          agg.copy(aggregateExpressions = agg.aggregateExpressions
-            .map(rewriteNamed(_, doDistinct, doPct, rsd, acc)))
-      }
+    else plan.transform {
+      case agg: Aggregate =>
+        agg.copy(aggregateExpressions = agg.aggregateExpressions
+          .map(rewriteNamed(_, doDistinct, doPct)))
     }
   }
 
   private def rewriteNamed(e: NamedExpression, doDistinct: Boolean,
-      doPct: Boolean, rsd: Double, acc: Int): NamedExpression =
+      doPct: Boolean): NamedExpression =
     e.transformUp {
       case ae @ AggregateExpression(Count(Seq(child)), mode, true, filter, _)
           if doDistinct && child.deterministic =>
-        AggregateExpression(HyperLogLogPlusPlus(child, rsd), mode,
+        AggregateExpression(HyperLogLogPlusPlus(child, Rsd), mode,
           isDistinct = false, filter, NamedExpression.newExprId)
       case ae @ AggregateExpression(p: Percentile, mode, false, filter, _)
           if doPct
@@ -84,13 +85,13 @@ object ApproxRewrite extends Rule[LogicalPlan] with graft.GateModule {
             && !p.reverse && p.child.deterministic =>
         AggregateExpression(
           ApproximatePercentile(Cast(p.child, DoubleType),
-            p.percentageExpression, Literal(acc, IntegerType), 0, 0),
+            p.percentageExpression, Literal(Accuracy, IntegerType), 0, 0),
           mode, isDistinct = false, filter, NamedExpression.newExprId)
     }.asInstanceOf[NamedExpression]
 
   // --- accuracy-readout gate (r8 verdict #3) -----------------------------
 
-  /** HLL error budget for the gate: 3x the default rsd (0.05), in ppm.
+  /** HLL error budget for the gate: 3x [[Rsd]] (0.05), in ppm.
     * HLL++'s relative standard deviation makes a 3-sigma miss a
     * ~0.3% event; the gate publishes err DIV budget, so staying inside
     * the budget is hash-checked against the oracle's literal 0. */

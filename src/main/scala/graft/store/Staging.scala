@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *    drops. [[purgeGateDirs]] deletes them; [[graft.SparkEntry.isolated]]
   *    runs it after every gate, so no run leaves one behind;
   *  - JVM-scoped byte caches ([[jvmDir]]): content that never changes
-  *    within a JVM (replay sentinels, cached replay inputs), deleted
+  *    within a JVM (cached replay inputs, test scratch), deleted
   *    with any remaining gate dirs by one shutdown hook;
   *  - cross-JVM staged generations of a [[Family]] (`canon`,
   *    `embpairs`): once-per-corpus stored artifacts under a per-user

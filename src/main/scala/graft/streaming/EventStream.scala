@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Conf.withConf
 import graft.Tables
 import graft.Tables.dsum
 import graft.store.Staging
@@ -39,66 +40,23 @@ object EventStream extends graft.GateModule {
 
   def streamTumbling(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {
-    // ts normalization is schema-adaptive (ns-long vs timestamp[us]
-    // corpora). The flag is set session-wide ON PURPOSE — the same
-    // deliberate convention as Tables.load: it is required for every
-    // read of the legacy ns-int64 corpus and a no-op on timestamp
-    // corpora, so scoping it per gate would only thrash the conf.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", Tables.tsNormalizer(schema("ts").dataType))
+    val stream = Tables.stream(spark, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("hour_start"),
         col("event_type"))
       .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("val_sum"))
-    val name = "graft_stream_tumbling"
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // materialize the final snapshot before stopping the query
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_tumbling", "complete",
+      identity)
   }
 
-  /** Append-mode + watermark variant of the tumbling aggregation — the
-    * production streaming shape (complete mode re-emits everything each
-    * trigger; append emits each window exactly once, when the watermark
-    * passes its end, which is what a sink at scale needs).
-    *
-    * Determinism harness: the events are replayed as ONE file, followed
-    * by one far-future sentinel file (ascending mtimes +
-    * maxFilesPerTrigger=1 force ordered micro-batches, since the file
-    * source processes oldest-mtime first). The sentinel batch raises
-    * the watermark past every real window's end, and the engine's own
-    * no-data micro-batch applies it, flushing them all in append mode
-    * (deterministic: the stateful agg reports shouldRunAnotherBatch on
-    * watermark advance, and processAllAvailable cannot return before
-    * that batch commits); sentinel windows themselves are never
-    * flushed and are filtered by the far-future cutoff anyway. Output
-    * therefore equals the batch tumbling aggregation — the oracle is
-    * shared. */
-  /** Run `body` with a session conf temporarily overridden (gates run
-    * sequentially, so a scoped override is race-free). Streaming state
-    * operators allocate one state-store task per shuffle partition per
-    * trigger; the batch default (cores-count) means tiny-state queries
-    * pay 32 store open/commit cycles per trigger for no parallelism
-    * gain, so streaming gates drop it. On a cluster this is
-    * `spark.sql.streaming.numStatePartitions`-style sizing: state
-    * partitions should track state volume, not core count. */
-  private[streaming] def withConf[T](spark: SparkSession, key: String,
-      value: String)(body: => T): T =
-    graft.Conf.withConf(spark, key, value)(body)
-
+  /** Shuffle partitions of every streaming gate, set for the gate with
+    * [[graft.Conf.withConf]] (gates run sequentially, so a scoped
+    * override is race-free). Streaming state operators allocate one
+    * state-store task per shuffle partition per trigger; the batch
+    * default (cores-count) means tiny-state queries pay 32 store
+    * open/commit cycles per trigger for no parallelism gain. On a
+    * cluster this is `spark.sql.streaming.numStatePartitions`-style
+    * sizing: state partitions should track state volume, not core
+    * count. */
   // 4, not 8, since round 9: A/B on the five heaviest stream gates at
   // sf0.1 (min-of-3 each) measured 8 -> 20.26 s, 4 -> 18.54 s,
   // 2 -> 20.25 s — store open/commit overhead falls to 4 and compute
@@ -106,6 +64,12 @@ object EventStream extends graft.GateModule {
   // sweeps the partition axis); STREAMSCALE.json state totals are
   // partition-count-independent.
   private[streaming] val streamShufflePartitions = "4"
+
+  /** The state store the transformWithState (state v2) gates need:
+    * the API requires RocksDB, so those gates set it with `withConf`. */
+  private val stateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Land ONE DataFrame as a single parquet file `staging/<name>` with
     * a back-dated mtime at slot order `slot` — the unit step of replay
@@ -140,101 +104,53 @@ object EventStream extends graft.GateModule {
     * (the source processes oldest mtime first). Every dir is a
     * [[graft.store.Staging.gateDir]], deleted by the reset after each
     * gate (safe — each gate materializes its memory-sink snapshot
-    * before returning, so nothing re-reads staging). */
-  private[streaming] def stageReplay(frames: Seq[DataFrame]): String =
-    // multi-frame replays are always same-schema splits of one frame,
-    // so they take the one-job union path (unionByName fails loudly on
-    // a schema mismatch, which is the contract a future caller wants)
-    if (frames.size > 1) stageReplayUnion(frames)
-    else stageReplayKeyed(frames.map(f => (f, None)))
-
-  /** [[stageReplay]] where frames tagged with a cache key are staged
-    * from a once-per-JVM parquet byte cache instead of a fresh Spark
-    * write job. Sentinel frames are deterministic 1-row far-future
-    * markers that never change within a JVM, yet each used to cost a
-    * full coalesce(1) write JOB per gate per bench pass (12 sentinel
-    * writes per pass across the watermark-flush gates — pure harness
-    * tax the r10 verdict charged against the stream gates' wall
-    * time). The tagged frame is written once under a JVM-scoped cache
-    * dir ([[graft.store.Staging.jvmDir]]), then byte-copied into each
-    * staging dir; replay mtime ordering is applied to the COPY, exactly
-    * as [[stageFile]] does. Callers must only tag frames whose content is a pure
-    * function of the key. */
-  private[streaming] def stageReplayKeyed(
-      frames: Seq[(DataFrame, Option[String])]): String = {
-    import java.nio.file.Files
-    val work = Staging.gateDir("graft_stream_replay")
-    val staging = work.resolve("input")
-    Files.createDirectories(staging)
-    // one t0 for ALL slots (a per-slot "now" after a >60 s write job
-    // could overtake the next slot's mtime and reorder the replay)
-    val t0 = System.currentTimeMillis() - 600000L
-    frames.zipWithIndex.foreach {
-      case ((df, None), i) =>
-        stageFile(df, work, staging, f"b$i%02d.parquet", i, t0)
-      case ((df, Some(key)), i) =>
-        val src = sentinelCache.computeIfAbsent(key, _ => {
-          val d = Staging.jvmDir("graft_sentinel_cache")
-          val tmp = d.resolve("w").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-")
-              && f.getName.endsWith(".parquet")).get
-          val dest = d.resolve("f.parquet")
-          Files.move(part.toPath, dest,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dest
-        })
-        val dest = staging.resolve(f"b$i%02d.parquet")
-        Files.copy(src, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        require(dest.toFile.setLastModified(t0 + i * 60000L),
-          s"setLastModified failed on $dest — staged replay order would be undefined")
-    }
-    staging.toString
-  }
-
-  /** [[stageReplay]] for SAME-SCHEMA frames via ONE write job: union
-    * the frames with a slot column, repartition on it (all of a
-    * slot's rows land in exactly one task, so `partitionBy` writes
-    * exactly one part file per slot dir), then move each slot's file
-    * into replay position with the ordered mtimes. A per-frame
-    * coalesce(1) write is a separate Spark JOB — 7 jobs for the
+    * before returning, so nothing re-reads staging).
+    *
+    * One frame is one coalesce(1) write ([[stageFile]]). Several frames
+    * must share a schema (`unionByName` fails loudly otherwise) and
+    * take ONE write job: union them with a slot column, repartition on
+    * it (all of a slot's rows land in exactly one task, so
+    * `partitionBy` writes exactly one part file per slot dir), then
+    * move each slot's file into replay position with the ordered
+    * mtimes. A per-frame write is a separate Spark JOB — 7 jobs for the
     * watermarked-dedup replay, 63 for the fixed-rate history sweep —
-    * pure harness tax this removes. A slot with no rows writes no dir
-    * and falls back to the per-frame empty write, keeping the
+    * pure harness tax the union removes. A slot with no rows writes no
+    * dir and falls back to the per-frame empty write, keeping the
     * batch-count contract exact. */
-  private[streaming] def stageReplayUnion(frames: Seq[DataFrame]): String = {
+  private[streaming] def stageReplay(frames: Seq[DataFrame]): String = {
     import java.nio.file.{Files, StandardCopyOption}
     val work = Staging.gateDir("graft_stream_replay")
     val staging = work.resolve("input")
     Files.createDirectories(staging)
-    val slotted = frames.zipWithIndex
-      .map { case (df, i) => df.withColumn("__slot", lit(i)) }
-      .reduce(_.unionByName(_))
-    val tmp = work.resolve("u").toString
-    slotted.repartition(col("__slot")).write
-      .partitionBy("__slot").mode("overwrite").parquet(tmp)
+    // one t0 for ALL slots: stageFile's own default recomputes "now",
+    // which after a >60 s write job would overtake the following
+    // slot's mtime and reorder the replay
     val t0 = System.currentTimeMillis() - 600000L
-    frames.indices.foreach { i =>
-      val parts = Option(new java.io.File(tmp, s"__slot=$i").listFiles())
-        .map(_.filter(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet")).toSeq)
-        .getOrElse(Seq.empty)
-      val dest = staging.resolve(f"b$i%02d.parquet")
-      if (parts.isEmpty)
-        // thread THIS staging's t0: stageFile's own default recomputes
-        // "now", which after a >60 s union write would overtake the
-        // following slot's mtime and reorder the replay
-        stageFile(frames(i).limit(0), work, staging, f"b$i%02d.parquet", i, t0)
-      else {
-        // one partition per slot by construction; more files would
-        // silently split a micro-batch — fail loudly instead
-        require(parts.size == 1,
-          s"slot $i wrote ${parts.size} files — replay batching undefined")
-        Files.move(parts.head.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
-        require(dest.toFile.setLastModified(t0 + i * 60000L),
-          s"setLastModified failed on $dest — staged replay order would be undefined")
+    if (frames.size == 1) stageFile(frames.head, work, staging, "b00.parquet", 0, t0)
+    else {
+      val slotted = frames.zipWithIndex
+        .map { case (df, i) => df.withColumn("__slot", lit(i)) }
+        .reduce(_.unionByName(_))
+      val tmp = work.resolve("u").toString
+      slotted.repartition(col("__slot")).write
+        .partitionBy("__slot").mode("overwrite").parquet(tmp)
+      frames.indices.foreach { i =>
+        val parts = Option(new java.io.File(tmp, s"__slot=$i").listFiles())
+          .map(_.filter(f => f.getName.startsWith("part-")
+            && f.getName.endsWith(".parquet")).toSeq)
+          .getOrElse(Seq.empty)
+        val dest = staging.resolve(f"b$i%02d.parquet")
+        if (parts.isEmpty)
+          stageFile(frames(i).limit(0), work, staging, f"b$i%02d.parquet", i, t0)
+        else {
+          // one partition per slot by construction; more files would
+          // silently split a micro-batch — fail loudly instead
+          require(parts.size == 1,
+            s"slot $i wrote ${parts.size} files — replay batching undefined")
+          Files.move(parts.head.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
+          require(dest.toFile.setLastModified(t0 + i * 60000L),
+            s"setLastModified failed on $dest — staged replay order would be undefined")
+        }
       }
     }
     staging.toString
@@ -243,9 +159,9 @@ object EventStream extends graft.GateModule {
   /** Per-JVM cache of FULLY STAGED replay-input directories, keyed by
     * a caller-supplied key that must DETERMINE the staged content —
     * include the corpus dir; within one JVM the corpus files are
-    * immutable, the same contract the sentinel byte cache rides on.
+    * immutable.
     *
-    * First call per key runs `build` (any stageReplay* form) and
+    * First call per key runs `build` (a [[stageReplay]]) and
     * copies the resulting input files into a shutdown-scoped cache
     * dir; later calls materialize a fresh staging dir from the cached
     * bytes with re-applied ascending replay mtimes — no Spark write
@@ -277,8 +193,8 @@ object EventStream extends graft.GateModule {
     val work = Staging.gateDir("graft_stream_replay")
     val staging = work.resolve("input")
     Files.createDirectories(staging)
-    // slot order = the b<NN>.parquet naming every stageReplay* form
-    // uses; sort numerically (b100 would sort before b99 lexically)
+    // slot order = the b<NN>.parquet naming stageReplay uses; sort
+    // numerically (b100 would sort before b99 lexically)
     val named = Option(hit.toFile.listFiles()).getOrElse(Array.empty[java.io.File])
       .filter(_.getName.endsWith(".parquet"))
       .sortBy(f => scala.util.Try(
@@ -297,12 +213,27 @@ object EventStream extends graft.GateModule {
   private val replayDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
-  private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
   /** Delete every gate-scoped scratch dir created so far (see
     * [[graft.store.Staging.purgeGateDirs]]). */
   def purgeStaging(): Unit = Staging.purgeGateDirs()
 
+  /** Append-mode + watermark variant of the tumbling aggregation — the
+    * production streaming shape (complete mode re-emits everything each
+    * trigger; append emits each window exactly once, when the watermark
+    * passes its end, which is what a sink at scale needs).
+    *
+    * Determinism harness: the events are replayed as ONE file, followed
+    * by one far-future sentinel file (ascending mtimes +
+    * maxFilesPerTrigger=1 force ordered micro-batches, since the file
+    * source processes oldest-mtime first). The sentinel batch raises
+    * the watermark past every real window's end, and the engine's own
+    * no-data micro-batch applies it, flushing them all in append mode
+    * (deterministic: the stateful agg reports shouldRunAnotherBatch on
+    * watermark advance, and processAllAvailable cannot return before
+    * that batch commits); sentinel windows themselves are never
+    * flushed and are filtered by the far-future cutoff anyway. Output
+    * therefore equals the batch tumbling aggregation — the oracle is
+    * shared. */
   def streamTumblingAppend(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {
     val batch = Tables.load(spark, dir, "events")
@@ -312,8 +243,7 @@ object EventStream extends graft.GateModule {
       Seq((java.sql.Timestamp.valueOf(ts), "sentinel", 0.0))
         .toDF("ts", "event_type", "value")
     val staging = stageReplayCached(s"tumbapp:$dir") {
-      stageReplayKeyed(Seq(batch -> None,
-        sentinel("2200-01-01 00:00:00") -> Some("tumbling_sent_1")))
+      stageReplay(Seq(batch, sentinel("2200-01-01 00:00:00")))
     }
     val stream = spark.readStream
       .schema(batch.schema)
@@ -324,20 +254,8 @@ object EventStream extends graft.GateModule {
       .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("val_sum"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("cnt"), col("val_sum"))
-    val name = "graft_stream_append"
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table(name)
-        .filter(col("hour_start") < lit("2100-01-01").cast("timestamp"))
-        // eager localCheckpoint, not cache: see streamTumbling
-        .localCheckpoint(true)
-      out
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_append", "append",
+      _.filter(col("hour_start") < lit("2100-01-01").cast("timestamp")))
   }
 
   /** Cross-batch streaming dedup: the corpus is replayed TWICE (one file
@@ -365,19 +283,7 @@ object EventStream extends graft.GateModule {
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"), col("event_type"),
         date_trunc("second", col("ts")).as("ts_s"), col("value"))
-    val name = "graft_stream_dedup"
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_dedup", "append", identity)
   }
 
   /** TTL-bounded streaming dedup — the 100 TB form of [[streamDedup]].
@@ -476,19 +382,7 @@ object EventStream extends graft.GateModule {
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"), col("event_type"),
         date_trunc("second", col("ts")).as("ts_s"), col("value"))
-    val name = "graft_stream_dedup_wm"
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_dedup_wm", "append", identity)
   }
 
   /** Streaming keyed upsert (M3 in streaming form): version 1 of every
@@ -527,19 +421,7 @@ object EventStream extends graft.GateModule {
         count(lit(1)).as("n_versions"))
       .select(col("event_id"), col("latest.version").as("version"),
         col("latest.value").as("value"), col("n_versions"))
-    val name = "graft_stream_upsert"
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_upsert", "complete", identity)
   }
 
   /** Delta-emitting streaming LWW upsert — the production form of
@@ -583,19 +465,7 @@ object EventStream extends graft.GateModule {
             Iterator.single(UpsertEvent(id, next.version, next.value))
           }
       }
-    val name = "graft_stream_upsert_deltas"
-    val q = stream.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream.toDF(), "graft_stream_upsert_deltas", "update", identity)
   }
 
   /** The arrival-time state-v2 form of the delta-emitting LWW upsert:
@@ -637,11 +507,7 @@ object EventStream extends graft.GateModule {
   def streamUpsertDeltasTws(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, stateStoreProvider, rocksDb) {
       val v1 = Tables.load(spark, dir, "events")
         .select(col("event_id"), lit(1L).as("version"), col("value"))
       val v2 = v1.filter(col("event_id") % 3 === 0)
@@ -659,21 +525,8 @@ object EventStream extends graft.GateModule {
         .transformWithState(new LwwProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      val name = "graft_stream_upsert_tws"
-      val q = stream.writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try {
-        q.processAllAvailable()
-        // eager localCheckpoint: the snapshot materializes before the
-        // query stops, WITHOUT a cacheManager entry — callers inherit no
-        // cached frames (blocks are ContextCleaner-scoped, not leaked)
-        spark.table(name).localCheckpoint(true)
-      } finally { StreamMetrics.record(q); q.stop() }
-    } finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      StreamRun.toSnapshot(spark, stream.toDF(), "graft_stream_upsert_tws", "update",
+        identity)
     }
   }
 
@@ -726,11 +579,7 @@ object EventStream extends graft.GateModule {
   def streamNearDupMinhash(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, stateStoreProvider, rocksDb) {
       val docs = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text"))
       val staging = stageReplayCached(s"ndmh:$dir") {
@@ -755,28 +604,17 @@ object EventStream extends graft.GateModule {
         .transformWithState(new BucketMinProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      val name = "graft_stream_neardup"
-      val q = stream.writeStream
-        .outputMode("update").format("memory").queryName(name).start()
-      try {
-        q.processAllAvailable()
-        // batch readout over the collected emissions: flags per doc,
-        // zero-filled from the static doc list
-        val dups = spark.table(name)
-          .groupBy("doc_id")
-          .agg(count_distinct(col("band_id")).as("n_dup_bands"))
-        val out = docs.select("doc_id")
-          .join(dups, Seq("doc_id"), "left")
+      // batch readout over the collected emissions: flags per doc,
+      // zero-filled from the static doc list
+      StreamRun.toSnapshot(spark, stream.toDF(), "graft_stream_neardup", "update",
+        sink => docs.select("doc_id")
+          .join(sink.groupBy("doc_id")
+            .agg(count_distinct(col("band_id")).as("n_dup_bands")),
+            Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("n_dup_bands"), lit(0L)).as("n_dup_bands"),
             (coalesce(col("n_dup_bands"), lit(0L)) > 0).cast("long")
-              .as("is_dup"))
-          // eager localCheckpoint, not cache: see streamTumbling
-          .localCheckpoint(true)
-        out
-      } finally { StreamMetrics.record(q); q.stop() }
-    } finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+              .as("is_dup")))
     }
   }
 
@@ -889,11 +727,7 @@ object EventStream extends graft.GateModule {
       cacheKey: Option[String] = None): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, stateStoreProvider, rocksDb) {
       val docs = docsIn
       // 1-row bounded agg: replay cut points, not data, reach the driver
       val mx = docs.agg(max("doc_id")).head().getLong(0)
@@ -922,27 +756,17 @@ object EventStream extends graft.GateModule {
         .transformWithState(new BucketRecentProcessor(w, nearDupEpoch0),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Update())
-      val name = "graft_stream_neardup_ttl"
-      val q = stream.writeStream
-        .outputMode("update").format("memory").queryName(name).start()
-      try {
-        q.processAllAvailable()
-        val dups = spark.table(name)
-          .groupBy("doc_id")
-          .agg(count_distinct(col("band_id")).as("n_dup_bands_recent"))
-        val out = docs.select("doc_id")
-          .join(dups, Seq("doc_id"), "left")
+      StreamRun.toSnapshot(spark, stream.toDF(), "graft_stream_neardup_ttl",
+        "update",
+        sink => docs.select("doc_id")
+          .join(sink.groupBy("doc_id")
+            .agg(count_distinct(col("band_id")).as("n_dup_bands_recent")),
+            Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("n_dup_bands_recent"), lit(0L))
               .as("n_dup_bands_recent"),
             (coalesce(col("n_dup_bands_recent"), lit(0L)) > 0).cast("long")
-              .as("is_dup_recent"))
-          // eager localCheckpoint, not cache: see streamTumbling
-          .localCheckpoint(true)
-        out
-      } finally { StreamMetrics.record(q); q.stop() }
-    } finally {
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+              .as("is_dup_recent")))
     }
   }
 
@@ -975,19 +799,7 @@ object EventStream extends graft.GateModule {
       .join(broadcast(dim), "event_type")
       .groupBy("engagement")
       .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("val_sum"))
-    val name = "graft_stream_static"
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_static", "complete", identity)
   }
 
   /** Sliding (1h window / 15min hop) event-time aggregation as a
@@ -999,30 +811,12 @@ object EventStream extends graft.GateModule {
     * bound a production watermark+append deployment carries. */
   def streamSliding(spark: SparkSession, dir: String): DataFrame =
     withConf(spark, "spark.sql.shuffle.partitions", streamShufflePartitions) {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", Tables.tsNormalizer(schema("ts").dataType))
+    val stream = Tables.stream(spark, dir, "events")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("val_sum"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("cnt"), col("val_sum"))
-    val name = "graft_stream_sliding"
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_sliding", "complete", identity)
   }
 
   /** Streaming count-min sketch: the [[graft.analytics.OlapQueries
@@ -1057,19 +851,7 @@ object EventStream extends graft.GateModule {
           bucket(i, col("user_id")).as("b"))): _*)).as("rb"))
       .groupBy(col("rb.r").as("r"), col("rb.b").as("b"))
       .agg(count(lit(1)).as("c"))
-    val name = "graft_stream_cms"
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_cms", "complete", identity)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.Conf.withConf
 import graft.Tables
 import graft.operators.Upsert
 import graft.store.Staging.gateDir
-import graft.streaming.EventStream.{stageReplay, streamShufflePartitions, withConf}
+import graft.streaming.EventStream.{stageReplay, streamShufflePartitions}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,14 +69,13 @@ object ForeachBatchSink extends graft.GateModule {
       Upsert.writePartitioned(
         Tables.parquet(batch.sparkSession, stage), table, "bucket")
     }
-    val q = spark.readStream.schema(purchases.schema)
+    StreamRun.drain(spark.readStream.schema(purchases.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staging)
       .writeStream
       .outputMode("append")
       .foreachBatch(mergeBatch)
-      .start()
-    try q.processAllAvailable() finally { StreamMetrics.record(q); q.stop() }
+      .start())
     Tables.parquet(spark, table)
       .select(col("user_id"), col("value"),
         date_trunc("second", col("ts")).as("ts_s"))
@@ -120,14 +120,13 @@ object ForeachBatchSink extends graft.GateModule {
       Upsert.writePartitioned(
         Tables.parquet(batch.sparkSession, stage), table, "bucket")
     }
-    val q = spark.readStream.schema(purchases.schema)
+    StreamRun.drain(spark.readStream.schema(purchases.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staging)
       .writeStream
       .outputMode("append")
       .foreachBatch(applyBatch)
-      .start()
-    try q.processAllAvailable() finally { StreamMetrics.record(q); q.stop() }
+      .start())
     Scd.deriveHistory(Tables.parquet(spark, table))
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.streaming.EventStream.{stageReplay, streamShufflePartitions, withConf}
+import graft.Conf.withConf
+import graft.streaming.EventStream.{stageReplay, streamShufflePartitions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -92,7 +93,7 @@ object HistorySweep {
       .groupBy(session_window(col("tss"), "1800 seconds"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), min("tss").as("session_start_s"))
       .select(col("user_id"), col("n_events"), col("session_start_s"))
-    runToSnapshot(spark, stream, "graft_hist_sessionize",
+    StreamRun.toSnapshot(spark, stream, "graft_hist_sessionize", "append",
       _.filter(col("user_id") >= 0))
   }
 
@@ -142,7 +143,7 @@ object HistorySweep {
       .select(col("click_id"), col("purchase_id"),
         coalesce(col("user_id"), col("p_user")).as("uid"),
         gap.as("gap_s"))
-    runToSnapshot(spark, joined, s"graft_hist_ss_$joinType",
+    StreamRun.toSnapshot(spark, joined, s"graft_hist_ss_$joinType", "append",
       _.filter(col("uid") >= 0))
   }
 
@@ -178,7 +179,7 @@ object HistorySweep {
           state.update(st)
           Iterator.single(PatOut(uid, st.nEvents, st.nConv))
       }
-    runToSnapshot(spark, stream.toDF(), "graft_hist_pattern",
+    StreamRun.toSnapshot(spark, stream.toDF(), "graft_hist_pattern", "update",
       // final snapshot = latest update per user (n_events is monotone)
       _.groupBy("user_id")
         .agg(max(struct(col("n_events"), col("n_conversions"))).as("s"))
@@ -218,23 +219,7 @@ object HistorySweep {
           state.update(next)
           out.iterator
       }
-    runToSnapshot(spark, stream.toDF(), "graft_hist_asof", identity)
-  }
-
-  /** Shared sink harness: memory sink, drain, snapshot through the
-    * caller's finisher with an eager localCheckpoint (no cacheManager
-    * entry — the session-hygiene contract), metrics recorded. */
-  private def runToSnapshot(spark: SparkSession, stream: DataFrame,
-      name: String, finish: DataFrame => DataFrame): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(if (name.contains("pattern") || name.contains("asof"))
-        "update" else "append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      finish(spark.table(name)).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream.toDF(), "graft_hist_asof", "update",
+      identity)
   }
 }

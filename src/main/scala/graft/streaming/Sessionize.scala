@@ -184,7 +184,7 @@ object Sessionize extends graft.GateModule {
     * sessions as watermark order dictates; the per-user ordinal is a
     * trivial downstream rank, and the oracle drops it on both sides). */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame =
-    EventStream.withConf(spark, "spark.sql.shuffle.partitions",
+    graft.Conf.withConf(spark, "spark.sql.shuffle.partitions",
       EventStream.streamShufflePartitions) {
     import spark.implicits._
     val batch = Tables.load(spark, dir, "events")
@@ -211,19 +211,8 @@ object Sessionize extends graft.GateModule {
       .groupBy(session_window(col("tss"), "1800 seconds"), col("user_id"))
       .agg(count(lit(1)).as("n_events"), min("tss").as("session_start_s"))
       .select(col("user_id"), col("n_events"), col("session_start_s"))
-    val name = "graft_stream_sessionize"
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).filter(col("user_id") >= 0).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream, "graft_stream_sessionize", "append",
+      _.filter(col("user_id") >= 0))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

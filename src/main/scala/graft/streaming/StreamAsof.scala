@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.Conf.withConf
 import graft.Tables
-import graft.streaming.EventStream.{stageReplay, streamShufflePartitions, withConf}
+import graft.streaming.EventStream.{stageReplay, streamShufflePartitions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -87,21 +88,10 @@ object StreamAsof extends graft.GateModule {
           state.update(next)
           out.iterator
       }
-    val name = "graft_stream_asof"
-    val q = stream.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // each purchase arrives in exactly one trigger, so the sink
-      // already holds one row per purchase — no latest-update fold
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    // each purchase arrives in exactly one trigger, so the sink
+    // already holds one row per purchase — no latest-update fold
+    StreamRun.toSnapshot(spark, stream.toDF(), "graft_stream_asof", "update",
+      identity)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

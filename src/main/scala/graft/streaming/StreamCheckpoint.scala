@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.Conf.withConf
 import graft.Tables
-import graft.streaming.EventStream.{streamShufflePartitions, withConf}
+import graft.streaming.EventStream.streamShufflePartitions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,19 +41,16 @@ object StreamCheckpoint extends graft.GateModule {
     val outDir = work.resolve("out").toString
     def place(df: DataFrame, name: String, slot: Int): Unit =
       EventStream.stageFile(df, work, staging, name, slot)
-    def run(): Unit = {
-      val q = spark.readStream
-        .schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging.toString)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          df.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        .start()
-      try q.processAllAvailable() finally { StreamMetrics.record(q); q.stop() }
-    }
+    def run(): Unit = StreamRun.drain(spark.readStream
+      .schema(batch.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(staging.toString)
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        df.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      }
+      .start())
     place(batch.filter(col("ts") < cut), "b00.parquet", 0)
     run() // first life: commits batch 0 (the pre-cut file)
     place(batch.filter(col("ts") >= cut), "b01.parquet", 1)

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   */
 object StreamDrift extends graft.GateModule {
 
-  import EventStream.{streamShufflePartitions, withConf}
+  import EventStream.streamShufflePartitions
+  import graft.Conf.withConf
 
   private def binCol = least(
     expr(s"CAST(round(value * 100) AS BIGINT) DIV ${StatsQueries.psiBinCents}"),
@@ -38,32 +39,14 @@ object StreamDrift extends graft.GateModule {
         .filter(col("ts") < splitTs)
         .groupBy(col("event_type"), binCol.as("bin"))
         .agg(count(lit(1)).as("ref_cnt"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
-      val cellsStream = spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .withColumn("ts", Tables.tsNormalizer(schema("ts").dataType))
+      val cellsStream = Tables.stream(spark, dir, "events")
         .filter(col("ts") >= splitTs)
         .withColumn("bin", binCol)
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"),
           col("bin"))
         .agg(count(lit(1)).as("cnt"))
-      val name = "graft_stream_psi"
-      val q = cellsStream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      val snap =
-        try {
-          q.processAllAvailable()
-          // eager localCheckpoint: the snapshot materializes before the
-          // query stops, WITHOUT a cacheManager entry — callers inherit no
-          // cached frames (blocks are ContextCleaner-scoped, not leaked)
-          spark.table(name).localCheckpoint(true)
-        } finally { StreamMetrics.record(q); q.stop() }
+      val snap = StreamRun.toSnapshot(spark, cellsStream, "graft_stream_psi",
+        "complete", identity)
       // drift scoring on the bounded snapshot (days × types × bins):
       // a day-bin the reference never saw smooths to ref_cnt 0 + 1
       // (left join), the batch psi convention

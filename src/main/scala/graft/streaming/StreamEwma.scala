@@ -50,7 +50,7 @@ object StreamEwma extends graft.GateModule {
       .doubleValue
 
   def streamEwma(spark: SparkSession, dir: String): DataFrame =
-    EventStream.withConf(spark, "spark.sql.shuffle.partitions",
+    graft.Conf.withConf(spark, "spark.sql.shuffle.partitions",
       EventStream.streamShufflePartitions) {
     import spark.implicits._
     val hourly = Tables.load(spark, dir, "events")
@@ -86,19 +86,8 @@ object StreamEwma extends graft.GateModule {
           state.update(EwmaHist(hist))
           out.iterator
       }
-    val name = "graft_stream_ewma"
-    val q = stream.toDF().writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, stream.toDF(), "graft_stream_ewma", "append",
+      identity)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.Conf.withConf
 import graft.Tables
-import graft.streaming.EventStream.{stageReplay, streamShufflePartitions, withConf}
+import graft.streaming.EventStream.{stageReplay, streamShufflePartitions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,19 +65,8 @@ object StreamJoin extends graft.GateModule {
           && gap.between(1, 3600))
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         gap.as("gap_s"))
-    val name = "graft_stream_stream_join"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, joined, "graft_stream_stream_join", "append",
+      identity)
   }
 
   /** LEFT OUTER stream-stream join — the strictly harder shape: a
@@ -155,19 +145,8 @@ object StreamJoin extends graft.GateModule {
         "leftOuter")
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         gap.as("gap_s"))
-    val name = "graft_stream_stream_left"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).filter(col("user_id") >= 0).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, joined, "graft_stream_stream_left", "append",
+      _.filter(col("user_id") >= 0))
   }
 
   /** FULL OUTER stream-stream join — both sides' unmatched rows are
@@ -235,19 +214,8 @@ object StreamJoin extends graft.GateModule {
       .select(col("click_id"), col("purchase_id"),
         coalesce(col("user_id"), col("p_user")).as("uid"),
         gap.as("gap_s"))
-    val name = "graft_stream_stream_full"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // eager localCheckpoint: the snapshot materializes before the
-      // query stops, WITHOUT a cacheManager entry — callers inherit no
-      // cached frames (blocks are ContextCleaner-scoped, not leaked)
-      spark.table(name).filter(col("uid") >= 0).localCheckpoint(true)
-    } finally { StreamMetrics.record(q); q.stop() }
+    StreamRun.toSnapshot(spark, joined, "graft_stream_stream_full", "append",
+      _.filter(col("uid") >= 0))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.Conf.withConf
 import graft.Tables
-import graft.streaming.EventStream.{stageReplay, streamShufflePartitions, withConf}
+import graft.streaming.EventStream.{stageReplay, streamShufflePartitions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -100,25 +101,14 @@ object StreamPattern extends graft.GateModule {
           state.update(st)
           Iterator.single(PatOut(uid, st.nEvents, st.nConv))
       }
-    val name = "graft_stream_pattern_match"
-    val q = stream.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      // final snapshot = latest update per user; n_events is monotone,
-      // so the max struct IS the last trigger's row
-      val out = spark.table(name)
-        .groupBy("user_id")
+    // final snapshot = latest update per user; n_events is monotone,
+    // so the max struct IS the last trigger's row
+    StreamRun.toSnapshot(spark, stream.toDF(), "graft_stream_pattern_match",
+      "update",
+      _.groupBy("user_id")
         .agg(max(struct(col("n_events"), col("n_conversions"))).as("s"))
         .select(col("user_id"), col("s.n_events").as("n_events"),
-          col("s.n_conversions").as("n_conversions"))
-        // eager localCheckpoint, not cache: see streamTumbling
-        .localCheckpoint(true)
-      out
-    } finally { StreamMetrics.record(q); q.stop() }
+          col("s.n_conversions").as("n_conversions")))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

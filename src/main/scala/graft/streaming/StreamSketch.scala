@@ -30,13 +30,9 @@ import graft.analytics.Sketches
 object StreamSketch extends graft.GateModule {
 
   def streamHllDistinct(spark: SparkSession, dir: String): DataFrame =
-    EventStream.withConf(spark, "spark.sql.shuffle.partitions",
+    graft.Conf.withConf(spark, "spark.sql.shuffle.partitions",
       EventStream.streamShufflePartitions) {
-      val schema = Tables.parquet(spark, s"$dir/lineitem.parquet").schema
-      val regs = spark.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(dir)
+      val regs = Tables.stream(spark, dir, "lineitem")
         .selectExpr(s"${Sketches.h2Expr("l_orderkey")} AS h2")
         .selectExpr(s"${Sketches.finSpark} AS hv")
         .selectExpr("hv DIV 8388608 AS bucket", "hv % 8388608 AS rest")
@@ -44,20 +40,8 @@ object StreamSketch extends graft.GateModule {
           "CASE WHEN rest = 0 THEN 24 ELSE 24 - length(bin(rest)) END AS rho")
         .groupBy("bucket")
         .agg(max("rho").as("reg"))
-      val name = "graft_stream_hll"
-      val q = regs.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      val snapshot =
-        try {
-          q.processAllAvailable()
-          // eager localCheckpoint: the snapshot materializes before the
-          // query stops, WITHOUT a cacheManager entry — callers inherit no
-          // cached frames (blocks are ContextCleaner-scoped, not leaked)
-          spark.table(name).localCheckpoint(true)
-        } finally { StreamMetrics.record(q); q.stop() }
+      val snapshot = StreamRun.toSnapshot(spark, regs, "graft_stream_hll",
+        "complete", identity)
       // Batch side: the exact truth the stream cannot legally compute,
       // riding the same hash so bucket-local distinct sums are global.
       val truth = graft.Tables.load(spark, dir, "lineitem")

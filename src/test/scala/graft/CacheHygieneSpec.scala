@@ -22,7 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same walk notes which `graft_*`/`graft-*` temp dirs each gate
   * left behind after the reset: a recurring job must own its on-disk
   * residue, so every scratch dir a gate makes has to go with the
-  * reset (see [[store.Staging]]).
+  * reset (see [[store.Staging]]). It also notes which streaming
+  * queries were still active after each gate: every gate must stop
+  * the queries it started, also when it fails (see
+  * [[streaming.StreamRun]]).
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -44,14 +47,23 @@ class CacheHygieneSpec extends AnyFunSuite {
 
   test("no gate leaves a scratch dir behind in java.io.tmpdir") {
     // by design these outlive a gate: the cross-JVM staging root and
-    // the JVM-scoped replay byte caches
+    // the JVM-scoped replay byte cache
     def exempt(n: String): Boolean = n.startsWith("graft-canon-staging-") ||
-      n.startsWith("graft_replay_cache") || n.startsWith("graft_sentinel_cache")
+      n.startsWith("graft_replay_cache")
     val left = SurfacePass.gates.toSeq.sortBy(_._1).collect {
       case (name, g) if g.leftDirs.exists(!exempt(_)) =>
         s"$name (${g.leftDirs.filterNot(exempt).mkString(" ")})"
     }
     assert(left.isEmpty,
       s"${left.size} gates leave scratch dirs behind: " + left.mkString(", "))
+  }
+
+  test("no gate leaves a streaming query running") {
+    val left = SurfacePass.gates.toSeq.sortBy(_._1).collect {
+      case (name, g) if g.streamsLeft.nonEmpty =>
+        s"$name (${g.streamsLeft.mkString(" ")})"
+    }
+    assert(left.isEmpty,
+      s"${left.size} gates leave streaming queries running: " + left.mkString(", "))
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions.{col, count, lit, struct, sum, xxhash64}
   * empty, then reset through [[SparkEntry.isolated]] so the next
   * gate's record is not polluted by this one. After the reset, note
   * the `graft_*`/`graft-*` entries of `java.io.tmpdir` the gate left
-  * behind. */
+  * behind and whether any streaming query is still active. */
 object SurfacePass {
 
   /** @param rows the result's row count
@@ -22,10 +22,12 @@ object SurfacePass {
     * @param error the gate's failure, if it threw
     * @param executed every query the gate and its materialization ran
     * @param leftDirs `graft_*`/`graft-*` entries of `java.io.tmpdir`
-    *   that exist after the reset but did not before the gate ran */
+    *   that exist after the reset but did not before the gate ran
+    * @param streamsLeft names of the streaming queries still active
+    *   after the gate, whether it returned or threw */
   final case class Gate(rows: Long, cacheEmpty: Boolean,
       error: Option[String], executed: Seq[PlanDump.Executed],
-      leftDirs: Seq[String] = Nil)
+      leftDirs: Seq[String] = Nil, streamsLeft: Seq[String] = Nil)
 
   private def scratchEntries(): Set[String] =
     Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
@@ -51,7 +53,12 @@ object SurfacePass {
             Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120)),
             Nil)
         }
-      name -> gate.copy(leftDirs = (scratchEntries() -- before).toSeq.sorted)
+      val streamsLeft = spark.streams.active.toSeq.map(q =>
+        Option(q.name).getOrElse(q.id.toString))
+      // a query left running would feed the next gate's record
+      spark.streams.active.foreach(_.stop())
+      name -> gate.copy(leftDirs = (scratchEntries() -- before).toSeq.sorted,
+        streamsLeft = streamsLeft)
     }.toMap
   }
 }

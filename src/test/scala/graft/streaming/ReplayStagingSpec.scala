@@ -6,17 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Contracts of the replay-staging harness itself — the machinery
   * every streaming gate's determinism rides on:
   *
-  *  - the one-job union path ([[EventStream.stageReplayUnion]]) must
-  *    land exactly one file per slot, in strictly ascending mtime
+  *  - the one-job multi-frame path of [[EventStream.stageReplay]]
+  *    must land exactly one file per slot, in strictly ascending mtime
   *    order, with each slot holding exactly its frame's rows — a slot
   *    split across two files would silently split a micro-batch;
   *  - an EMPTY slot must still produce a (0-row) file, because the
   *    file count IS the trigger count the gates' watermark proofs are
   *    written against;
-  *  - the sentinel byte cache ([[EventStream.stageReplayKeyed]]) must
-  *    write a key's parquet once per JVM and byte-copy thereafter,
-  *    and the copy must carry the slot's replay mtime, not the cached
-  *    file's. */
+  *  - the replay dir cache ([[EventStream.stageReplayCached]]) must
+  *    build once and re-materialize with fresh ordered mtimes. */
 class ReplayStagingSpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
 
@@ -65,35 +63,6 @@ class ReplayStagingSpec extends AnyFunSuite {
       assert(spark.read.parquet(fs(1).getAbsolutePath).count() == 0)
       assert(spark.read.parquet(fs(0).getAbsolutePath).count() == 25)
       assert(spark.read.parquet(fs(2).getAbsolutePath).count() == 25)
-    } finally EventStream.purgeStaging()
-  }
-
-  test("sentinel cache: one write per key, byte-copied with slot mtimes") {
-    import spark.implicits._
-    val key = s"replay_spec_sent_${System.nanoTime()}" // JVM-unique key
-    def sentinel = Seq((-1L, java.sql.Timestamp.valueOf("2200-01-01 00:00:00")))
-      .toDF("id", "ts")
-    val data = spark.range(0, 10)
-      .select(col("id"), current_timestamp().as("ts"))
-    val s1 = EventStream.stageReplayKeyed(Seq(
-      data -> None, sentinel -> Some(key)))
-    val s2 = EventStream.stageReplayKeyed(Seq(
-      data -> None, sentinel -> Some(key)))
-    try {
-      val (f1, f2) = (files(s1)(1), files(s2)(1))
-      // byte-identical copies of ONE cached write
-      assert(java.util.Arrays.equals(
-        java.nio.file.Files.readAllBytes(f1.toPath),
-        java.nio.file.Files.readAllBytes(f2.toPath)),
-        "second staging did not reuse the cached sentinel bytes")
-      // replay order still holds inside each staging dir
-      Seq(s1, s2).foreach { s =>
-        val fs = files(s)
-        assert(fs.map(_.lastModified).sliding(2).forall(w => w(0) < w(1)))
-      }
-      // and the sentinel content round-trips
-      assert(spark.read.parquet(f1.getAbsolutePath)
-        .select("id").as[Long].head() == -1L)
     } finally EventStream.purgeStaging()
   }
 
