@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   * Quality-affecting parameters (LSH bits/bands, IVF k, minhash perms)
   * are deliberately NOT conf-driven: the DuckDB oracles are generated
   * from their compile-time values, and changing them is a semantic
-  * choice, not a tuning one.
+  * choice, not a tuning one. Engine constants that no deployment
+  * tunes ([[BroadcastMaxRows]]) live here as plain values, not keys.
   */
 object Conf {
 
@@ -38,9 +39,12 @@ object Conf {
     * 2n/G vectors. Raise on a cluster so blocks fit executor memory. */
   val NeardupGroups = "spark.graft.neardup.groups"
 
-  /** LSH bucket size above which pair emission falls back to O(n) star
-    * pairing (duplicate-flood guard). */
-  val DedupBucketCap = "spark.graft.dedup.bucketCap"
+  /** Row count up to which a count-gated side frame is broadcast (the
+    * dedup label attaches, the behavior user frame); past it the join
+    * degrades to a plain shuffled join Catalyst co-partitions. A
+    * constant, not a knob: no deployment set one, and both plans give
+    * the same rows. */
+  val BroadcastMaxRows = 10000000L
 
   /** 1 (default) broadcasts the decontamination benchmark summary; 0
     * flips to a shuffled join for eval suites too large to fit an

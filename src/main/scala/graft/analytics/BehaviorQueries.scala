@@ -686,9 +686,7 @@ object BehaviorQueries extends graft.GateModule {
     // far past this corpus' scale, but at 100 TB user counts the hint
     // must degrade to a plain shuffled join Catalyst co-partitions
     // with the events exchange (same rule as Dedup's label attach)
-    val uFits = u.count() <=
-      spark.conf.getOption("spark.graft.behavior.broadcastUsersMaxRows")
-        .map(_.toLong).getOrElse(10000000L)
+    val uFits = u.count() <= graft.Conf.BroadcastMaxRows
     def uSide(cols: Column*): DataFrame = {
       val s = u.select(cols: _*)
       if (uFits) broadcast(s) else s

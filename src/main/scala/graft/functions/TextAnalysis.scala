@@ -108,7 +108,8 @@ object TextAnalysis extends graft.GateModule {
     // corpus scan + explode whose only output was one Long
     val uni = toks.groupBy("w").agg(count(lit(1)).as("c"))
       .withColumn("n_total", sum(col("c")).over(graft.Tables.boundedGlobalFrame))
-    val bi = graft.operators.Dedup.shingleRows(docs, n = 2)
+    val bi = graft.operators.Dedup
+      .shingleRows(graft.operators.Dedup.tokenRows(docs), n = 2)
       .groupBy("g").agg(count(lit(1)).as("c_xy"))
       .filter(col("c_xy") >= pmiMinCount)
       .select(substring_index(col("g"), " ", 1).as("w1"),
@@ -367,7 +368,7 @@ object TextAnalysis extends graft.GateModule {
     * ratio is a single division of exact counts — deterministic. */
   def textRepetition(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.shingleRows(
-        Tables.docs(spark, dir))
+        graft.operators.Dedup.tokenRows(Tables.docs(spark, dir)))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),
         countDistinct(col("g")).as("n_distinct"))
@@ -796,7 +797,7 @@ object TextAnalysis extends graft.GateModule {
     * distinction of the Jaccard verifier — never a gram self-join). */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
     val g = graft.operators.Dedup
-      .shingleRows(graft.Tables.docs(spark, dir))
+      .shingleRows(graft.operators.Dedup.tokenRows(graft.Tables.docs(spark, dir)))
       .distinct()
     val owners = g.groupBy("g").agg(min(col("doc_id")).as("owner"))
     g.join(owners, "g")

@@ -39,7 +39,7 @@ object Decontaminate extends graft.GateModule {
     report(Tables.docs(spark, dir))
 
   def report(docs: DataFrame): DataFrame = {
-    val grams = Dedup.shingleRows(docs, ngramN).distinct()
+    val grams = Dedup.shingleRows(Dedup.tokenRows(docs), ngramN).distinct()
     // benchmark summary: per gram, #benchmark docs containing it + the
     // one doc id when that count is 1 (for the self-match exclusion)
     val benchStats = grams.filter(col("doc_id") % benchMod === 0)

@@ -26,21 +26,13 @@ import org.apache.spark.sql.functions._
   */
 object Dedup extends graft.GateModule {
 
-  /** Distinct word-trigram shingles of the token array (docs here always
-    * have >= 3 tokens; callers filter otherwise). Column form — used
-    * where the array shape is needed; the row form below is the fast
-    * path for exploded pipelines. */
-  def shingles(t: Column): Column = array_distinct(
-    transform(sequence(lit(0), size(t) - 3),
-      i => concat_ws(" ",
-        element_at(t, i + 1), element_at(t, i + 2), element_at(t, i + 3))))
-
-  /** Fanned (doc_id, t) token-array rows — the shared head of every
-    * sketch/shingle producer (one tokenize expression over the fanned
-    * scan). [[ensureCanonicalStaging]] PERSISTS this frame so its three
-    * artifact pipelines (token index, MinHash pairs, SimHash pairs)
-    * tokenize the corpus once instead of three times (guide §1.2). */
-  private[operators] def tokenRows(docs: DataFrame): DataFrame =
+  /** Fanned (doc_id, t) token-array rows — the one input every sketch
+    * and shingle producer here takes (one tokenize expression over the
+    * fanned scan). A (doc_id, text) caller wraps its frame in this;
+    * [[ensureCanonicalStaging]] PERSISTS it so its three artifact
+    * pipelines (token index, MinHash pairs, SimHash pairs) tokenize the
+    * corpus once instead of three times (guide §1.2). */
+  def tokenRows(docs: DataFrame): DataFrame =
     Tables.fanout(docs, col("doc_id")) // parallel tokenize off 1-split scans
       .select(col("doc_id"), tokens(col("text")).as("t"))
 
@@ -51,11 +43,7 @@ object Dedup extends graft.GateModule {
     * array in place inside one whole-stage pass. An earlier posexplode
     * + lead()-window formulation was also codegen'd but paid a
     * doc_id-keyed sort exchange just to see adjacent tokens. */
-  def shingleRows(docs: DataFrame, n: Int = 3): DataFrame =
-    shingleRowsOfTokens(tokenRows(docs), n)
-
-  /** [[shingleRows]] over an existing (doc_id, t) token frame. */
-  private[operators] def shingleRowsOfTokens(tr: DataFrame, n: Int = 3): DataFrame =
+  def shingleRows(tr: DataFrame, n: Int = 3): DataFrame =
     tr
       .filter(size(col("t")) >= n)
       .select(col("doc_id"), col("t"),
@@ -103,7 +91,7 @@ object Dedup extends graft.GateModule {
     * readout that decides which source to down-weight or drop: for
     * every unordered source pair (src_a ≤ src_b), how many near-dup
     * candidate pairs span them. Composes the LSH candidate set (the
-    * same uncapped reproducible pairs the clustering gates close over)
+    * same uncapped pairs the clustering gates close over)
     * with two doc_id-keyed source lookups and a |sources|²-bounded
     * aggregation — pair volume is already banding-bounded, so the
     * matrix costs two hash joins over it, nothing quadratic. */
@@ -133,6 +121,11 @@ object Dedup extends graft.GateModule {
   val numPerms = 16
   val bandRows = 4
 
+  /** Default `cap` of [[minhashCandidates]] and [[simhashCandidates]]:
+    * the bucket size above which pair emission falls back to O(n) star
+    * pairing (duplicate-flood guard). */
+  val bucketCap = 1024
+
   /** Chars hashed by the oracle-reproducible rolling hash (zero-padded;
     * longer strings truncate — it's a hash, collisions are fine). */
   val polyWidth = 24
@@ -141,10 +134,10 @@ object Dedup extends graft.GateModule {
     * mod `m` at every step (values stay < 2^31: integer-exact in both
     * Spark and DuckDB's list_reduce). Unrolled fixed-width fold, so it
     * stays inside whole-stage codegen — an `aggregate` HOF over the
-    * char array would run interpreted (CodegenFallback). This is the
-    * gate-reproducible alternative to xxhash64, which DuckDB lacks;
-    * production keeps xxhash64 (better mixed, one native op) via the
-    * `reproducible = false` default on the sketch builders. */
+    * char array would run interpreted (CodegenFallback). The one
+    * shingle, token and split hash of every sketch here: DuckDB lacks
+    * xxhash64, and this fold is what lets its oracles rebuild each
+    * sketch bit for bit. */
   def charPolyHash(c: Column, mult: Long, m: Long): Column =
     (1 to polyWidth).foldLeft(lit(0L)) { (acc, i) =>
       pmod(acc * lit(mult) + ascii(substring(c, i, 1)).cast("long"), lit(m))
@@ -163,18 +156,9 @@ object Dedup extends graft.GateModule {
     * CodegenFallback — interpreted — and was ~10x slower; the explode +
     * hash-aggregate shape is also exactly what scales: map-side partial
     * mins, one small shuffle keyed by doc_id.) */
-  def minhashSigs(docs: DataFrame, reproducible: Boolean = false): DataFrame =
-    minhashSigsOfTokens(tokenRows(docs), reproducible)
-
-  /** [[minhashSigs]] over an existing (doc_id, t) token frame. */
-  private[operators] def minhashSigsOfTokens(tr: DataFrame,
-      reproducible: Boolean): DataFrame = {
-    val shingleHash =
-      if (reproducible) charPolyHash(col("g"), 31L, P2)
-      else pmod(xxhash64(col("g")), lit(P2))
+  def minhashSigs(tr: DataFrame): DataFrame =
     // duplicates don't affect a min, so shingle rows need no distinct
-    minhashAgg(shingleRowsOfTokens(tr).withColumn("h", shingleHash))
-  }
+    minhashAgg(shingleRows(tr).withColumn("h", charPolyHash(col("g"), 31L, P2)))
 
   /** Per-DOCUMENT reproducible MinHash band buckets as a compiled
     * Scala kernel (tokens → 3-gram shingles → [[charPolyHash]] → 16
@@ -259,8 +243,7 @@ object Dedup extends graft.GateModule {
     * is an integer Horner combine of the band's minhashes (the inputs
     * are already hashes, so no re-mixing is needed; max value ~2^46,
     * overflow-free, and bit-reproducible in the DuckDB oracle). */
-  def minhashBands(docs: DataFrame, reproducible: Boolean = false): DataFrame =
-    sigBands(minhashSigs(docs, reproducible))
+  def minhashBands(tr: DataFrame): DataFrame = sigBands(minhashSigs(tr))
 
   /** LSH banding of an m0..m15 signature frame (see [[minhashBands]]);
     * factored out so [[setSimCanonical]] can band its token-space
@@ -285,29 +268,21 @@ object Dedup extends graft.GateModule {
     * one reducer. Buckets larger than `cap` switch to a star pattern
     * (every member pairs with the bucket's min doc_id only): O(n)
     * pairs that keep the duplicate cluster connected for
-    * union-find/grouping downstream, which is all dedup needs. */
-  def minhashCandidates(docs: DataFrame, cap: Int = -1,
-      reproducible: Boolean = false): DataFrame =
-    minhashCandidatesOfTokens(tokenRows(docs), cap, reproducible)
-
-  /** [[minhashCandidates]] over an existing (doc_id, t) token frame
-    * (the staging build feeds its shared persisted tokenize). r13: the
-    * banded window frame `b` feeds THREE consumers (both self-join
-    * sides and the star branch) — lazy, that re-derived the whole
-    * shingle → 16-min-agg → window pipeline three times per run;
+    * union-find/grouping downstream, which is all dedup needs.
+    *
+    * r13: the banded window frame `b` feeds THREE consumers (both
+    * self-join sides and the star branch) — lazy, that re-derived the
+    * whole shingle → 16-min-agg → window pipeline three times per run;
     * persist it (4 small rows per doc, never text) and compute the
     * signatures once (guide §1.2; the tfIdf cache-hygiene pattern). */
-  private[operators] def minhashCandidatesOfTokens(tr: DataFrame, cap: Int = -1,
-      reproducible: Boolean = false): DataFrame = {
-    val effCap = if (cap > 0) cap
-      else graft.Conf.int(tr.sparkSession, graft.Conf.DedupBucketCap, 1024)
+  def minhashCandidates(tr: DataFrame, cap: Int = bucketCap): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band_id"), col("bucket"))
-    val b = sigBands(minhashSigsOfTokens(tr, reproducible))
+    val b = sigBands(minhashSigs(tr))
       .withColumn("bcnt", count(lit(1)).over(w))
       .withColumn("bmin", min(col("doc_id")).over(w))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val small = b.filter(col("bcnt") <= effCap)
+    val small = b.filter(col("bcnt") <= cap)
     val l = small.select(col("band_id"), col("bucket"), col("doc_id").as("da"))
     val r = small.select(col("band_id").as("band_id2"),
       col("bucket").as("bucket2"), col("doc_id").as("db"))
@@ -315,7 +290,7 @@ object Dedup extends graft.GateModule {
       l("band_id") === r("band_id2") && l("bucket") === r("bucket2")
         && l("da") < r("db"))
       .select("da", "db")
-    val starPairs = b.filter(col("bcnt") > effCap && col("doc_id") =!= col("bmin"))
+    val starPairs = b.filter(col("bcnt") > cap && col("doc_id") =!= col("bmin"))
       .select(col("bmin").as("da"), col("doc_id").as("db"))
     // checkpoint-then-release (CacheHygieneSpec): pair-bounded output,
     // the banded frame must not outlive the call
@@ -323,11 +298,10 @@ object Dedup extends graft.GateModule {
       allPairs.union(starPairs).distinct(), b)
   }
 
-  /** Gate query: band buckets for every doc with the DuckDB-reproducible
-    * shingle hash (hash-checked oracle); pair extraction is exercised by
-    * the spec with planted dups on the production xxhash64 path. */
+  /** Gate query: band buckets for every doc (hash-checked oracle); pair
+    * extraction is exercised by the spec with planted dups. */
   def minhashQuery(spark: SparkSession, dir: String): DataFrame =
-    minhashBands(Tables.load(spark, dir, "documents"), reproducible = true)
+    minhashBands(tokenRows(Tables.load(spark, dir, "documents")))
 
   // --- Duplicate clustering (connected components) -----------------------
 
@@ -339,8 +313,8 @@ object Dedup extends graft.GateModule {
     * covers every round; results are partition-count-invariant. */
   private val clusterShufflePartitions = "8"
 
-  /** Gate query: cluster id for every document from reproducible-hash
-    * LSH candidates (uncapped here so the DuckDB edge set is identical;
+  /** Gate query: cluster id for every document from the LSH
+    * candidates (uncapped here so the DuckDB edge set is identical;
     * observed bucket sizes are single-digit at every SF).
     *
     * Bound to [[dupClustersStar]] since r5: it hash-matched the same
@@ -625,24 +599,12 @@ object Dedup extends graft.GateModule {
     * explode + hash-aggregate shape as MinHash: one hash per token,
     * 48 codegen'd sums, map-side partials, doc_id-keyed shuffle.
     * Token-hash bits come from two 31-bit words (lower 24 bits of
-    * each feed bits 0..23 / 24..47): xxhash64-derived in production,
-    * or two independent rolling hashes on the reproducible gate path. */
-  def simhashSigs(docs: DataFrame, reproducible: Boolean = false): DataFrame =
-    simhashSigsOfTokens(tokenRows(docs), reproducible)
-
-  /** [[simhashSigs]] over an existing (doc_id, t) token frame. */
-  private[operators] def simhashSigsOfTokens(tr: DataFrame,
-      reproducible: Boolean): DataFrame = {
-    val exploded = tr.select(col("doc_id"), explode(col("t")).as("tok"))
-    val hashed =
-      if (reproducible)
-        exploded
-          .withColumn("h1", charPolyHash(col("tok"), 31L, P2))
-          .withColumn("h2", charPolyHash(col("tok"), 37L, P3))
-      else
-        exploded
-          .withColumn("h1", xxhash64(col("tok")))
-          .withColumn("h2", shiftright(xxhash64(col("tok")), 24))
+    * each feed bits 0..23 / 24..47): two independent [[charPolyHash]]
+    * folds. */
+  def simhashSigs(tr: DataFrame): DataFrame = {
+    val hashed = tr.select(col("doc_id"), explode(col("t")).as("tok"))
+      .withColumn("h1", charPolyHash(col("tok"), 31L, P2))
+      .withColumn("h2", charPolyHash(col("tok"), 37L, P3))
     def bit(k: Int): Column =
       if (k < 24) shiftright(col("h1"), k).bitwiseAND(lit(1L))
       else shiftright(col("h2"), k - 24).bitwiseAND(lit(1L))
@@ -655,7 +617,7 @@ object Dedup extends graft.GateModule {
   }
 
   def simhashQuery(spark: SparkSession, dir: String): DataFrame =
-    simhashSigs(Tables.load(spark, dir, "documents"), reproducible = true)
+    simhashSigs(tokenRows(Tables.load(spark, dir, "documents")))
 
   /** Hamming distance between two packed simhash columns. */
   def hamming(a: Column, b: Column): Column =
@@ -673,21 +635,11 @@ object Dedup extends graft.GateModule {
     * candidates -> verify pipeline as MinHash/LSH: 12-bit signature
     * chunks bucket-join candidates (the only data-dependent shuffle,
     * keyed by (chunk_idx, chunk)), then the packed signatures verify
-    * Hamming distance <= maxDist with one codegen'd XOR+popcount per
-    * pair. Same duplicate-flood star-cap guard as
+    * Hamming distance <= [[simMaxDist]] with one codegen'd XOR+popcount
+    * per pair. Same duplicate-flood star-cap guard as
     * [[minhashCandidates]]: a bucket larger than `cap` pairs members
     * with its min doc_id only — O(n) pairs, cluster stays connected. */
-  def simhashCandidates(docs: DataFrame, maxDist: Int = simMaxDist,
-      cap: Int = -1, reproducible: Boolean = false): DataFrame =
-    simhashCandidatesOfTokens(tokenRows(docs), maxDist, cap, reproducible)
-
-  /** [[simhashCandidates]] over an existing (doc_id, t) token frame
-    * (the staging build feeds its shared persisted tokenize). */
-  private[operators] def simhashCandidatesOfTokens(tr: DataFrame,
-      maxDist: Int = simMaxDist, cap: Int = -1,
-      reproducible: Boolean = false): DataFrame = {
-    val effCap = if (cap > 0) cap
-      else graft.Conf.int(tr.sparkSession, graft.Conf.DedupBucketCap, 1024)
+  def simhashCandidates(tr: DataFrame, cap: Int = bucketCap): DataFrame = {
     // Plan shape (r5 rewrite; the r4 version cost 20.5 s at sf0.1):
     // the bucket key space is tiny — simChunks × 2^12 = 16,384 possible
     // (c, chunk) buckets regardless of corpus size — so bucket stats
@@ -699,7 +651,7 @@ object Dedup extends graft.GateModule {
     // present — no signature re-joins, one final distinct. Shuffles:
     // sig agg, 16k-row stats agg, capped member agg, distinct — vs the
     // old window + self-join + distinct + two re-joins.
-    val sigs = simhashSigsOfTokens(tr, reproducible)
+    val sigs = simhashSigs(tr)
     val chunkCols = (0 until simChunks).map(c =>
       shiftright(col("simhash48"), 12 * c).bitwiseAND(lit(4095L)))
     val chunks = sigs.select(col("doc_id"), col("simhash48"),
@@ -710,7 +662,7 @@ object Dedup extends graft.GateModule {
       count(lit(1)).as("bcnt"),
       min(struct(col("doc_id"), col("simhash48"))).as("m"))
     val tagged = chunks.join(broadcast(stats), Seq("c", "chunk"))
-    val smallPairs = tagged.filter(col("bcnt") <= effCap)
+    val smallPairs = tagged.filter(col("bcnt") <= cap)
       .groupBy("c", "chunk")
       .agg(collect_list(struct(col("doc_id"), col("simhash48"))).as("ms"))
       .select(explode(expr(
@@ -723,14 +675,14 @@ object Dedup extends graft.GateModule {
     // larger than cap pairs members with its min doc_id only — O(n)
     // pairs, cluster stays connected
     val starPairs = tagged
-      .filter(col("bcnt") > effCap && col("doc_id") =!= col("m.doc_id"))
+      .filter(col("bcnt") > cap && col("doc_id") =!= col("m.doc_id"))
       .select(col("m.doc_id").as("da"), col("doc_id").as("db"),
         col("m.simhash48").as("sa"), col("simhash48").as("sb"))
     // checkpoint-then-release (CacheHygieneSpec): the pair frame is
     // output-bounded; chunks must not outlive the call
     graft.Conf.checkpointThenRelease(
       smallPairs.union(starPairs)
-        .filter(hamming(col("sa"), col("sb")) <= maxDist)
+        .filter(hamming(col("sa"), col("sb")) <= simMaxDist)
         .select(col("da"), col("db"),
           hamming(col("sa"), col("sb")).cast("long").as("dist"))
         .distinct(),
@@ -744,80 +696,77 @@ object Dedup extends graft.GateModule {
     * star fallback too — the skew guard itself is hash-verified. */
   val simPairsGateCap = 32
 
-  /** Gate query: chunk-banded candidates verified at Hamming <= 6 with
-    * the reproducible hash, star-capped at [[simPairsGateCap]]. */
+  /** Gate query: chunk-banded candidates verified at Hamming <= 6,
+    * star-capped at [[simPairsGateCap]]. */
   def simhashPairsQuery(spark: SparkSession, dir: String): DataFrame =
-    simhashCandidates(Tables.load(spark, dir, "documents"),
-      cap = simPairsGateCap, reproducible = true)
+    simhashCandidates(tokenRows(Tables.load(spark, dir, "documents")),
+      cap = simPairsGateCap)
 
   // --- Exact n-gram Jaccard (candidate-driven verifier) -------------------
 
-  /** Exact trigram-Jaccard for the given candidate pairs only — the
-    * verifier stage behind LSH. No shingle-keyed self-join anywhere:
-    * the left doc's shingles key into its pairs (rows = Σ_pairs |A|),
-    * then match the right doc's shingles on (db, g), where each
-    * distinct shingle matches at most once per pair. Total work and
-    * shuffle are linear in candidate volume times document size — a
-    * boilerplate trigram shared by millions of docs costs nothing
-    * beyond its one row per document, because pair enumeration already
-    * happened in the (bucket-capped) LSH stage. */
-  def jaccardVerify(docs: DataFrame, pairs: DataFrame): DataFrame = {
+  /** Exact trigram overlap of the given candidate pairs over distinct
+    * shingle sets — the one verifier under [[jaccardVerify]] and
+    * [[minhashCalibration]]. `cols` builds the output columns from the
+    * pair's intersection and union sizes (`da`/`db` are in scope); the
+    * sizes arrive as expressions, not projected columns, so the
+    * caller's select is the frame's only projection. Returns that frame
+    * and the persisted shingle frame the caller releases once its
+    * result is materialized.
+    *
+    * No shingle-keyed self-join anywhere: the left doc's shingles key
+    * into its pairs (rows = Σ_pairs |A|), then match the right doc's
+    * shingles on (db, g), where each distinct shingle matches at most
+    * once per pair. Total work and shuffle are linear in candidate
+    * volume times document size — a boilerplate trigram shared by
+    * millions of docs costs nothing beyond its one row per document,
+    * because pair enumeration already happened in the (bucket-capped)
+    * LSH stage. */
+  private def shingleOverlap(docs: DataFrame, pairs: DataFrame)(
+      cols: (Column, Column) => Seq[Column]): (DataFrame, DataFrame) = {
     // g feeds three consumers (sizes + both sides of the intersection
     // join); without persistence Spark re-runs the shingle explode and
     // its window sort three times. MEMORY_AND_DISK: shingle rows are
     // bigger than the docs, spill beats recompute.
-    val g = shingleRows(docs).distinct()
+    val g = shingleRows(tokenRows(docs)).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = g.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = pairs
       .join(g.withColumnRenamed("doc_id", "da"), "da")
       .join(g.select(col("doc_id").as("db"), col("g")), Seq("db", "g"))
       .groupBy("da", "db").agg(count(lit(1)).as("inter_cnt"))
+    val ic = coalesce(col("inter_cnt"), lit(0L))
+    val overlap = pairs
+      .join(inter, Seq("da", "db"), "left")
+      .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
+      .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
+      .select(cols(ic, col("na") + col("nb") - ic): _*)
+    (overlap, g)
+  }
+
+  /** Exact trigram-Jaccard for the given candidate pairs only — the
+    * verifier stage behind LSH, over [[shingleOverlap]]. */
+  def jaccardVerify(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val (out, g) = shingleOverlap(docs, pairs) { (inter, union) =>
+      Seq(col("da"), col("db"), inter.as("inter_cnt"),
+        (inter.cast("double") / union.cast("double")).as("jaccard"))
+    }
     // checkpoint-then-release (CacheHygieneSpec): pair-bounded output,
     // the shingle frame must not outlive the call
-    graft.Conf.checkpointThenRelease(
-      pairs
-        .join(inter, Seq("da", "db"), "left")
-        .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
-        .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-        .select(col("da"), col("db"),
-          coalesce(col("inter_cnt"), lit(0L)).as("inter_cnt"),
-          (coalesce(col("inter_cnt"), lit(0L)).cast("double")
-            / (col("na") + col("nb") - coalesce(col("inter_cnt"), lit(0L)))
-              .cast("double"))
-            .as("jaccard")),
-      g)
+    graft.Conf.checkpointThenRelease(out, g)
   }
 
   /** Gate query: the LSH-candidates → exact-verify pipeline over the
     * full corpus (the verifier is linear in candidate volume, so no
-    * sampling is needed), reproducible hash so the DuckDB oracle
-    * reproduces the identical candidate set (uncapped here; observed
-    * bucket sizes are single-digit at every SF). Candidates that only
-    * collided on a band bucket verify to jaccard = 0 and stay in the
-    * output (they're what the verifier exists to reject). */
+    * sampling is needed); the DuckDB oracle rebuilds the identical
+    * candidate set (uncapped here; observed bucket sizes are
+    * single-digit at every SF). Candidates that only collided on a band
+    * bucket verify to jaccard = 0 and stay in the output (they're what
+    * the verifier exists to reject). */
   def jaccardExact(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    jaccardVerify(docs,
-      minhashCandidates(docs, cap = Int.MaxValue, reproducible = true))
+    jaccardVerify(docs, minhashCandidates(tokenRows(docs), cap = Int.MaxValue))
   }
 
-  /** MinHash calibration scorecard — the sketch-quality readout that
-    * tells an operator whether their band/row budget is honest (the
-    * [[graft.operators.Similarity]] LSH has `embed_lsh_recall`; this
-    * is the MinHash twin): for every LSH candidate pair, the number of
-    * agreeing signature components (an unbiased Jaccard estimator at
-    * resolution 1/16) is bucketed against the EXACT Jaccard of the
-    * pair, micro-averaged per agreement level as the integer
-    * `10⁶·Σ|∩| DIV Σ|∪|`. A well-calibrated sketch shows mean exact
-    * similarity rising with agreement; a broken hash family or
-    * too-aggressive banding shows up as a flat curve.
-    *
-    * Plan: candidates + signatures + the candidate-driven exact
-    * verifier are the existing linear pipelines (no new shuffle
-    * shape); the curve itself is a ≤(numPerms+1)-row aggregate.
-    * Output is corpus-bounded regardless of scale because every
-    * published row is an agreement level, not a pair. */
   /** Cross-method agreement between the two cheap near-dup detectors —
     * the report a dedup deployment runs before swapping MinHash-LSH
     * for SimHash (or trusting either alone): pair-set sizes, the
@@ -840,8 +789,8 @@ object Dedup extends graft.GateModule {
     // (each method's build cost is timed by its own gate —
     // dedup_minhash_bands / dedup_simhash_pairs — and production
     // persists those outputs; the monitor never recomputes them). The
-    // staged forms are byte-identical to the gate-reproducible
-    // candidate frames: see ensureCanonicalStaging. Recomputing both
+    // staged forms are byte-identical to the gates' candidate frames:
+    // see ensureCanonicalStaging. Recomputing both
     // pipelines inline was also the r10 in-suite variance source on
     // this gate (spread 17.4 s — it stacked both methods' cache
     // pressure back-to-back).
@@ -874,6 +823,22 @@ object Dedup extends graft.GateModule {
           " AS cont_simhash_q6")
   }
 
+  /** MinHash calibration scorecard — the sketch-quality readout that
+    * tells an operator whether their band/row budget is honest (the
+    * [[graft.operators.Similarity]] LSH has `embed_lsh_recall`; this
+    * is the MinHash twin): for every LSH candidate pair, the number of
+    * agreeing signature components (an unbiased Jaccard estimator at
+    * resolution 1/16) is bucketed against the EXACT Jaccard of the
+    * pair, micro-averaged per agreement level as the integer
+    * `10⁶·Σ|∩| DIV Σ|∪|`. A well-calibrated sketch shows mean exact
+    * similarity rising with agreement; a broken hash family or
+    * too-aggressive banding shows up as a flat curve.
+    *
+    * Plan: candidates + signatures + the candidate-driven exact
+    * verifier are the existing linear pipelines (no new shuffle
+    * shape); the curve itself is a ≤(numPerms+1)-row aggregate.
+    * Output is corpus-bounded regardless of scale because every
+    * published row is an agreement level, not a pair. */
   def minhashCalibration(spark: SparkSession, dir: String): DataFrame = {
     val st = ensureCanonicalStaging(spark, dir)
     val docs = Tables.load(spark, dir, "documents")
@@ -882,7 +847,7 @@ object Dedup extends graft.GateModule {
     // banding method's persisted output against exact Jaccard
     val pairs = Tables.parquet(spark,
       st.resolve("mh_pairs.parquet").toString)
-    val sigs = minhashSigs(docs, reproducible = true)
+    val sigs = minhashSigs(tokenRows(docs))
     def side(p: String) = sigs.select(
       (col("doc_id").as(p) +:
         (0 until numPerms).map(i => col(s"m$i").as(s"$p$i"))): _*)
@@ -891,30 +856,18 @@ object Dedup extends graft.GateModule {
       .reduce(_ + _)
     val ag = pairs.join(side("da"), "da").join(side("db"), "db")
       .select(col("da"), col("db"), agree.as("sig_agree"))
-    val g = shingleRows(docs).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = g.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(g.withColumnRenamed("doc_id", "da"), "da")
-      .join(g.select(col("doc_id").as("db"), col("g")), Seq("db", "g"))
-      .groupBy("da", "db").agg(count(lit(1)).as("inter_cnt"))
-    val pj = pairs
-      .join(inter, Seq("da", "db"), "left")
-      .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-      .select(col("da"), col("db"),
-        coalesce(col("inter_cnt"), lit(0L)).as("ic"),
-        (col("na") + col("nb") - coalesce(col("inter_cnt"), lit(0L)))
-          .as("un"))
+    val (pj, g) = shingleOverlap(docs, pairs) { (inter, union) =>
+      Seq(col("da"), col("db"), inter.as("ic"), union.as("un"))
+    }
     // checkpoint-then-release (CacheHygieneSpec): the curve is a
-    // ≤(numPerms+1)-row frame; pairs and shingles must not outlive it
+    // ≤(numPerms+1)-row frame; the shingles must not outlive it
     graft.Conf.checkpointThenRelease(
       ag.join(pj, Seq("da", "db"))
         .groupBy("sig_agree")
         .agg(count(lit(1)).as("n_pairs"), sum("ic").as("sum_inter"),
           sum("un").as("sum_union"))
         .withColumn("mj_q6", expr("(1000000 * sum_inter) DIV sum_union")),
-      pairs, g)
+      g)
   }
 
   // --- Prefix-filtered exact set-similarity join (AllPairs / PPJoin) -----
@@ -954,61 +907,29 @@ object Dedup extends graft.GateModule {
       .drop("bkt")
   }
 
-  /** Exact token-set Jaccard join above num/den WITHOUT sketching and
-    * WITHOUT an all-pairs product — the prefix-filter principle
-    * (SSJoin / "Scaling Up All Pairs" / PPJoin family). Each document's
-    * distinct tokens are ordered by ascending global document frequency
-    * (rarest first; token string tie-break), and two sets with
-    * Jaccard >= t must share a token among their first
-    * |d| - ceil(t·|d|) + 1 ordered tokens — so joining on PREFIX tokens
-    * only is a complete candidate generator. This is the exact
-    * complement to [[minhashCandidates]]: no recall loss, and the join
-    * keys are anti-skewed BY CONSTRUCTION — a prefix holds a document's
-    * rarest tokens, so the boilerplate token that floods a naive
-    * token self-join almost never enters a prefix (it would need to be
-    * among the rarest ~30% of tokens in that document). Candidate
-    * filters are integer cross-multiplications of the threshold
-    * fraction; verification is the candidate-driven intersection count
-    * (same shape as [[jaccardVerify]]), linear in candidate volume.
-    *
-    * Prefix membership test, division-free: rn <= |d| - ceil(n·|d|/e) + 1
-    * ⟺ ceil(n·|d|/e) <= |d| - rn + 1 ⟺ n·|d| <= e·(|d| - rn + 1)
-    * (ceil(x) <= k equals x <= k for integer k). */
-  /** Shared PPJoin building blocks: the df-ordered prefix frame
-    * (tid, doc_id, sz, rn — PERSISTED, it seeds every candidate pass)
-    * and the per-doc sorted tid arrays the merge verifier consumes
-    * (PERSISTED — both [[setSimJoin]]'s single verify and
-    * [[setSimCanonical]]'s verify rounds read it). The third element
-    * is the cleanup hook that unpersists all three cached frames (tok,
-    * pref, docToks); callers MUST invoke it once their results are
-    * materialized — repeated library calls must not leak cached
-    * partitions across invocations (both public entry points do this
-    * in a `finally` after localCheckpoint-ing their output). */
-  private[operators] def setSimParts(docs: DataFrame, num: Long,
-      den: Long): (DataFrame, DataFrame, () => Unit) = {
-    val (_, pref, docToks, cleanup) = setSimPartsFull(docs, num, den)
-    (pref, docToks, cleanup)
-  }
-
-  /** [[setSimParts]] plus the UNFILTERED df-ordered rank frame
-    * `ranked` (doc_id, tid, rn, sz) it derives the prefix from —
-    * `ranked` is the threshold-INDEPENDENT token index
-    * ([[containmentJoinFromParts]] cuts its own asymmetric prefixes
-    * from it, and [[ensureCanonicalStaging]] persists it so any
-    * future prefix-filtered operator reads storage instead of
-    * re-ranking the corpus). `ranked` itself is returned LAZY (its
-    * consumers either write it once or filter it into the persisted
-    * `pref`); only tok/pref/docToks are cached, and `cleanup`
-    * releases all three. */
-  private[operators] def setSimPartsFull(docs: DataFrame, num: Long,
-      den: Long): (DataFrame, DataFrame, DataFrame, () => Unit) =
-    setSimPartsFullOfTokens(tokenRows(docs), num, den)
-
-  /** [[setSimPartsFull]] over an existing (doc_id, t) token frame. */
-  private[operators] def setSimPartsFullOfTokens(tr: DataFrame, num: Long,
+  /** Shared PPJoin building blocks over a (doc_id, t) token frame, as
+    * (ranked, pref, docToks, cleanup):
+    *  - `ranked` (doc_id, tid, rn, sz) — the UNFILTERED df-ordered rank
+    *    frame, the threshold-INDEPENDENT token index
+    *    ([[containmentJoinFromParts]] cuts its own asymmetric prefixes
+    *    from it, and [[ensureCanonicalStaging]] persists it so any
+    *    future prefix-filtered operator reads storage instead of
+    *    re-ranking the corpus). Returned LAZY: its consumers either
+    *    write it once or filter it into the persisted `pref`;
+    *  - `pref` — its num/den prefix (PERSISTED, it seeds every
+    *    candidate pass);
+    *  - `docToks` — the per-doc sorted tid arrays the merge verifier
+    *    consumes (PERSISTED — both [[setSimJoin]]'s single verify and
+    *    [[setSimCanonical]]'s verify rounds read it);
+    *  - `cleanup` — unpersists the three cached frames (tok, pref,
+    *    docToks). Callers MUST invoke it once their results are
+    *    materialized — repeated library calls must not leak cached
+    *    partitions across invocations (the public entry points do this
+    *    in a `finally` after localCheckpoint-ing their output). */
+  private[operators] def setSimParts(tr: DataFrame, num: Long,
       den: Long): (DataFrame, DataFrame, DataFrame, () => Unit) = {
     // tok feeds ranking, both verify arms, and sizes; persist beats
-    // re-tokenizing four times (same reasoning as jaccardVerify's g)
+    // re-tokenizing four times (same reasoning as shingleOverlap's g)
     val tok = tr
       .select(col("doc_id"), explode(array_distinct(col("t"))).as("tok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1100,7 +1021,28 @@ object Dedup extends graft.GateModule {
       .filter(lit(den) * col("inter_cnt") >= lit(num) * col("union_cnt"))
   }
 
-  /** NOTE ON CACHING: eagerly materializing the ~5M-pair result just
+  /** Exact token-set Jaccard join above num/den WITHOUT sketching and
+    * WITHOUT an all-pairs product — the prefix-filter principle
+    * (SSJoin / "Scaling Up All Pairs" / PPJoin family). Each document's
+    * distinct tokens are ordered by ascending global document frequency
+    * (rarest first; token string tie-break), and two sets with
+    * Jaccard >= t must share a token among their first
+    * |d| - ceil(t·|d|) + 1 ordered tokens — so joining on PREFIX tokens
+    * only is a complete candidate generator. This is the exact
+    * complement to [[minhashCandidates]]: no recall loss, and the join
+    * keys are anti-skewed BY CONSTRUCTION — a prefix holds a document's
+    * rarest tokens, so the boilerplate token that floods a naive
+    * token self-join almost never enters a prefix (it would need to be
+    * among the rarest ~30% of tokens in that document). Candidate
+    * filters are integer cross-multiplications of the threshold
+    * fraction; verification is the candidate-driven intersection count
+    * (same shape as [[jaccardVerify]]), linear in candidate volume.
+    *
+    * Prefix membership test, division-free: rn <= |d| - ceil(n·|d|/e) + 1
+    * ⟺ ceil(n·|d|/e) <= |d| - rn + 1 ⟺ n·|d| <= e·(|d| - rn + 1)
+    * (ceil(x) <= k equals x <= k for integer k).
+    *
+    * NOTE ON CACHING: eagerly materializing the ~5M-pair result just
     * to unpersist the parts costs +1.2 s at sf0.1 (measured,
     * localCheckpoint variant) — a price this gate now PAYS on purpose:
     * the library-hygiene contract (CacheHygieneSpec) is that every
@@ -1111,7 +1053,7 @@ object Dedup extends graft.GateModule {
     * [[setSimCanonical]] has O(n) output and always cleaned up. */
   def setSimJoin(docs: DataFrame, num: Long = setSimNum,
       den: Long = setSimDen): DataFrame = {
-    val (pref, docToks, cleanup) = setSimParts(docs, num, den)
+    val (_, pref, docToks, cleanup) = setSimParts(tokenRows(docs), num, den)
     val out = setSimJoinFromParts(pref, docToks, num, den)
     // checkpoint-then-release, with setSimParts' cleanup hook as the
     // release (Conf.checkpointThenRelease takes a frame list)
@@ -1235,7 +1177,7 @@ object Dedup extends graft.GateModule {
     * [[setSimCanonicalIncremental]] does with the base corpus. */
   private[operators] def canonicalLabels(docs: DataFrame, num: Long,
       den: Long): DataFrame = {
-    val (pref, docToks, cleanup) = setSimParts(docs, num, den)
+    val (_, pref, docToks, cleanup) = setSimParts(tokenRows(docs), num, den)
     try canonicalLabelsFromParts(docs.select(col("doc_id")), pref, docToks,
       num, den)
     finally cleanup()
@@ -1252,7 +1194,6 @@ object Dedup extends graft.GateModule {
     * both its stages instead of two. */
   private def canonicalLabelsFromParts(nodes: DataFrame, pref: DataFrame,
       docToks: DataFrame, num: Long, den: Long): DataFrame = {
-    val spark = nodes.sparkSession
       // -- 1. token-space MinHash bucket-star seeding --------------------
       val sigs = minhashAgg(docToks
         .select(col("doc_id"), explode(col("toks")).as("tid"))
@@ -1282,9 +1223,7 @@ object Dedup extends graft.GateModule {
       // attach degrades to a plain shuffled join Catalyst co-partitions
       // with the candidate stream (the docstring's "swap for a
       // co-partitioned join when labels outgrow broadcast", now real).
-      val labelsFit = labels0.count() <=
-        spark.conf.getOption("spark.graft.dedup.broadcastLabelsMaxRows")
-          .map(_.toLong).getOrElse(10000000L)
+      val labelsFit = labels0.count() <= graft.Conf.BroadcastMaxRows
       def side(from: String, to: String) = {
         val s = labels0.select(col("doc_id").as(from), col("cluster_id").as(to))
         if (labelsFit) broadcast(s) else s
@@ -1373,7 +1312,7 @@ object Dedup extends graft.GateModule {
   def setSimCanonicalIncremental(docs: DataFrame, baseLabels: DataFrame,
       deltaPred: Column, num: Long = setSimNum,
       den: Long = setSimDen): DataFrame = {
-    val (pref, docToks, cleanup) = setSimParts(docs, num, den)
+    val (_, pref, docToks, cleanup) = setSimParts(tokenRows(docs), num, den)
     try incrementalFromParts(docs, baseLabels, deltaPred, pref, docToks,
       num, den)
     finally cleanup()
@@ -1385,7 +1324,6 @@ object Dedup extends graft.GateModule {
   private def incrementalFromParts(docs: DataFrame, baseLabels: DataFrame,
       deltaPred: Column, pref: DataFrame, docToks: DataFrame, num: Long,
       den: Long): DataFrame = {
-    val spark = docs.sparkSession
       // delta-touching candidates: delta prefixes vs the union prefix
       // frame via the shared PPJoin kernel (one home for the
       // length-ratio/position bounds — a tuning fix to prefJoin
@@ -1400,9 +1338,7 @@ object Dedup extends graft.GateModule {
       // contract base endpoints through the base labeling (delta docs
       // have no base label and stay themselves), then solve components
       // over (base canonical ids ∪ delta doc ids)
-      val fit = baseLabels.count() <=
-        spark.conf.getOption("spark.graft.dedup.broadcastLabelsMaxRows")
-          .map(_.toLong).getOrElse(10000000L)
+      val fit = baseLabels.count() <= graft.Conf.BroadcastMaxRows
       def lab(from: String, to: String) = {
         val s = baseLabels.select(col("doc_id").as(from),
           col("canonical_id").as(to))
@@ -1452,7 +1388,7 @@ object Dedup extends graft.GateModule {
     *    "yesterday's stored table": production folds a delta into it,
     *    never recomputes it per fold,
     *  - both sketch methods' stored pair tables (MinHash-band and
-    *    SimHash-chunk candidates, the gate-reproducible forms) — the
+    *    SimHash-chunk candidates, the gate forms) — the
     *    artifacts [[methodAgreementFrom]] monitors; each method's
     *    build cost is timed by its own gate, and agreement is a read
     *    over the stored outputs, as in production. */
@@ -1478,14 +1414,14 @@ object Dedup extends graft.GateModule {
       // — and labels are graph-determined, so they match what a
       // base-only build would have stored)
       val (ranked, pref, docToks, cleanup) =
-        setSimPartsFullOfTokens(docsTok, setSimNum, setSimDen)
+        setSimParts(docsTok, setSimNum, setSimDen)
       try {
         pref.write.mode("overwrite")
           .parquet(tmp.resolve("pref.parquet").toString)
         docToks.write.mode("overwrite")
           .parquet(tmp.resolve("doctoks.parquet").toString)
         // the threshold-independent df-ordered rank index (see
-        // setSimPartsFull) — the containment join cuts its asymmetric
+        // setSimParts) — the containment join cuts its asymmetric
         // prefixes from this instead of re-ranking the corpus.
         // (Write-side file splitting was tried for consumer scan
         // parallelism and REVERTED: at these artifact sizes
@@ -1501,15 +1437,13 @@ object Dedup extends graft.GateModule {
           docToks.filter(col("doc_id") <= cut), setSimNum, setSimDen)
           .write.mode("overwrite")
           .parquet(tmp.resolve("base_labels.parquet").toString)
-        // the two sketch methods' stored pair tables (gate-reproducible
-        // forms — the same frames dedup_minhash_bands/dedup_simhash_pairs
-        // derive); methodAgreement monitors these stored artifacts
-        minhashCandidatesOfTokens(docsTok, cap = Int.MaxValue,
-            reproducible = true)
+        // the two sketch methods' stored pair tables (the same frames
+        // dedup_minhash_bands/dedup_simhash_pairs derive);
+        // methodAgreement monitors these stored artifacts
+        minhashCandidates(docsTok, cap = Int.MaxValue)
           .write.mode("overwrite")
           .parquet(tmp.resolve("mh_pairs.parquet").toString)
-        simhashCandidatesOfTokens(docsTok, cap = simPairsGateCap,
-            reproducible = true)
+        simhashCandidates(docsTok, cap = simPairsGateCap)
           .select(col("da"), col("db"))
           .write.mode("overwrite")
           .parquet(tmp.resolve("sh_pairs.parquet").toString)
@@ -1750,7 +1684,7 @@ object Dedup extends graft.GateModule {
   def containmentJoin(docs: DataFrame, num: Long = containNum,
       den: Long = containDen,
       probePred: Column = lit(true)): DataFrame = {
-    val (ranked, _, docToks, cleanup) = setSimPartsFull(docs, num, den)
+    val (ranked, _, docToks, cleanup) = setSimParts(tokenRows(docs), num, den)
     val out = containmentJoinFromParts(ranked, docToks, num, den, probePred)
     try out.localCheckpoint() finally cleanup()
   }
@@ -1951,8 +1885,8 @@ object Dedup extends graft.GateModule {
     val exactIds = delta.select(col("doc_id"), sha2(col("text"), 256).as("h"))
       .join(base.select(sha2(col("text"), 256).as("h")).distinct(), "h")
       .select(col("doc_id")).distinct()
-    val nearIds = minhashBands(delta, reproducible = true).alias("x")
-      .join(minhashBands(base, reproducible = true).alias("y"),
+    val nearIds = minhashBands(tokenRows(delta)).alias("x")
+      .join(minhashBands(tokenRows(base)).alias("y"),
         col("x.band_id") === col("y.band_id")
           && col("x.bucket") === col("y.bucket"))
       .select(col("x.doc_id")).distinct()
@@ -2035,8 +1969,8 @@ object Dedup extends graft.GateModule {
   }
 
   /** Gate query: exact integer TF-IDF cosine over the SimHash
-    * chunk-banded candidate set (reproducible hash + star cap, so the
-    * DuckDB oracle rebuilds the identical candidates) — the 100 TB
+    * chunk-banded candidate set (star-capped, and the DuckDB oracle
+    * rebuilds the identical candidates) — the 100 TB
     * cosine near-dup path: LSH generates candidates in banded buckets
     * (SimHash IS the cosine LSH — signature agreement concentrates
     * around angular similarity), the exact verifier then scores each
@@ -2157,10 +2091,11 @@ object Dedup extends graft.GateModule {
   /** The minhash computation as a flat CTE list + band-union tail, so
     * callers can splice it into larger WITH lists (DuckDB 1.0 loses
     * inner-WITH scope when a nested WITH sits inside a recursive CTE
-    * list member). */
-  /** @param sfx   suffix on every CTE name, so two instances (e.g. a
-    *               base and a delta corpus) can share one WITH list
-    * @param where  extra row predicate on `documents` */
+    * list member).
+    *
+    * @param sfx   suffix on every CTE name, so two instances (e.g. a
+    *              base and a delta corpus) can share one WITH list
+    * @param where extra row predicate on `documents` */
   private def minhashCtes(sfx: String = "", where: String = "TRUE"): String = {
     val mins = (0 until numPerms)
       .map(i => s"min((${permA(i)}*h + ${permB(i)}) % $P) AS m$i")
@@ -2282,24 +2217,39 @@ object Dedup extends graft.GateModule {
        |JOIN nrm nb ON nb.doc_id = c.db""".stripMargin
   }
 
-  /** Recursive closure of the (identical, uncapped) candidate edge set
-    * as a flat CTE list ending in `cl(doc_id, cluster_id)` — min
-    * reachable id per node, the same fixpoint hash-min propagation
-    * computes. Shared by the clustering and canonical-selection
-    * oracles. */
-  /** The uncapped reproducible candidate pair set as CTEs ending in
-    * `pairs(da, db)` — shared by the closure oracles and the
-    * cross-source matrix oracle. */
+  /** The uncapped candidate pair set as CTEs ending in `pairs(da, db)`
+    * — shared by the closure oracles and the cross-source matrix
+    * oracle. */
   private[operators] def candidatePairCtes: String =
-    s"""${minhashCtes()},
-       |bands AS (
-       |${minhashBandsUnion()}
-       |),
+    s"""$minhashBandsCtes,
        |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
        |  FROM bands x JOIN bands y
        |    ON x.band_id = y.band_id AND x.bucket = y.bucket
        |   AND x.doc_id < y.doc_id)""".stripMargin
 
+  /** [[shingleOverlap]] as CTEs over `d(doc_id, t)` and
+    * `pairs(da, db)`: distinct trigrams `gg`, per-doc sizes `sz` and
+    * per-pair intersections `inter` — shared by the exact-Jaccard and
+    * calibration oracles. */
+  private def shingleOverlapCtes: String =
+    """gg AS (
+      |  SELECT doc_id, unnest(list_distinct(list_transform(
+      |    range(len(t) - 2),
+      |    i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS g
+      |  FROM d),
+      |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM gg GROUP BY doc_id),
+      |inter AS (
+      |  SELECT p.da, p.db, count(*) AS inter_cnt
+      |  FROM pairs p
+      |  JOIN gg a ON a.doc_id = p.da
+      |  JOIN gg b ON b.doc_id = p.db AND b.g = a.g
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Recursive closure of the (identical, uncapped) candidate edge set
+    * as a flat CTE list ending in `cl(doc_id, cluster_id)` — min
+    * reachable id per node, the same fixpoint hash-min propagation
+    * computes. Shared by the clustering and canonical-selection
+    * oracles. */
   private[operators] def closureCtes: String =
     s"""$candidatePairCtes,
        |edges AS (SELECT da AS u, db AS v FROM pairs
@@ -2514,30 +2464,11 @@ object Dedup extends graft.GateModule {
       val agreeSum = (0 until numPerms)
         .map(i => s"(CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END)")
         .mkString("\n    + ")
-      s"""WITH ${minhashCtes()},
-         |bands AS (
-         |${minhashBandsUnion()}
-         |),
-         |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-         |  FROM bands x JOIN bands y
-         |    ON x.band_id = y.band_id AND x.bucket = y.bucket
-         |   AND x.doc_id < y.doc_id),
+      s"""WITH $candidatePairCtes,
          |ag AS (SELECT p.da, p.db, CAST($agreeSum AS BIGINT) AS sig_agree
          |  FROM pairs p JOIN s a ON a.doc_id = p.da
          |  JOIN s b ON b.doc_id = p.db),
-         |gg AS (
-         |  SELECT doc_id, unnest(list_distinct(list_transform(
-         |    range(len(t) - 2),
-         |    i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS g
-         |  FROM d),
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
-         |  FROM gg GROUP BY doc_id),
-         |inter AS (
-         |  SELECT p.da, p.db, count(*) AS inter_cnt
-         |  FROM pairs p
-         |  JOIN gg a ON a.doc_id = p.da
-         |  JOIN gg b ON b.doc_id = p.db AND b.g = a.g
-         |  GROUP BY 1, 2),
+         |$shingleOverlapCtes,
          |pj AS (SELECT p.da, p.db,
          |    CAST(coalesce(i.inter_cnt, 0) AS BIGINT) AS ic,
          |    CAST(sa.n + sb.n - coalesce(i.inter_cnt, 0) AS BIGINT) AS un
@@ -2554,26 +2485,8 @@ object Dedup extends graft.GateModule {
          |GROUP BY 1""".stripMargin
     },
     "dedup_jaccard_exact" ->
-      s"""WITH ${minhashCtes()},
-        |bands AS (
-        |${minhashBandsUnion()}
-        |),
-        |pairs AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.bucket = y.bucket
-        |   AND x.doc_id < y.doc_id),
-        |gg AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(len(t) - 2),
-        |    i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS g
-        |  FROM d),
-        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM gg GROUP BY doc_id),
-        |inter AS (
-        |  SELECT p.da, p.db, count(*) AS inter_cnt
-        |  FROM pairs p
-        |  JOIN gg a ON a.doc_id = p.da
-        |  JOIN gg b ON b.doc_id = p.db AND b.g = a.g
-        |  GROUP BY 1, 2)
+      s"""WITH $candidatePairCtes,
+        |$shingleOverlapCtes
         |SELECT p.da, p.db,
         |  CAST(coalesce(i.inter_cnt, 0) AS BIGINT) AS inter_cnt,
         |  CAST(coalesce(i.inter_cnt, 0) AS DOUBLE)

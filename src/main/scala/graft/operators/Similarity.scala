@@ -349,7 +349,7 @@ object Similarity extends graft.GateModule {
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("vec_id").asc)
-    checkpointThenRelease(
+    graft.Conf.checkpointThenRelease(
       assigned.join(broadcast(queries), col("cent_id") === col("qcent")
           && col("vec_id") =!= col("query_id"))
         .withColumn("sim", cosine_sim(col("v"), col("qv")))
@@ -359,18 +359,6 @@ object Similarity extends graft.GateModule {
           round(col("sim"), 4).as("sim_r4")),
       e, assigned)
   }
-
-  /** Materialize `out` (localCheckpoint — eager) and then release the
-    * gate-local cached inputs. The library-hygiene contract the r8
-    * review set for setSimParts, applied to every caching gate here:
-    * repeated library calls must not accumulate cached copies of the
-    * embeddings corpus in executor storage — the checkpointed result
-    * is self-contained, so the inputs can drop before the caller ever
-    * evaluates it. (The bench additionally clearCache()s between
-    * gates; this makes gates clean for callers that don't.) */
-  private def checkpointThenRelease(out: DataFrame,
-      cached: DataFrame*): DataFrame =
-    graft.Conf.checkpointThenRelease(out, cached: _*)
 
   /** Training-sample modulus for [[knnIvfSampled]]: the coarse
     * quantizer trains on the ~1/ivfSampleMod hash-slice of the corpus. */
@@ -495,7 +483,7 @@ object Similarity extends graft.GateModule {
       }
       .toDF("vec_id").distinct()
       .withColumn("dropped", lit(true))
-    checkpointThenRelease(
+    graft.Conf.checkpointThenRelease(
       assigned.select(col("vec_id"), col("cent_id"))
         .join(dropped, Seq("vec_id"), "left")
         .select(col("vec_id"), col("cent_id"),
@@ -553,7 +541,7 @@ object Similarity extends graft.GateModule {
       .filter(col("rn") <= 3)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rn"),
         round(col("sim"), 4).as("sim_r4"))
-    checkpointThenRelease(out, e, assigned)
+    graft.Conf.checkpointThenRelease(out, e, assigned)
   }
 
   /** Metadata-filtered exact top-3 — the vector-DB staple (retrieve
@@ -720,7 +708,7 @@ object Similarity extends graft.GateModule {
     * Per-row scan cost drops from Dim mul-adds over 512 bytes to S
     * adds over 64 bytes — the PQ trade: approximate distances
     * (quantization error), exact ranking on those approximations.
-    * Bit-reproducible: LUT terms and the s=0..S-1 accumulation are
+    * Bit-exact: LUT terms and the s=0..S-1 accumulation are
     * sequential left-to-right, matching the DuckDB oracle. */
   def knnPqAdc(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.PqEncode.pq_encode
@@ -845,7 +833,7 @@ object Similarity extends graft.GateModule {
       .filter(col("rn") <= 3)
       .select(col("query_id"), col("neighbor_id"), col("rn"),
         round(col("dist2"), 4).as("dist2_r4"))
-    checkpointThenRelease(out, e)
+    graft.Conf.checkpointThenRelease(out, e)
   }
 
   // --- SRP-LSH near-dup (the sub-quadratic scale path) -------------------
@@ -1104,7 +1092,7 @@ object Similarity extends graft.GateModule {
       .union(tri.select(col("z").as("vec_id")))
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_tri"))
-    checkpointThenRelease(out, p)
+    graft.Conf.checkpointThenRelease(out, p)
   }
 
   /** Gate form: the global census (one row, even on a triangle-free
@@ -1186,7 +1174,7 @@ object Similarity extends graft.GateModule {
       val seeds = Tables.load(spark, dir, "embeddings")
         .filter(col("vec_id") % bfsSeedMod === 0)
         .select(col("vec_id").as("n"))
-      checkpointThenRelease(
+      graft.Conf.checkpointThenRelease(
         bfsHopsFrom(edges, seeds)
           .select(col("n").as("vec_id"), col("d").as("dist")),
         edges)
@@ -1235,7 +1223,7 @@ object Similarity extends graft.GateModule {
       val wedges = centered.alias("x").join(centered.alias("y"),
           col("x.u") === col("y.u") && col("x.v") < col("y.v"))
         .select(col("x.v").as("a"), col("y.v").as("b"), col("x.d").as("d"))
-      checkpointThenRelease(
+      graft.Conf.checkpointThenRelease(
         wedges.groupBy("a", "b")
           .agg(count(lit(1)).as("cn"),
             sum(expr(s"$lpRaScale div d")).as("ra_fp"))

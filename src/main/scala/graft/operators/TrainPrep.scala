@@ -34,10 +34,9 @@ object TrainPrep extends graft.GateModule {
 
   // --- Deterministic content-hash split ----------------------------------
 
-  /** Split-bucket arithmetic shared with the oracle: the reproducible
-    * char-poly content hash reduced mod 100. Production would use
-    * `xxhash64(text)` (better mixing, one native op); the char-poly
-    * keeps the gate hash-checkable, exactly as in [[Dedup]]. */
+  /** Split-bucket arithmetic shared with the oracle: the char-poly
+    * content hash reduced mod 100 — the one hash of [[Dedup]]'s
+    * sketches, which keeps the gate hash-checkable. */
   private val splitMod = 100L
 
   /** Full-period LCG permutation of a nonnegative id — the
@@ -60,27 +59,26 @@ object TrainPrep extends graft.GateModule {
   private def lcgBucket(c: Column, m: Long): Column =
     pmod(pmod(c * lit(1103515245L) + lit(12345L), lit(2000000011L)), lit(m))
 
-  private def splitBucket(reproducible: Boolean) = {
-    val h =
-      if (reproducible) Dedup.charPolyHash(col("text"), 31L, 2000000011L)
-      else pmod(xxhash64(col("text")), lit(2000000011L))
-    pmod(h, lit(splitMod))
-  }
+  /** Content-hash split bucket in [0, [[splitMod]]): the
+    * [[Dedup.charPolyHash]] of the text. */
+  private def splitBucket: Column =
+    pmod(Dedup.charPolyHash(col("text"), 31L, 2000000011L), lit(splitMod))
+
+  /** The 80/10/10 train/valid/test label of a split bucket. */
+  private def splitLabel(bucket: Column): Column =
+    when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
 
   /** Leakage-free train/valid/test assignment (80/10/10): the bucket is
     * a CONTENT hash, so identical documents — and with a fuzzy hash,
     * near-identical ones — can never straddle a split boundary the way
     * they can under doc_id-ranged or random splits. Pure map-side
     * column work. */
-  def splitAssign(docs: DataFrame, reproducible: Boolean = false): DataFrame =
-    docs.select(col("doc_id"), splitBucket(reproducible).as("bucket"))
-      .withColumn("split",
-        when(col("bucket") < 80, "train")
-          .when(col("bucket") < 90, "valid")
-          .otherwise("test"))
+  def splitAssign(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), splitBucket.as("bucket"))
+      .withColumn("split", splitLabel(col("bucket")))
 
   def splitQuery(spark: SparkSession, dir: String): DataFrame =
-    splitAssign(Tables.docs(spark, dir), reproducible = true)
+    splitAssign(Tables.docs(spark, dir))
 
   /** Cluster-safe split — the NEAR-dup upgrade of [[splitAssign]]'s
     * leakage guarantee: the content-keyed split keeps byte-identical
@@ -933,9 +931,7 @@ object TrainPrep extends graft.GateModule {
       .partitionBy(col("content_hash"))
     val surv = kept
       .select(col("doc_id"), sha2(col("text"), 256).as("content_hash"),
-        when(splitBucket(reproducible = true) < 80, "train")
-          .when(splitBucket(reproducible = true) < 90, "valid")
-          .otherwise("test").as("split"))
+        splitLabel(splitBucket).as("split"))
       .withColumn("min_id", min(col("doc_id")).over(wH))
       .filter(col("doc_id") === col("min_id"))
       .select(col("doc_id"), col("split"))
@@ -943,12 +939,12 @@ object TrainPrep extends graft.GateModule {
     // filter rides the shared exchange; the slice is 1/benchMod of the
     // corpus so its shingle+distinct stages are proportionally tiny)
     val benchStats = Dedup.shingleRows(
-        base.filter(col("doc_id") % Decontaminate.benchMod === 0),
+        Dedup.tokenRows(base.filter(col("doc_id") % Decontaminate.benchMod === 0)),
         Decontaminate.ngramN)
       .distinct()
       .groupBy("g")
       .agg(count(lit(1)).as("bcnt"), min("doc_id").as("bdoc"))
-    val contaminated = Dedup.shingleRows(kept, Decontaminate.ngramN)
+    val contaminated = Dedup.shingleRows(Dedup.tokenRows(kept), Decontaminate.ngramN)
       .distinct()
       .join(broadcast(benchStats), "g")
       .filter(col("bcnt") > 1 || col("bdoc") =!= col("doc_id"))

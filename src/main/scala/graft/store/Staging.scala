@@ -159,7 +159,7 @@ object Staging {
     * never stale). The hand-bumped params-version suffixes remain the
     * documented knob for SEMANTIC changes; this closes the silent
     * hole behind them — a code change to minhashCandidates /
-    * simhashCandidates / setSimPartsFull / embedNearDupLsh without a
+    * simhashCandidates / setSimParts / embedNearDupLsh without a
     * manual bump would otherwise keep serving pair tables built by
     * the old code, surfacing only as confusing downstream oracle
     * failures (r11 advice). Classfile bytes are stable within a

@@ -44,12 +44,12 @@ class DedupSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val sf = SparkTestSession.sf
     val docs = Tables.load(spark, sf, "documents")
+    val tr = graft.operators.Dedup.tokenRows(docs)
     val mh = graft.operators.Dedup
-      .minhashCandidates(docs, cap = Int.MaxValue, reproducible = true)
+      .minhashCandidates(tr, cap = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val sh = graft.operators.Dedup
-      .simhashCandidates(docs, cap = graft.operators.Dedup.simPairsGateCap,
-        reproducible = true)
+      .simhashCandidates(tr, cap = graft.operators.Dedup.simPairsGateCap)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val row = graft.operators.Dedup.methodAgreement(spark, sf)
       .collect().head
@@ -74,7 +74,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhash LSH finds exact and near duplicates as candidates") {
-    val cands = Dedup.minhashCandidates(docs)
+    val cands = Dedup.minhashCandidates(Dedup.tokenRows(docs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands.contains((0L, 1L)), "exact dup pair must be a candidate")
     assert(cands.contains((0L, 2L)) || cands.contains((1L, 2L)),
@@ -84,7 +84,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs equal; near-dups within small hamming distance") {
-    val sig = Dedup.simhashSigs(docs).collect()
+    val sig = Dedup.simhashSigs(Dedup.tokenRows(docs)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sig(0L) == sig(1L))
     val h02 = java.lang.Long.bitCount(sig(0L) ^ sig(2L))
@@ -121,18 +121,17 @@ class DedupSpec extends AnyFunSuite {
       (2L, "alpha beta gamma delta epsilon zeta eta theta"), // exact dup
       (3L, "totally different content words here now okay fine"))
       .toDF("doc_id", "text")
-    // identical docs must share ALL band buckets on both hash paths
-    for (repro <- Seq(true, false)) {
-      val bands = Dedup.minhashBands(docs, reproducible = repro)
-        .collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(r => (r.getInt(1), r.getLong(2))).toSet).toMap
-      assert(bands(1L) == bands(2L), s"repro=$repro")
-      assert((bands(1L) & bands(3L)).isEmpty, s"repro=$repro")
-      val sh = Dedup.simhashSigs(docs, reproducible = repro)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(sh(1L) == sh(2L), s"repro=$repro")
-      assert(sh(1L) != sh(3L), s"repro=$repro")
-    }
+    // identical docs must share ALL band buckets, unrelated ones none
+    val tr = Dedup.tokenRows(docs)
+    val bands = Dedup.minhashBands(tr)
+      .collect().groupBy(_.getLong(0))
+      .view.mapValues(_.map(r => (r.getInt(1), r.getLong(2))).toSet).toMap
+    assert(bands(1L) == bands(2L))
+    assert((bands(1L) & bands(3L)).isEmpty)
+    val sh = Dedup.simhashSigs(tr)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(sh(1L) == sh(2L))
+    assert(sh(1L) != sh(3L))
   }
 
   test("dup clustering propagates min id across multi-hop chains") {
@@ -186,7 +185,7 @@ class DedupSpec extends AnyFunSuite {
     // 40 identical docs land in the same buckets in every band
     val flood = spark.range(40)
       .select(col("id").as("doc_id"), lit(base).as("text"))
-    val pairs = graft.operators.Dedup.minhashCandidates(flood, cap = 10)
+    val pairs = Dedup.minhashCandidates(Dedup.tokenRows(flood), cap = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // star pattern: every doc pairs with doc 0 only -> 39 pairs,
     // not 40*39/2 = 780
@@ -196,7 +195,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("minhash signature plan has exactly one exchange (the doc_id agg)") {
     val plan = Dedup.minhashSigs(
-      Tables.load(spark, SparkTestSession.sf, "documents"))
+      Dedup.tokenRows(Tables.load(spark, SparkTestSession.sf, "documents")))
       .queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
     // shingle generation is shuffle-free (explode + element_at); the
@@ -206,18 +205,44 @@ class DedupSpec extends AnyFunSuite {
 
   test("simhash chunk banding surfaces near-dups; hot buckets star-cap") {
     import spark.implicits._
-    val docs = Seq((0L, base), (1L, base), (2L, near), (3L, other))
-      .toDF("doc_id", "text")
-    val pairs = Dedup.simhashCandidates(docs, cap = 100).collect()
+    // base, its exact dup, `near` and `other`, plus every single-token
+    // edit of base (`near` is the edit at token 60). One changed token
+    // moves a signature by a data-dependent distance, so the check is
+    // the sketch's contract against brute force over the signatures,
+    // not one planted pair's distance.
+    def edit(i: Int) = (1 to 64).map(j => if (j == i) "CHANGED" else s"tok$j")
+      .mkString(" ")
+    val corpus = Seq((0L, base), (1L, base), (2L, near), (3L, other)) ++
+      (1 to 64).map(i => (100L + i, edit(i)))
+    val tr = Dedup.tokenRows(corpus.toDF("doc_id", "text"))
+    // cap >= n: no bucket star-caps, so the candidates are exactly the
+    // pairs sharing a 12-bit chunk within simMaxDist
+    val pairs = Dedup.simhashCandidates(tr, cap = corpus.length).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val sig = Dedup.simhashSigs(tr).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def chunks(s: Long) = (0 until Dedup.simChunks).map(c => (s >>> (12 * c)) & 4095L)
+    val dist = (for {
+      a <- sig.keys; b <- sig.keys if a < b
+    } yield (a, b) -> java.lang.Long.bitCount(sig(a) ^ sig(b)).toLong).toMap
+    val want = dist.filter { case ((a, b), d) =>
+      d <= Dedup.simMaxDist &&
+        chunks(sig(a)).zip(chunks(sig(b))).exists { case (x, y) => x == y }
+    }
+    assert(pairs == want)
     assert(pairs((0L, 1L)) == 0L)          // identical: distance 0
-    assert(pairs.contains((0L, 2L)))       // near-dup within maxDist
+    // pigeonhole completeness: within simChunks - 1 bits, every pair
+    // shares a chunk — and some edits of base really sit that close
+    val close = dist.filter(_._2 <= Dedup.simChunks - 1).keySet
+    assert(close.subsetOf(pairs.keySet))
+    assert(close.exists { case (a, b) => a == 0L && b > 100L },
+      "no single-token edit within simChunks - 1 bits: check is vacuous")
     assert(!pairs.keySet.exists { case (a, b) => a == 3L || b == 3L })
     // duplicate flood: all 40 docs share every chunk; cap 10 -> star
     val flood = spark.range(40)
       .select(org.apache.spark.sql.functions.col("id").as("doc_id"),
         org.apache.spark.sql.functions.lit(base).as("text"))
-    val fp = Dedup.simhashCandidates(flood, cap = 10).collect()
+    val fp = Dedup.simhashCandidates(Dedup.tokenRows(flood), cap = 10).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(fp.length == 39 && fp.forall(_._1 == 0L), s"got ${fp.length}")
   }
@@ -278,7 +303,7 @@ class DedupSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.col("source"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val pairs = graft.operators.Dedup
-      .minhashCandidates(docs, cap = Int.MaxValue, reproducible = true)
+      .minhashCandidates(Dedup.tokenRows(docs), cap = Int.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val want = pairs
       .map { case (a, b) =>
@@ -322,7 +347,7 @@ class DedupSpec extends AnyFunSuite {
       (i.toLong, s"COMMON HOT TRIGRAM u${i}a u${i}b u${i}c u${i}d u${i}e " +
         s"u${i}f u${i}g u${i}h u${i}i u${i}j")
     }.toDF("doc_id", "text")
-    val cands = Dedup.minhashCandidates(hot)
+    val cands = Dedup.minhashCandidates(Dedup.tokenRows(hot))
     val nCands = cands.count()
     assert(nCands < 200, s"candidate pairs must stay near-linear, got $nCands")
     // verifier output is exactly candidate-bounded — no blowup inside

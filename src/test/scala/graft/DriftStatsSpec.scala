@@ -80,7 +80,8 @@ class DriftStatsSpec extends AnyFunSuite {
     // every distinct corpus gram has exactly one owner
     val totalOwned = rows.map(_.getLong(2)).sum
     val distinctGrams = graft.operators.Dedup
-      .shingleRows(Tables.load(spark, sf, "documents"))
+      .shingleRows(graft.operators.Dedup.tokenRows(
+        Tables.load(spark, sf, "documents")))
       .select("g").distinct().count()
     assert(totalOwned == distinctGrams)
   }

@@ -88,8 +88,8 @@ class LmPathSafetySpec extends AnyFunSuite {
     // every LSH candidate pair shares a fold (the leakage guarantee)
     val docs = Tables.load(spark, sf, "documents")
     val byDoc = split.map(s => s._1 -> s._3).toMap
-    val pairs = Dedup.minhashCandidates(docs, cap = Int.MaxValue,
-      reproducible = true).collect()
+    val pairs = Dedup.minhashCandidates(Dedup.tokenRows(docs),
+      cap = Int.MaxValue).collect()
     assert(pairs.nonEmpty)
     pairs.foreach(r =>
       assert(byDoc(r.getLong(0)) == byDoc(r.getLong(1))))

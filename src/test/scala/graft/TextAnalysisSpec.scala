@@ -252,7 +252,8 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(TextAnalysis.textRepetition(spark, SparkTestSession.sf).count() > 0)
     val rep = {
       import org.apache.spark.sql.functions._
-      graft.operators.Dedup.shingleRows(docs).groupBy("doc_id")
+      graft.operators.Dedup.shingleRows(graft.operators.Dedup.tokenRows(docs))
+        .groupBy("doc_id")
         .agg(count(lit(1)).as("n"), countDistinct(col("g")).as("d")).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     }

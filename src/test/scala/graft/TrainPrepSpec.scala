@@ -70,14 +70,10 @@ class TrainPrepSpec extends AnyFunSuite {
       (3L, "a completely different document body goes here now"),
       (4L, "a completely different document body goes here now")) // dup of 3
       .toDF("doc_id", "text")
-    // both the production (xxhash64) and reproducible (char-poly) hash
-    // must keep duplicate pairs split-consistent
-    for (repro <- Seq(false, true)) {
-      val m = TrainPrep.splitAssign(docs, reproducible = repro).collect()
-        .map(r => r.getLong(0) -> r.getString(2)).toMap
-      assert(m(1L) == m(2L), s"repro=$repro split leaked a duplicate")
-      assert(m(3L) == m(4L), s"repro=$repro split leaked a duplicate")
-    }
+    val m = TrainPrep.splitAssign(docs).collect()
+      .map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(m(1L) == m(2L), "split leaked a duplicate")
+    assert(m(3L) == m(4L), "split leaked a duplicate")
   }
 
   test("split fractions on the corpus are near 80/10/10") {

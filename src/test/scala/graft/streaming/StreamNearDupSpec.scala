@@ -21,7 +21,7 @@ class StreamNearDupSpec extends AnyFunSuite {
         .map { case (b, bk) => (d.doc_id, b, bk) })
       .toDF("doc_id", "band_id", "bucket")
     val batchForm = graft.operators.Dedup
-      .minhashBands(docs, reproducible = true)
+      .minhashBands(graft.operators.Dedup.tokenRows(docs))
       .select(col("doc_id"), col("band_id"), col("bucket"))
     assert(rowForm.exceptAll(batchForm).isEmpty &&
       batchForm.exceptAll(rowForm).isEmpty,
@@ -47,7 +47,7 @@ class StreamNearDupSpec extends AnyFunSuite {
         .map { case (b, bk) => (d.doc_id, b, bk) })
       .toDF("doc_id", "band_id", "bucket")
     val batchForm = graft.operators.Dedup
-      .minhashBands(docs, reproducible = true)
+      .minhashBands(graft.operators.Dedup.tokenRows(docs))
       .select(col("doc_id"), col("band_id"), col("bucket"))
     assert(rowForm.exceptAll(batchForm).isEmpty &&
       batchForm.exceptAll(rowForm).isEmpty,
@@ -60,7 +60,7 @@ class StreamNearDupSpec extends AnyFunSuite {
     val out = EventStream.streamNearDupMinhash(spark, sf).cache()
     val docs = graft.Tables.load(spark, sf, "documents")
     // batch recompute of the same condition
-    val bands = graft.operators.Dedup.minhashBands(docs, reproducible = true)
+    val bands = graft.operators.Dedup.minhashBands(graft.operators.Dedup.tokenRows(docs))
     val expect = bands.as("y")
       .join(bands.as("x"),
         col("x.band_id") === col("y.band_id") &&
@@ -94,7 +94,7 @@ class StreamNearDupSpec extends AnyFunSuite {
       val wl = org.apache.spark.sql.expressions.Window
         .partitionBy(col("band_id"), col("bucket")).orderBy(col("doc_id"))
       val expect = graft.operators.Dedup
-        .minhashBands(docs, reproducible = true)
+        .minhashBands(graft.operators.Dedup.tokenRows(docs))
         .withColumn("p", lag(col("doc_id"), 1).over(wl))
         .filter(col("p").isNotNull && col("doc_id") - col("p") <= w)
         .select(col("doc_id"), col("band_id")).distinct()
