@@ -22,10 +22,18 @@ import graft.functions.{CosineSimilarity, DotProduct}
   *
   * It also installs [[org.apache.spark.sql.BroadcastRelease]] on the
   * session's context, so a query's broadcast relations leave the block
-  * store when the query ends.
+  * store when the query ends, and names the NIO local filesystem
+  * ([[graft.store.NioLocalFs]]) for the context's `file:` paths, so local
+  * writes, renames and checkpoint commits start no `chmod`/`readlink`
+  * process. `apply` runs inside `getOrCreate`, after the context exists
+  * and before the session's shared state asks for the JVM's first
+  * `file:` FileSystem, which Hadoop then caches; the check-rule builder
+  * below runs only once a query is analyzed, too late for that.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.ActiveContext.get.foreach(sc =>
+      graft.store.NioLocalFs.install(sc.hadoopConfiguration))
     ext.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),

@@ -203,16 +203,21 @@ object Tables {
     val matched = paths.map { p =>
       val path = new org.apache.hadoop.fs.Path(p)
       val fs = path.getFileSystem(hc)
-      // listFiles of a file is the file itself
-      Option(fs.globStatus(path)).filter(_.nonEmpty).map(_.toSeq.flatMap { st =>
-        val it = fs.listFiles(st.getPath, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      })
+      Option(fs.globStatus(path)).filter(_.nonEmpty).map(_.toSeq.flatMap(leafFiles(fs, _)))
     }
     if (matched.exists(_.isEmpty)) None
     else Some(matched.flatMap(_.get).map(st =>
       (st.getPath.toString, st.getLen, st.getModificationTime)))
   }
+
+  /** The files under `st` (itself if a file), walked with `listStatus`:
+    * the `LocatedFileStatus` that `listFiles` builds loads each file's
+    * owner and permission, which a Hadoop without libhadoop reads by
+    * running `ls -ld`. */
+  private[graft] def leafFiles(fs: org.apache.hadoop.fs.FileSystem,
+      st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leafFiles(fs, _))
+    else Seq(st)
 
   /** Fanned documents load for single-pass expression-heavy pipelines
     * (tokenize / shingle / sketch hashing): [[fanout]] applied at the

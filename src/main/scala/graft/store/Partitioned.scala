@@ -79,12 +79,9 @@ object Partitioned extends graft.GateModule {
     * stops at the first one). */
   private def hasDataFile(fs: org.apache.hadoop.fs.FileSystem, path: String): Boolean = {
     val p = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
-    fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      Iterator.continually(it).takeWhile(_.hasNext)
-        .map(_.next().getPath.toString.stripPrefix(p.toString).split('/').filter(_.nonEmpty))
-        .exists(_.forall(n => !n.startsWith("_") && !n.startsWith(".")))
-    }
+    fs.exists(p) && Tables.leafFiles(fs, fs.getFileStatus(p))
+      .map(_.getPath.toString.stripPrefix(p.toString).split('/').filter(_.nonEmpty))
+      .exists(_.forall(n => !n.startsWith("_") && !n.startsWith(".")))
   }
 
   /** Gate query: per-type conversion volume through the partitioned

@@ -25,7 +25,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * reset (see [[store.Staging]]). It also notes which streaming
   * queries were still active after each gate: every gate must stop
   * the queries it started, also when it fails (see
-  * [[streaming.StreamRun]]).
+  * [[streaming.StreamRun]]). And it notes every process a gate started
+  * through Hadoop's `Shell`: local file I/O goes through
+  * [[store.NioLocalFs]], which starts none (Spark's own `rm -rf` of
+  * a deleted dir is not a Hadoop process).
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -65,5 +68,16 @@ class CacheHygieneSpec extends AnyFunSuite {
     }
     assert(left.isEmpty,
       s"${left.size} gates leave streaming queries running: " + left.mkString(", "))
+  }
+
+  test("no gate starts a Hadoop Shell process") {
+    val forking = SurfacePass.gates.toSeq.sortBy(_._1).collect {
+      case (name, g) if g.shellStarts.nonEmpty =>
+        val cmds = g.shellStarts.map(_.split(' ').head).groupBy(identity)
+          .map { case (c, n) => s"${n.size} $c" }.toSeq.sorted
+        s"$name ${g.shellStarts.size} (${cmds.mkString(", ")})"
+    }
+    assert(forking.isEmpty,
+      s"${forking.size} gates start Hadoop Shell processes: " + forking.mkString("; "))
   }
 }

@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions.{col, count, lit, struct, sum, xxhash64}
   * empty, then reset through [[SparkEntry.isolated]] so the next
   * gate's record is not polluted by this one. After the reset, note
   * the `graft_*`/`graft-*` entries of `java.io.tmpdir` the gate left
-  * behind and whether any streaming query is still active. */
+  * behind and whether any streaming query is still active. The gate,
+  * its materialization and its reset run under a [[ProcessStarts]]
+  * recording, which notes every process started through Hadoop's
+  * `Shell`. */
 object SurfacePass {
 
   /** @param rows the result's row count
@@ -24,10 +27,13 @@ object SurfacePass {
     * @param leftDirs `graft_*`/`graft-*` entries of `java.io.tmpdir`
     *   that exist after the reset but did not before the gate ran
     * @param streamsLeft names of the streaming queries still active
-    *   after the gate, whether it returned or threw */
+    *   after the gate, whether it returned or threw
+    * @param shellStarts the command of each process started through
+    *   Hadoop's `Shell` while the gate ran or was reset */
   final case class Gate(rows: Long, cacheEmpty: Boolean,
       error: Option[String], executed: Seq[PlanDump.Executed],
-      leftDirs: Seq[String] = Nil, streamsLeft: Seq[String] = Nil)
+      leftDirs: Seq[String] = Nil, streamsLeft: Seq[String] = Nil,
+      shellStarts: Seq[String] = Nil)
 
   private def scratchEntries(): Set[String] =
     Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
@@ -39,7 +45,7 @@ object SurfacePass {
     spark.catalog.clearCache()
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val before = scratchEntries()
-      val gate =
+      val (gate, starts) = ProcessStarts.during {
         try SparkEntry.isolated(spark) {
           val (rows, executed) = PlanDump.executed(spark) {
             val df = fn(spark, SparkTestSession.sf)
@@ -53,12 +59,14 @@ object SurfacePass {
             Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120)),
             Nil)
         }
+      }
       val streamsLeft = spark.streams.active.toSeq.map(q =>
         Option(q.name).getOrElse(q.id.toString))
       // a query left running would feed the next gate's record
       spark.streams.active.foreach(_.stop())
       name -> gate.copy(leftDirs = (scratchEntries() -- before).toSeq.sorted,
-        streamsLeft = streamsLeft)
+        streamsLeft = streamsLeft,
+        shellStarts = starts.filter(_.hadoopShell).map(_.command))
     }.toMap
   }
 }
